@@ -29,6 +29,12 @@ DATA is 100 TB but the admin ledger is kilobytes per batch run):
 - **Buffered log appends.** Log lines buffer in memory and flush as
   one file per batch run (or on explicit ``flush_logs()``); a file
   per log line would melt any filesystem at scale.
+- **Incremental keyed index for point lookups.** The runner's gates
+  read an in-memory index of the ledger tables, never a table scan.
+  Part files are immutable and uuid-named, so a lookup lists the table
+  directory and ingests only unseen files. A vanished file (compaction
+  or retention, by any process) forces a rebuild. The store's own
+  appends enter the index with no read-back.
 """
 
 from __future__ import annotations
@@ -39,28 +45,18 @@ import shutil
 import threading
 import time
 import uuid
-from typing import Any, Dict, List, Optional, Sequence, Tuple
+from typing import Any, Callable, Dict, List, Optional, Sequence, Set, Tuple
 
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    BooleanType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampType,
+    BooleanType, LongType, StringType, StructField, StructType, TimestampType,
 )
 
-from lime_etl_spark.domain.statuses import (
-    BatchStatus,
-    JobResult,
-    JobState,
-    JobStatus,
-    TestResult,
-)
+from lime_etl_spark.domain.statuses import BatchStatus, JobResult, JobState, JobStatus, TestResult
 from lime_etl_spark.domain.value_objects import ExecutionMillis, LogLevel, LogMessage, Result
 
 _BATCHES = StructType(
@@ -158,26 +154,97 @@ def _mint_seq() -> int:
         return cand
 
 
+def _naive(v: Any) -> Any:
+    """A tz-aware timestamp as local naive time, like every ledger ts."""
+    if isinstance(v, datetime.datetime) and v.tzinfo is not None:
+        return v.astimezone().replace(tzinfo=None)
+    return v
+
+
+def _rows(tbl: pa.Table) -> List[Dict[str, Any]]:
+    """Rows of a ledger table read from parquet, timestamps naive."""
+    rows = tbl.to_pylist()
+    for f in tbl.schema:
+        if pa.types.is_timestamp(f.type) and f.type.tz is not None:
+            for r in rows:
+                r[f.name] = _naive(r[f.name])
+    return rows
+
+
+_LEDGER = {"batches": _BATCHES, "jobs": _JOBS, "test_results": _TEST_RESULTS}
+
+
+class _LedgerIndex:
+    """Keyed state of the ledger tables, fed one part file at a time.
+    Every fold is order-independent (latest-wins on seq, max over ts,
+    union of test rows), so files may arrive in any order."""
+
+    def __init__(self) -> None:
+        self.files: Dict[str, Set[str]] = {t: set() for t in _LEDGER}
+        self.batches: Dict[str, Dict[str, Any]] = {}  # batch_id -> max-seq row
+        self.completed: Dict[str, Dict[str, int]] = {}  # name -> {batch_id: seq}, not running
+        self.jobs: Dict[str, Dict[str, Any]] = {}  # job_id -> max-seq row
+        self.jobs_of: Dict[str, Dict[str, None]] = {}  # batch_id -> job_ids (ordered set)
+        self.last_success: Dict[str, datetime.datetime] = {}  # job_name -> max succeeded ts
+        self.tests_of: Dict[str, List[TestResult]] = {}  # job_id -> its test results
+        self.latest_tests: Dict[str, Tuple[datetime.datetime, List[TestResult]]] = {}
+
+    def ingest(self, table: str, name: str, rows: List[Dict[str, Any]]) -> None:
+        self.files[table].add(name)
+        fold = {"batches": self._batch, "jobs": self._job, "test_results": self._test}[table]
+        for r in rows:
+            fold(r)
+
+    def _batch(self, r: Dict[str, Any]) -> None:
+        old = self.batches.get(r["batch_id"])
+        if old is None or r["seq"] > old["seq"]:
+            self.batches[r["batch_id"]] = r
+            if old is not None:
+                self.completed.get(old["name"], {}).pop(old["batch_id"], None)
+            if not r["running"]:
+                self.completed.setdefault(r["name"], {})[r["batch_id"]] = r["seq"]
+
+    def _job(self, r: Dict[str, Any]) -> None:
+        name = r["job_name"]
+        if r["state"] == "succeeded":
+            self.last_success[name] = max(r["ts"], self.last_success.get(name, r["ts"]))
+        old = self.jobs.get(r["job_id"])
+        if old is None or r["seq"] > old["seq"]:
+            self.jobs[r["job_id"]] = r
+            if old is not None:
+                del self.jobs_of[old["batch_id"]][old["job_id"]]
+            self.jobs_of.setdefault(r["batch_id"], {})[r["job_id"]] = None
+
+    def _test(self, r: Dict[str, Any]) -> None:
+        t = _test_result(r)
+        self.tests_of.setdefault(r["job_id"], []).append(t)
+        ts, tests = self.latest_tests.get(r["job_name"], (None, []))
+        if ts is None or r["ts"] > ts:
+            self.latest_tests[r["job_name"]] = (r["ts"], [t])
+        elif r["ts"] == ts:
+            tests.append(t)
+
+
 class SparkAdminStore:
     """All admin tables under one root directory.
 
-    Concurrency contract (r7 verdict #6): the reference got
-    transactionality from SQLAlchemy; this store gets the equivalent
-    BY CONSTRUCTION from its event-sourced layout — every append
-    writes a NEW uuid-named parquet part file (no rewrite → no torn
-    read, no filename collision) and every read resolves latest-wins
-    on `seq`, so concurrent appends from multiple PROCESSES sharing a
-    root merge safely (pytest: tests/test_admin_store.py::
-    test_concurrent_multiprocess_appends_merge_safely, a real 4-way
-    spawn-Pool race + post-race compaction). `seq` is pid-stamped
-    wall-clock ns (_mint_seq): concurrent writers can never tie, so
-    latest-wins is a TOTAL order — forced same-ns collisions are
-    pytest-pinned distinct. The remaining caveat: the REWRITE
-    maintenance paths (compact / delete_old_batches /
-    delete_old_logs) are still single-writer — run them from one
-    coordinator with no concurrent appenders, as BatchRunner does.
-    Concurrent batches normally still get separate roots via
-    run_batches_in_parallel.
+    Concurrency contract: the reference got transactionality from
+    SQLAlchemy; this store gets the equivalent BY CONSTRUCTION from
+    its event-sourced layout — every append writes a NEW uuid-named
+    parquet part file (no rewrite → no torn read, no filename
+    collision) and every read resolves latest-wins on `seq`, so
+    concurrent appends from multiple PROCESSES sharing a root merge
+    safely (tests/test_admin_store.py runs a 4-way spawn-Pool race).
+    `seq` is pid-stamped wall-clock ns (_mint_seq), so concurrent
+    writers never tie and latest-wins is a TOTAL order. Point lookups
+    read the keyed index (_index): each lookup ingests the table's
+    unseen part files and rebuilds when an ingested one is gone, so
+    appends and rewrites by other processes or store instances show at
+    the next lookup. One lock guards the index, the log buffer and log
+    entry ids, so job bodies on worker threads may share a store. The
+    REWRITE paths (compact / delete_old_batches / delete_old_logs)
+    are single-writer — run them from one coordinator with no
+    concurrent appenders, as BatchRunner does.
     """
 
     LOG_TABLES = ("batch_log", "job_log")
@@ -185,53 +252,71 @@ class SparkAdminStore:
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
+        self._lock = threading.RLock()
         self._log_buffer: Dict[str, List[dict]] = {t: [] for t in self.LOG_TABLES}
         self._entry_id = 0
+        self._idx = _LedgerIndex()
 
     # -- plumbing -----------------------------------------------------------
 
     def _path(self, table: str) -> str:
         return os.path.join(self.root, table)
 
-    @staticmethod
-    def _next_seq() -> int:
-        return _mint_seq()
-
-    def _append(self, table: str, rows: Sequence[dict], schema: StructType) -> None:
-        """One parquet file per append, hive-partitioned for log tables."""
+    def _append(self, table: str, rows: Sequence[dict]) -> None:
+        """One parquet file per append, hive-partitioned for log tables;
+        ledger appends also go straight into the index."""
         if not rows:
             return
         if table in self.LOG_TABLES:
             by_date: Dict[str, List[dict]] = {}
             for r in rows:
                 by_date.setdefault(r["log_date"], []).append(r)
+            schema = _pa_schema(_LOG, drop=("log_date",))
             for log_date, part in by_date.items():
                 path = os.path.join(self._path(table), f"log_date={log_date}")
-                self._write_file(path, part, _pa_schema(schema, drop=("log_date",)))
+                _write_file(path, pa.Table.from_pylist(part, schema=schema))
         else:
-            self._write_file(self._path(table), rows, _pa_schema(schema))
+            tbl = pa.Table.from_pylist(rows, schema=_pa_schema(_LEDGER[table]))
+            with self._lock:  # no lookup in this process reads a half-written file
+                self._idx.ingest(table, _write_file(self._path(table), tbl), _rows(tbl))
 
-    @staticmethod
-    def _write_file(dir_path: str, rows: Sequence[dict], schema: pa.Schema) -> None:
-        os.makedirs(dir_path, exist_ok=True)
-        cols = {f.name: [r.get(f.name) for r in rows] for f in schema}
-        tbl = pa.table(cols, schema=schema)
-        pq.write_table(tbl, os.path.join(dir_path, f"part-{uuid.uuid4().hex}.parquet"))
-
-    def _load(self, table: str, schema: StructType) -> List[Dict[str, Any]]:
-        """Driver-side read of a bookkeeping table (plus hive partitions)."""
+    def _log_partitions(self, table: str) -> List[str]:
         path = self._path(table)
-        if not os.path.exists(path):
-            return []
-        tbl = pq.read_table(path)
-        rows = tbl.to_pylist()
-        for f in schema.fields:
-            if isinstance(f.dataType, TimestampType):
-                for r in rows:
-                    v = r.get(f.name)
-                    if isinstance(v, datetime.datetime) and v.tzinfo is not None:
-                        r[f.name] = v.astimezone().replace(tzinfo=None)
-        return rows
+        entries = os.listdir(path) if os.path.isdir(path) else ()
+        return [os.path.join(path, e) for e in entries if e.startswith("log_date=")]
+
+    def _index(self, *tables: str) -> _LedgerIndex:
+        """The index, caught up with the part files of ``tables`` on
+        disk. Call with ``self._lock`` held."""
+        on_disk = {t: _part_files(self._path(t)) for t in tables}
+        if any(not self._idx.files[t] <= on_disk[t] for t in tables):  # rewritten since
+            self._idx = _LedgerIndex()
+        for t in tables:
+            for name in on_disk[t] - self._idx.files[t]:
+                tbl = pq.read_table(os.path.join(self._path(t), name))
+                self._idx.ingest(t, name, _rows(tbl))
+        return self._idx
+
+    def _rewrite(self, table: str, keep: Callable[[Dict[str, Any]], bool] = lambda r: True) -> int:
+        """Replace a ledger table's part files with one file of the rows
+        that pass ``keep``; returns how many were kept."""
+        path = self._path(table)
+        with self._lock:
+            rows = [r for r in _rows(pq.read_table(path)) if keep(r)]
+            shutil.rmtree(path)
+            self._idx = _LedgerIndex()
+            self._append(table, rows)
+        return len(rows)
+
+    def row_counts(self) -> Dict[str, int]:
+        """Rows per ledger table on disk, from the part-file footers."""
+        return {
+            table: sum(
+                pq.ParquetFile(os.path.join(self._path(table), f)).metadata.num_rows
+                for f in _part_files(self._path(table))
+            )
+            for table in _LEDGER
+        }
 
     def _read(self, table: str, schema: StructType) -> DataFrame:
         """Analytical surface: the same files as a Spark DataFrame."""
@@ -246,41 +331,25 @@ class SparkAdminStore:
 
     def save_batch(self, status: BatchStatus) -> None:
         """Insert or update: append a new version row (latest-wins read)."""
-        res = status.execution_success_or_failure
-        self._append(
-            "batches",
-            [
-                {
-                    "batch_id": status.id,
-                    "name": status.name,
-                    "running": status.running,
-                    "error_occurred": None if res is None else res.is_failure,
-                    "error_message": None if res is None else res.failure_message_or_none,
-                    "execution_millis": None
-                    if status.execution_millis is None
-                    else status.execution_millis.value,
-                    "ts": status.ts,
-                    "seq": self._next_seq(),
-                }
-            ],
-            _BATCHES,
-        )
-
-    @staticmethod
-    def _latest(rows: List[Dict[str, Any]], key: str) -> List[Dict[str, Any]]:
-        best: Dict[Any, Dict[str, Any]] = {}
-        for r in rows:
-            cur = best.get(r[key])
-            if cur is None or r["seq"] > cur["seq"]:
-                best[r[key]] = r
-        return list(best.values())
+        res, millis = status.execution_success_or_failure, status.execution_millis
+        row = {
+            "batch_id": status.id,
+            "name": status.name,
+            "running": status.running,
+            "error_occurred": None if res is None else res.is_failure,
+            "error_message": None if res is None else res.failure_message_or_none,
+            "execution_millis": None if millis is None else millis.value,
+            "ts": status.ts,
+            "seq": _mint_seq(),
+        }
+        self._append("batches", [row])
 
     def get_batch(self, batch_id: str) -> Optional[BatchStatus]:
-        rows = [r for r in self._latest(self._load("batches", _BATCHES), "batch_id") if r["batch_id"] == batch_id]
-        if not rows:
-            return None
-        b = rows[0]
-        job_results = frozenset(self.get_job_results(batch_id))
+        with self._lock:
+            b = self._index("batches").batches.get(batch_id)
+            if b is None:
+                return None
+            job_results = frozenset(self.get_job_results(batch_id))
         if b["running"]:
             result, millis = None, None
         else:
@@ -307,14 +376,10 @@ class SparkAdminStore:
 
         Reference: sqlalchemy_batch_repository.get_most_recent — the
         previous-run lookup batch_delta.py compares against."""
-        rows = [
-            r
-            for r in self._latest(self._load("batches", _BATCHES), "batch_id")
-            if r["name"] == name and not r["running"] and r["batch_id"] != exclude_id
-        ]
-        if not rows:
-            return None
-        return self.get_batch(max(rows, key=lambda r: r["seq"])["batch_id"])
+        with self._lock:
+            completed = self._index("batches").completed.get(name, {})
+            prev = [(seq, bid) for bid, seq in completed.items() if bid != exclude_id]
+            return self.get_batch(max(prev)[1]) if prev else None
 
     _VERSION_KEYS = {"batches": "batch_id", "jobs": "job_id"}
 
@@ -322,112 +387,65 @@ class SparkAdminStore:
         """Time travel over the event-sourced ledger: the latest-wins
         state of ``batches``/``jobs`` as it stood at ``ts`` — every
         version row with ts ≤ the snapshot time, reduced to the newest
-        (max seq) per entity. Because the ledger is append-only, old
-        states are never destroyed, so "what did the scheduler believe
-        at 03:00 when the page fired?" is a filter, not a restore —
-        the operational debugging read the reference's UPDATE-in-place
-        admin schema cannot answer.
-
-        Returned as a Spark DataFrame (the analytical surface): the
-        filter and the per-entity window both push into the scan.
+        (max seq) per entity. The ledger is append-only, so "what did
+        the scheduler believe at 03:00?" is a filter, not a restore.
+        Returned as a Spark DataFrame: the filter and the window both
+        push into the scan.
         """
         if table not in self._VERSION_KEYS:
             raise ValueError(f"snapshot_as_of supports {tuple(self._VERSION_KEYS)}, got {table!r}")
-        key = self._VERSION_KEYS[table]
-        schema = _BATCHES if table == "batches" else _JOBS
-        from pyspark.sql import Window as _W
-        from pyspark.sql import functions as _F
-
-        df = self._read(table, schema).where(_F.col("ts") <= _F.lit(ts))
-        w = _W.partitionBy(key).orderBy(_F.desc("seq"))
-        return (
-            df.withColumn("__rn", _F.row_number().over(w))
-            .where(_F.col("__rn") == 1)
-            .drop("__rn")
-        )
+        df = self._read(table, _LEDGER[table]).where(F.col("ts") <= F.lit(ts))
+        return _latest_versions(df, self._VERSION_KEYS[table])
 
     def compact(self) -> Dict[str, Tuple[int, int]]:
         """Rewrite each ledger table's many per-append part files into
-        one file per table (one per log_date partition for logs).
-
-        The append-only design trades write latency for file count;
-        after ~10⁴ state transitions the parquet-footer overhead of
-        thousands of tiny files dominates every read. Compaction
-        restores O(1) files while preserving rows byte-for-byte (seq
-        ordering carries the event-sourced history, not file order).
+        one file per table (one per log_date partition for logs), rows
+        unchanged (seq, not file order, carries the history). Spark
+        reads, directory listings and index rebuilds all pay per file.
         Returns {table: (files_before, files_after)}.
         """
         self.flush_logs()
         stats: Dict[str, Tuple[int, int]] = {}
-        for table, schema in (
-            ("batches", _BATCHES),
-            ("jobs", _JOBS),
-            ("test_results", _TEST_RESULTS),
-        ):
-            path = self._path(table)
-            if not os.path.exists(path):
-                continue
-            before = len([f for f in os.listdir(path) if f.endswith(".parquet")])
-            rows = self._load(table, schema)
-            shutil.rmtree(path)
-            self._append(table, rows, schema)
-            stats[table] = (before, 1 if rows else 0)
+        for table in _LEDGER:
+            if os.path.exists(self._path(table)):
+                before = len(_part_files(self._path(table)))
+                stats[table] = (before, 1 if self._rewrite(table) else 0)
         for table in self.LOG_TABLES:
-            path = self._path(table)
-            if not os.path.exists(path):
+            if not os.path.exists(self._path(table)):
                 continue
-            before = after = 0
-            for entry in os.listdir(path):
-                if not entry.startswith("log_date="):
-                    continue
-                part_dir = os.path.join(path, entry)
-                files = [f for f in os.listdir(part_dir) if f.endswith(".parquet")]
-                before += len(files)
-                if len(files) > 1:
+            parts = self._log_partitions(table)
+            before = 0
+            for part_dir in parts:
+                n = len(_part_files(part_dir))
+                before += n
+                if n > 1:
                     tbl = pq.read_table(part_dir)
                     shutil.rmtree(part_dir)
-                    os.makedirs(part_dir)
-                    pq.write_table(
-                        tbl, os.path.join(part_dir, f"part-{uuid.uuid4().hex}.parquet")
-                    )
-                after += 1
-            stats[table] = (before, after)
+                    _write_file(part_dir, tbl)
+            stats[table] = (before, len(parts))
         return stats
 
     def delete_old_batches(self, days_to_keep: int) -> None:
         """Rewrite retained batch/job state (small tables by design)."""
         cutoff = _cutoff(days_to_keep)
-        for table, schema in (
-            ("batches", _BATCHES),
-            ("jobs", _JOBS),
-            ("test_results", _TEST_RESULTS),
-        ):
-            path = self._path(table)
-            if not os.path.exists(path):
-                continue
-            kept = [r for r in self._load(table, schema) if r["ts"] >= cutoff]
-            shutil.rmtree(path)
-            self._append(table, kept, schema)
+        for table in _LEDGER:
+            if os.path.exists(self._path(table)):
+                self._rewrite(table, lambda r: r["ts"] >= cutoff)
 
     # -- jobs ----------------------------------------------------------------
 
     def save_job_result(self, result: JobResult) -> None:
-        self._append(
-            "jobs",
-            [
-                {
-                    "job_id": result.id,
-                    "batch_id": result.batch_id,
-                    "job_name": result.job_name,
-                    "state": str(result.status.state),
-                    "reason": result.status.reason,
-                    "execution_millis": result.execution_millis.value,
-                    "ts": result.ts,
-                    "seq": self._next_seq(),
-                }
-            ],
-            _JOBS,
-        )
+        row = {
+            "job_id": result.id,
+            "batch_id": result.batch_id,
+            "job_name": result.job_name,
+            "state": str(result.status.state),
+            "reason": result.status.reason,
+            "execution_millis": result.execution_millis.value,
+            "ts": result.ts,
+            "seq": _mint_seq(),
+        }
+        self._append("jobs", [row])
         if result.test_results:
             self._append(
                 "test_results",
@@ -444,58 +462,42 @@ class SparkAdminStore:
                     }
                     for t in result.test_results
                 ],
-                _TEST_RESULTS,
             )
 
     def get_job_results(self, batch_id: str) -> List[JobResult]:
-        rows = [
-            r
-            for r in self._latest(self._load("jobs", _JOBS), "job_id")
-            if r["batch_id"] == batch_id
-        ]
-        tests = self.get_test_results({r["job_id"] for r in rows})
-        return [
-            JobResult(
-                id=r["job_id"],
-                batch_id=r["batch_id"],
-                job_name=r["job_name"],
-                status=JobStatus(JobState(r["state"]), r["reason"]),
-                execution_millis=ExecutionMillis(r["execution_millis"] or 0),
-                test_results=frozenset(t for t in tests if t.job_id == r["job_id"]),
-                ts=r["ts"],
-            )
-            for r in rows
-        ]
+        with self._lock:
+            idx = self._index("jobs", "test_results")
+            rows = [idx.jobs[j] for j in idx.jobs_of.get(batch_id, ())]
+            return [
+                JobResult(
+                    id=r["job_id"],
+                    batch_id=r["batch_id"],
+                    job_name=r["job_name"],
+                    status=JobStatus(JobState(r["state"]), r["reason"]),
+                    execution_millis=ExecutionMillis(r["execution_millis"] or 0),
+                    test_results=frozenset(idx.tests_of.get(r["job_id"], ())),
+                    ts=r["ts"],
+                )
+                for r in rows
+            ]
 
     def get_test_results(self, job_ids: set) -> List[TestResult]:
-        if not job_ids:
-            return []
-        return [
-            _test_result(r)
-            for r in self._load("test_results", _TEST_RESULTS)
-            if r["job_id"] in job_ids
-        ]
+        with self._lock:
+            tests_of = self._index("test_results").tests_of
+            return [t for j in job_ids for t in tests_of.get(j, ())]
 
     def get_last_successful_ts(self, job_name: str) -> Optional[datetime.datetime]:
         """Reference: sqlalchemy_job_repository.get_last_successful_ts."""
-        ts = [
-            r["ts"]
-            for r in self._load("jobs", _JOBS)
-            if r["job_name"] == job_name and r["state"] == "succeeded"
-        ]
-        return max(ts) if ts else None
+        with self._lock:
+            return self._index("jobs").last_success.get(job_name)
 
     def latest_test_results(self, job_name: str) -> List[TestResult]:
         """Test results belonging to the job's most recent tested run.
 
         Reference: sqlalchemy_job_repository.latest_test_results."""
-        rows = [
-            r for r in self._load("test_results", _TEST_RESULTS) if r["job_name"] == job_name
-        ]
-        if not rows:
-            return []
-        latest = max(r["ts"] for r in rows)
-        return [_test_result(r) for r in rows if r["ts"] == latest]
+        with self._lock:
+            latest = self._index("test_results").latest_tests.get(job_name)
+            return [] if latest is None else list(latest[1])
 
     # -- logs -----------------------------------------------------------------
 
@@ -509,24 +511,25 @@ class SparkAdminStore:
         ts: Optional[datetime.datetime] = None,
     ) -> None:
         ts = ts or datetime.datetime.now()
-        self._entry_id += 1
-        self._log_buffer[table].append(
-            {
-                "entry_id": self._entry_id,
-                "batch_id": batch_id,
-                "job_name": job_name,
-                "level": str(level),
-                "message": LogMessage(message).value,
-                "ts": ts,
-                "log_date": ts.strftime("%Y-%m-%d"),
-            }
-        )
+        row = {
+            "batch_id": batch_id,
+            "job_name": job_name,
+            "level": str(level),
+            "message": LogMessage(message).value,
+            "ts": ts,
+            "log_date": ts.strftime("%Y-%m-%d"),
+        }
+        with self._lock:
+            self._entry_id += 1
+            row["entry_id"] = self._entry_id
+            self._log_buffer[table].append(row)
 
     def flush_logs(self) -> None:
-        for table in self.LOG_TABLES:
-            buf, self._log_buffer[table] = self._log_buffer[table], []
-            if buf:
-                self._append(table, buf, _LOG)
+        with self._lock:
+            for table in self.LOG_TABLES:
+                buf, self._log_buffer[table] = self._log_buffer[table], []
+                if buf:
+                    self._append(table, buf)
 
     def read_log(self, table: str) -> DataFrame:
         return self._read(table, _LOG)
@@ -537,17 +540,29 @@ class SparkAdminStore:
         self.flush_logs()
         cutoff_date = _cutoff(days_to_keep).strftime("%Y-%m-%d")
         for table in self.LOG_TABLES:
-            path = self._path(table)
-            if not os.path.exists(path):
-                continue
-            for entry in os.listdir(path):
-                if entry.startswith("log_date=") and entry.split("=", 1)[1] < cutoff_date:
-                    shutil.rmtree(os.path.join(path, entry))
+            for part_dir in self._log_partitions(table):
+                if part_dir.rsplit("=", 1)[1] < cutoff_date:
+                    shutil.rmtree(part_dir)
 
     def earliest_log_ts(self, table: str = "batch_log") -> Optional[datetime.datetime]:
         self.flush_logs()
-        rows = self._load(table, _LOG)
-        return min((r["ts"] for r in rows), default=None)
+        path = self._path(table)
+        if not os.path.exists(path) or not os.listdir(path):
+            return None
+        return _naive(pc.min(pq.read_table(path, columns=["ts"])["ts"]).as_py())
+
+
+def _part_files(dir_path: str) -> Set[str]:
+    names = os.listdir(dir_path) if os.path.isdir(dir_path) else ()
+    return {f for f in names if f.endswith(".parquet")}
+
+
+def _write_file(dir_path: str, tbl: pa.Table) -> str:
+    """Write ``tbl`` as a new uuid-named part file; returns its name."""
+    os.makedirs(dir_path, exist_ok=True)
+    name = f"part-{uuid.uuid4().hex}.parquet"
+    pq.write_table(tbl, os.path.join(dir_path, name))
+    return name
 
 
 def _test_result(r: Dict[str, Any]) -> TestResult:
@@ -563,6 +578,12 @@ def _test_result(r: Dict[str, Any]) -> TestResult:
     )
 
 
+def _latest_versions(df: DataFrame, key: str) -> DataFrame:
+    """The max-seq row per ``key``, as a window in Spark."""
+    w = Window.partitionBy(key).orderBy(F.desc("seq"))
+    return df.withColumn("__rn", F.row_number().over(w)).where(F.col("__rn") == 1).drop("__rn")
+
+
 def _cutoff(days_to_keep: int) -> datetime.datetime:
     now = datetime.datetime.now()
     return datetime.datetime.combine(
@@ -570,40 +591,14 @@ def _cutoff(days_to_keep: int) -> datetime.datetime:
     )
 
 
-class BatchLogger:
-    """Reference SqlAlchemyBatchLogger: writes to batch_log."""
+class _StoreLogger:
+    """Log lines into one of the store's log tables."""
 
-    def __init__(self, store: SparkAdminStore, batch_id: str, to_console: bool = False):
-        self.store = store
-        self.batch_id = batch_id
-        self.to_console = to_console
-
-    def _log(self, level: LogLevel, message: str) -> None:
-        if self.to_console:
-            print(f"{datetime.datetime.now().isoformat()} [{level}] {message}")
-        self.store.log("batch_log", level, message, self.batch_id)
-
-    def debug(self, message: str) -> None:
-        self._log(LogLevel.DEBUG, message)
-
-    def info(self, message: str) -> None:
-        self._log(LogLevel.INFO, message)
-
-    def error(self, message: str) -> None:
-        self._log(LogLevel.ERROR, message)
-
-    def exception(self, e: BaseException) -> None:
-        self._log(LogLevel.ERROR, repr(e))
-
-    def create_job_logger(self, job_name: str) -> "JobLogger":
-        return JobLogger(self.store, self.batch_id, job_name, self.to_console)
-
-
-class JobLogger:
-    """Reference SqlAlchemyJobLogger: writes to job_log."""
+    table = ""
 
     def __init__(
-        self, store: SparkAdminStore, batch_id: str, job_name: str, to_console: bool = False
+        self, store: SparkAdminStore, batch_id: str, job_name: Optional[str] = None,
+        to_console: bool = False,
     ):
         self.store = store
         self.batch_id = batch_id
@@ -612,8 +607,9 @@ class JobLogger:
 
     def _log(self, level: LogLevel, message: str) -> None:
         if self.to_console:
-            print(f"{datetime.datetime.now().isoformat()} [{level}] [{self.job_name}] {message}")
-        self.store.log("job_log", level, message, self.batch_id, self.job_name)
+            tag = f" [{self.job_name}]" if self.job_name else ""
+            print(f"{datetime.datetime.now().isoformat()} [{level}]{tag} {message}")
+        self.store.log(self.table, level, message, self.batch_id, self.job_name)
 
     def debug(self, message: str) -> None:
         self._log(LogLevel.DEBUG, message)
@@ -628,28 +624,34 @@ class JobLogger:
         self._log(LogLevel.ERROR, repr(e))
 
 
+class BatchLogger(_StoreLogger):
+    """Reference SqlAlchemyBatchLogger: writes to batch_log."""
+
+    table = "batch_log"
+
+    def __init__(self, store: SparkAdminStore, batch_id: str, to_console: bool = False):
+        super().__init__(store, batch_id, None, to_console)
+
+    def create_job_logger(self, job_name: str) -> "JobLogger":
+        return JobLogger(self.store, self.batch_id, job_name, self.to_console)
+
+
+class JobLogger(_StoreLogger):
+    """Reference SqlAlchemyJobLogger: writes to job_log."""
+
+    table = "job_log"
+
+
 def job_health_stats(store: "SparkAdminStore") -> "DataFrame":
     """Operational analytics over the jobs ledger: per job name, run /
     failure counts, failure rate, and p50/p95 duration of successful
-    runs.
-
-    The ledger is event-sourced (every state transition is a row);
-    latest-wins per job_id is a window over seq — computed IN Spark so
-    the analysis scales with the ledger, unlike the driver-side
-    `_latest` used for point lookups. This is the dashboard query the
-    reference's admin schema exists to serve (adapter/admin_orm.py's
-    batches/jobs tables); here it is one DataFrame away.
+    runs. Latest-wins per job_id is a window over seq computed IN
+    Spark, so the analysis scales with the ledger (point lookups use
+    the store's in-memory index instead). This is the dashboard query
+    the reference's admin schema (adapter/admin_orm.py) exists to serve.
     """
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
-    jobs = store._read("jobs", _JOBS)
-    w = Window.partitionBy("job_id").orderBy(F.desc("seq"))
-    latest = (
-        jobs.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") == 1)
-        .where(F.col("state") != "running")
-    )
+    latest = _latest_versions(store._read("jobs", _JOBS), "job_id")
+    latest = latest.where(F.col("state") != "running")
     ok_ms = F.when(F.col("state") == "succeeded", F.col("execution_millis"))
     return (
         latest.groupBy("job_name")
@@ -660,9 +662,6 @@ def job_health_stats(store: "SparkAdminStore") -> "DataFrame":
             F.percentile(ok_ms, 0.5).alias("p50_millis"),
             F.percentile(ok_ms, 0.95).alias("p95_millis"),
         )
-        .withColumn(
-            "failure_rate",
-            F.col("n_failed").cast("double") / F.col("n_runs"),
-        )
+        .withColumn("failure_rate", F.col("n_failed").cast("double") / F.col("n_runs"))
         .orderBy("job_name")
     )

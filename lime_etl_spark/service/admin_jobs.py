@@ -91,22 +91,10 @@ class CompactAdminLedger(SparkJobSpec):
     def min_seconds_between_refreshes(self) -> int:
         return self._min_seconds_between_runs
 
-    def _row_counts(self) -> dict:
-        from lime_etl_spark.adapter.admin_store import _BATCHES, _JOBS, _TEST_RESULTS
-
-        return {
-            table: len(self._store._load(table, schema))
-            for table, schema in (
-                ("batches", _BATCHES),
-                ("jobs", _JOBS),
-                ("test_results", _TEST_RESULTS),
-            )
-        }
-
     def run(self, ctx: JobContext) -> Optional[JobStatus]:
-        self._counts_before = self._row_counts()
+        self._counts_before = self._store.row_counts()
         stats = self._store.compact()
-        self._counts_after = self._row_counts()
+        self._counts_after = self._store.row_counts()
         for table, (before, after) in sorted(stats.items()):
             ctx.logger.info(f"Compacted [{table}]: {before} files -> {after}.")
         return JobStatus.success()

@@ -359,3 +359,329 @@ def test_concurrent_multiprocess_appends_merge_safely(spark, tmp_path):
         assert store.get_batch(f"batch-w{w}").execution_millis.value == w * 1000 + (n_versions - 1)
         assert len(store.get_job_results(f"batch-w{w}")) == n_versions
     assert store.get_batch("batch-contested").execution_millis.value == winning_rows[0]["execution_millis"]
+
+
+# --- the keyed ledger index ----------------------------------------------------
+
+
+def _ledger_keys(root):
+    """Every batch id, batch name, job id and job name on disk, plus one
+    of each that was never written."""
+    import os
+
+    import pyarrow.parquet as pq_mod
+
+    def col(table, name):
+        path = os.path.join(root, table)
+        if not os.path.isdir(path):
+            return set()
+        return set(pq_mod.read_table(path, columns=[name]).column(name).to_pylist())
+
+    return {
+        "batch_ids": col("batches", "batch_id") | col("jobs", "batch_id") | {"never-batch"},
+        "names": col("batches", "name") | {"never-name"},
+        "job_ids": col("jobs", "job_id") | col("test_results", "job_id") | {"never-job"},
+        "job_names": col("jobs", "job_name") | col("test_results", "job_name") | {"never-job-name"},
+    }
+
+
+def _getters(store, keys):
+    """Every point-lookup getter over every key, in an order-free form."""
+    from collections import Counter
+
+    out = {}
+    for bid in sorted(keys["batch_ids"]):
+        out[("get_batch", bid)] = store.get_batch(bid)
+        out[("get_job_results", bid)] = frozenset(store.get_job_results(bid))
+    for name in sorted(keys["names"]):
+        out[("get_previous_batch", name)] = store.get_previous_batch(name)
+        for bid in sorted(keys["batch_ids"]):
+            out[("get_previous_batch", name, bid)] = store.get_previous_batch(name, exclude_id=bid)
+    for jid in sorted(keys["job_ids"]):
+        out[("get_test_results", jid)] = Counter(store.get_test_results({jid}))
+    out[("get_test_results", "all")] = Counter(store.get_test_results(set(keys["job_ids"])))
+    for name in sorted(keys["job_names"]):
+        out[("get_last_successful_ts", name)] = store.get_last_successful_ts(name)
+        out[("latest_test_results", name)] = Counter(store.latest_test_results(name))
+    return out
+
+
+def _assert_index_matches_fresh(warm):
+    """Every getter on a warm store equals the same getter on a store
+    that has never read the root."""
+    keys = _ledger_keys(warm.root)
+    want = _getters(SparkAdminStore(None, warm.root), keys)
+    got = _getters(warm, keys)
+    assert got.keys() == want.keys()
+    bad = [k for k in want if got[k] != want[k]]
+    assert not bad, f"warm index differs from a fresh read on {bad[:5]}"
+
+
+def _fill_ledger(store, t0, tag, n_batches=3):
+    """Batches with running -> final transitions, job versions, retries,
+    and test results that share a ts within a run."""
+    for b in range(n_batches):
+        bid = f"{tag}-b{b}"
+        ts = t0 + datetime.timedelta(minutes=b)
+        store.save_batch(BatchStatus(
+            id=bid, name=f"{tag}-nightly", job_results=frozenset(),
+            execution_success_or_failure=None, execution_millis=None, running=True, ts=ts))
+        for j in range(3):
+            jid = f"{bid}-j{j}"
+            job_name = f"{tag}-job{j}"
+            store.save_job_result(JobResult(
+                id=jid, batch_id=bid, job_name=job_name, status=JobStatus.running(),
+                execution_millis=ExecutionMillis(0), ts=ts))
+            status = JobStatus.failed("boom") if (b + j) % 3 == 0 else JobStatus.success()
+            tests = frozenset(
+                TestResult(id=f"{jid}-t{k}", job_id=jid, test_name=f"check {k}",
+                           outcome=Result.success() if k else Result.failure("bad"),
+                           execution_millis=ExecutionMillis(k), ts=ts)
+                for k in range(2)
+            )
+            store.save_job_result(JobResult(
+                id=jid, batch_id=bid, job_name=job_name, status=status,
+                execution_millis=ExecutionMillis(10 + j), test_results=tests, ts=ts))
+        if b < n_batches - 1:  # the newest batch of each tag stays running
+            store.save_batch(BatchStatus(
+                id=bid, name=f"{tag}-nightly", job_results=frozenset(),
+                execution_success_or_failure=Result.success(),
+                execution_millis=ExecutionMillis(b), running=False, ts=ts))
+
+
+def test_index_matches_fresh_store_after_own_appends(tmp_path):
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq_mod
+
+    from lime_etl_spark.adapter.admin_store import _JOBS, _pa_schema
+
+    store = SparkAdminStore(None, str(tmp_path / "admin"))
+    t0 = datetime.datetime(2026, 3, 1, 9, 0)
+    _assert_index_matches_fresh(store)  # empty ledger, warmed
+    _fill_ledger(store, t0, "a")
+    _assert_index_matches_fresh(store)
+    _fill_ledger(store, t0 + datetime.timedelta(hours=1), "b")
+    # a tz-aware ts on the way in...
+    aware = datetime.datetime(2026, 3, 2, 12, 0, tzinfo=datetime.timezone(datetime.timedelta(hours=2)))
+    store.save_batch(BatchStatus(
+        id="aware", name="a-nightly", job_results=frozenset(),
+        execution_success_or_failure=Result.success(), execution_millis=ExecutionMillis(1),
+        running=False, ts=aware))
+    # ...and a part file whose ts column itself is tz-typed, as another
+    # writer (e.g. Spark) may leave it
+    schema = _pa_schema(_JOBS).set(6, pa.field("ts", pa.timestamp("us", tz="UTC")))
+    utc = datetime.datetime(2026, 3, 3, 8, 0, tzinfo=datetime.timezone.utc)
+    row = {"job_id": "foreign-j", "batch_id": "aware", "job_name": "a-job1",
+           "state": "succeeded", "reason": None, "execution_millis": 5, "ts": utc, "seq": 1}
+    pq_mod.write_table(pa.Table.from_pylist([row], schema=schema),
+                       os.path.join(store.root, "jobs", "part-foreign.parquet"))
+    _assert_index_matches_fresh(store)
+    assert store.get_last_successful_ts("a-job1") == utc.astimezone().replace(tzinfo=None)
+    assert store.get_previous_batch("a-nightly").id == "aware"
+    assert store.get_previous_batch("a-nightly", exclude_id="aware").id == "a-b1"
+
+
+def test_index_matches_fresh_store_after_multiprocess_race(tmp_path):
+    import multiprocessing as mp
+
+    root = str(tmp_path / "admin_mp")
+    warm = SparkAdminStore(None, root)
+    _fill_ledger(warm, datetime.datetime(2024, 3, 1, 11, 0), "pre")
+    _assert_index_matches_fresh(warm)
+    ctx = mp.get_context("spawn")
+    with ctx.Pool(4) as pool:
+        assert sorted(pool.map(_mp_worker, [(root, w, 6) for w in range(4)])) == [0, 1, 2, 3]
+    _assert_index_matches_fresh(warm)
+    assert warm.get_batch("batch-w3").execution_millis.value == 3000 + 5
+    assert len(warm.get_job_results("batch-w2")) == 6
+
+
+@pytest.mark.parametrize("rewrite", ["compact", "delete_old_batches"])
+@pytest.mark.parametrize("by", ["self", "other"])
+def test_index_matches_fresh_store_after_rewrites(tmp_path, rewrite, by):
+    root = str(tmp_path / "admin")
+    warm = SparkAdminStore(None, root)
+    now = datetime.datetime.now()
+    _fill_ledger(warm, now - datetime.timedelta(days=30), "old")
+    _fill_ledger(warm, now - datetime.timedelta(hours=1), "new")
+    _assert_index_matches_fresh(warm)
+    rewriter = warm if by == "self" else SparkAdminStore(None, root)
+    if rewrite == "compact":
+        rewriter.compact()
+    else:
+        rewriter.delete_old_batches(days_to_keep=3)
+    _assert_index_matches_fresh(warm)
+    if rewrite == "delete_old_batches":
+        assert warm.get_batch("old-b0") is None and warm.get_last_successful_ts("old-job1") is None
+        assert warm.get_batch("new-b0") is not None
+    # appends after the rewrite land on top of the rewritten index
+    _fill_ledger(warm, now, "after", n_batches=2)
+    _assert_index_matches_fresh(warm)
+
+
+def test_lookups_read_only_unseen_part_files(tmp_path, monkeypatch):
+    """Read-count guard: a warm store reads no file for repeated lookups
+    or its own appends, exactly the new file after a foreign append, and
+    the rewritten files once after a foreign compaction."""
+    import os
+
+    import pyarrow.parquet as pq_mod
+
+    root = str(tmp_path / "admin")
+    warm = SparkAdminStore(None, root)
+    other = SparkAdminStore(None, root)
+    t0 = datetime.datetime(2026, 4, 1, 9, 0)
+    _fill_ledger(other, t0, "x")
+
+    reads = []
+    real_read_table, real_parquet_file = pq_mod.read_table, pq_mod.ParquetFile
+
+    def read_table(source, *args, **kwargs):
+        reads.append(source)
+        return real_read_table(source, *args, **kwargs)
+
+    def parquet_file(source, *args, **kwargs):
+        reads.append(source)
+        return real_parquet_file(source, *args, **kwargs)
+
+    monkeypatch.setattr(pq_mod, "read_table", read_table)
+    monkeypatch.setattr(pq_mod, "ParquetFile", parquet_file)
+
+    def lookups():
+        warm.get_batch("x-b0")
+        warm.get_previous_batch("x-nightly")
+        warm.get_last_successful_ts("x-job1")
+        warm.latest_test_results("x-job2")
+        warm.get_test_results({"x-b0-j0"})
+
+    def files_on_disk():
+        return sum(
+            len(os.listdir(os.path.join(root, t))) for t in ("batches", "jobs", "test_results")
+        )
+
+    lookups()
+    assert len(reads) == files_on_disk()  # cold: every part file once
+    reads.clear()
+    for _ in range(3):
+        lookups()
+    assert reads == []
+
+    _fill_ledger(warm, t0, "own", n_batches=1)
+    lookups()
+    assert warm.get_batch("own-b0") is not None
+    assert reads == []
+
+    other.save_batch(BatchStatus(
+        id="x-b9", name="x-nightly", job_results=frozenset(),
+        execution_success_or_failure=Result.success(), execution_millis=ExecutionMillis(9),
+        running=False, ts=t0))
+    lookups()
+    assert len(reads) == 1 and warm.get_previous_batch("x-nightly").id == "x-b9"
+    reads.clear()
+
+    other.compact()
+    reads.clear()
+    assert files_on_disk() == 3
+    lookups()
+    assert len(reads) == 3  # one rebuild: each table's single compacted file
+    reads.clear()
+    lookups()
+    assert reads == []
+    _assert_index_matches_fresh(warm)
+
+
+def test_row_counts_are_disk_rows(tmp_path):
+    import pyarrow.parquet as pq_mod
+
+    store = SparkAdminStore(None, str(tmp_path / "admin"))
+    assert store.row_counts() == {"batches": 0, "jobs": 0, "test_results": 0}
+    _fill_ledger(store, datetime.datetime(2026, 4, 1, 9, 0), "r")
+    want = {t: pq_mod.read_table(f"{store.root}/{t}").num_rows for t in ("batches", "jobs", "test_results")}
+    assert store.row_counts() == want == {"batches": 5, "jobs": 18, "test_results": 18}
+    store.compact()
+    assert store.row_counts() == want
+
+
+def test_earliest_log_ts_none_without_rows(tmp_path):
+    store = SparkAdminStore(None, str(tmp_path / "admin"))
+    assert store.earliest_log_ts("batch_log") is None
+    store.log("batch_log", LogLevel.INFO, "old", "b1", ts=NOW - datetime.timedelta(days=10))
+    store.log("job_log", LogLevel.INFO, "newer", "b1", "j", ts=NOW)
+    assert store.earliest_log_ts("batch_log") == NOW - datetime.timedelta(days=10)
+    assert store.earliest_log_ts("job_log") == NOW
+    store.delete_old_logs(days_to_keep=3)
+    assert store.earliest_log_ts("batch_log") is None
+
+
+class _YieldingInt(int):
+    """An int whose ``+`` lets other threads run, so an unguarded
+    read-increment-write of a counter of this type gets interleaved."""
+
+    def __add__(self, other):
+        import time
+
+        time.sleep(0)
+        return _YieldingInt(int(self) + other)
+
+
+def _run_threads(n_threads, body):
+    """Run ``body(w)`` on n_threads threads started together, switching
+    between them as often as the interpreter allows."""
+    import sys
+    import threading
+
+    start = threading.Barrier(n_threads)
+
+    def run(w):
+        start.wait()
+        body(w)
+
+    threads = [threading.Thread(target=run, args=(w,)) for w in range(n_threads)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+
+
+def test_log_entry_ids_unique_across_threads(tmp_path):
+    import pyarrow.parquet as pq_mod
+
+    store = SparkAdminStore(None, str(tmp_path / "admin"))
+    store._entry_id = _YieldingInt(store._entry_id)
+    n_threads, n_calls = 8, 500
+
+    def body(w):
+        for i in range(n_calls):
+            store.log("job_log", LogLevel.INFO, f"w{w} line {i}", "b1", f"job_{w}", ts=NOW)
+
+    _run_threads(n_threads, body)
+    store.flush_logs()
+    ids = pq_mod.read_table(f"{store.root}/job_log").column("entry_id").to_pylist()
+    assert len(ids) == n_threads * n_calls
+    assert len(set(ids)) == n_threads * n_calls
+
+
+def test_index_matches_fresh_store_after_threaded_appends_and_lookups(tmp_path):
+    """Worker threads of the parallel runner save results and read the
+    gates on one store at once; the index must end as a fresh read."""
+    store = SparkAdminStore(None, str(tmp_path / "admin"))
+    t0 = datetime.datetime(2026, 5, 1, 9, 0)
+
+    def body(w):
+        for i in range(10):
+            _fill_ledger(store, t0 + datetime.timedelta(hours=i), f"w{w}-{i}", n_batches=1)
+            store.latest_test_results(f"w{w}-{i}-job1")
+            store.get_last_successful_ts(f"w{w}-{i}-job2")
+            store.get_batch(f"w{w}-{i}-b0")
+
+    _run_threads(8, body)
+    _assert_index_matches_fresh(store)
+    assert len(store.get_job_results("w7-9-b0")) == 3
