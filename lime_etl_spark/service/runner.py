@@ -18,20 +18,28 @@ Behavior preserved:
 - every state transition is persisted to the admin store (running →
   final), and a BatchStatus row brackets the whole run (:74-119)
 
+One scheduler runs every batch, a dependency ready queue: a job starts
+once its dependencies have final results, on a pool of ``max_workers``
+threads sharing the one SparkSession, and the coordinating thread
+writes every ledger row. With one worker (``run_batch``) jobs run in
+the reference's sequential order.
+
 Spark-specific: per-job timeout is enforced by running the job body
 in a worker thread and cancelling the job's Spark job group on
 timeout — the Spark-native way to kill distributed work mid-flight.
-Parallel batches share the session via FAIR-scheduler threads rather
-than processes (one JVM, many concurrent DAGs).
+Parallel batches share the session via threads rather than processes
+(one JVM, many concurrent DAGs).
 """
 
 from __future__ import annotations
 
 import datetime
+import os
+import time
 import traceback
-from concurrent.futures import ThreadPoolExecutor
+from concurrent.futures import FIRST_COMPLETED, Future, ThreadPoolExecutor, wait
 from concurrent.futures import TimeoutError as FutureTimeoutError
-from typing import List, Optional, Sequence, Tuple
+from typing import Dict, List, Optional, Sequence, Set, Tuple
 
 from pyspark.sql import SparkSession
 
@@ -119,6 +127,49 @@ def run_batch_with_delta(
     execution_millis) reads it, so tests drive intervals without
     sleeping. Default is the wall clock.
     """
+    return _run_batch(
+        batch, spark, store, log_to_console, resources, clock, max_workers=1
+    )
+
+
+def run_batch_parallel_jobs(
+    batch: SparkBatchSpec,
+    spark: SparkSession,
+    store: SparkAdminStore,
+    log_to_console: bool = False,
+    resources: Optional[dict] = None,
+    clock: Optional[ClockAdapter] = None,
+    max_workers: int = 4,
+) -> BatchStatus:
+    """run_batch with independent jobs executing CONCURRENTLY.
+
+    The reference runner is strictly sequential (batch_runner.py:160 —
+    one `for job in jobs` loop); on Spark that leaves the cluster idle
+    whenever a driver-heavy or small job runs. Here up to
+    ``max_workers`` ready jobs run at once in threads sharing the one
+    SparkSession, and a job starts as soon as its own dependencies have
+    finished. Gates read only a job's own dependency results and ledger
+    history, and every admin-store write stays on the calling thread,
+    so skip, fail and retry decisions match run_batch. The
+    batch-over-batch delta is logged as in run_batch_with_delta.
+    """
+    status, _ = _run_batch(
+        batch, spark, store, log_to_console, resources, clock, max_workers
+    )
+    return status
+
+
+def _run_batch(
+    batch: SparkBatchSpec,
+    spark: SparkSession,
+    store: SparkAdminStore,
+    log_to_console: bool,
+    resources: Optional[dict],
+    clock: Optional[ClockAdapter],
+    max_workers: int,
+) -> Tuple[BatchStatus, BatchDelta]:
+    """The batch bracket: a running row, the ready queue, then the final
+    row and the delta. On an error it saves the failed row and re-raises."""
     clock = clock or LocalClockAdapter()
     start = clock.now()
     logger = BatchLogger(store, batch.batch_id, log_to_console)
@@ -135,41 +186,115 @@ def run_batch_with_delta(
         )
     )
     logger.info(f"Starting batch [{batch.batch_name}]...")
+    job_results: List[JobResult] = []
+    error: Optional[Exception] = None
     try:
-        result = _run_jobs(batch, spark, store, logger, start, resources or {}, clock)
+        jobs = batch.create_jobs()
+        check_dependencies(jobs)
+        check_for_duplicate_job_names(jobs)
+        job_results = _run_ready_queue(
+            batch, jobs, spark, store, logger, start, resources or {}, clock,
+            max_workers,
+        )
     except Exception as e:
         logger.exception(e)
-        result = BatchStatus(
-            id=batch.batch_id,
-            name=batch.batch_name,
-            job_results=frozenset(),
-            execution_success_or_failure=Result.failure(str(e)),
-            execution_millis=clock.get_elapsed_time(start),
-            running=False,
-            ts=clock.now(),
-        )
-        store.save_batch(result)
-        store.flush_logs()
-        raise
+        error = e
+    end = clock.now()
+    result = BatchStatus(
+        id=batch.batch_id,
+        name=batch.batch_name,
+        job_results=frozenset(job_results),
+        execution_success_or_failure=(
+            Result.success() if error is None else Result.failure(str(error))
+        ),
+        execution_millis=ExecutionMillis(int((end - start).total_seconds() * 1000)),
+        running=False,
+        ts=end,
+    )
     store.save_batch(result)
+    if error is not None:
+        store.flush_logs()
+        raise error
     delta = BatchDelta(current=result, previous=previous)
     logger.info(f"Batch [{batch.batch_name}] finished. Delta — {delta}")
     store.flush_logs()
     return result, delta
 
 
+def _run_ready_queue(
+    batch: SparkBatchSpec,
+    jobs: Sequence[SparkJobSpec],
+    spark: SparkSession,
+    store: SparkAdminStore,
+    logger: BatchLogger,
+    start: datetime.datetime,
+    resources: dict,
+    clock: ClockAdapter,
+    max_workers: int,
+) -> List[JobResult]:
+    """Run ``jobs`` as their dependencies finish, at most ``max_workers``
+    at a time, and return their final results.
+
+    The calling thread is the coordinator: while a worker is free it
+    takes the ready jobs in declaration order, records a skip at once or
+    writes the running row and submits the body, then waits for the
+    first body to finish. Readiness is checked as the scan reaches each
+    job, so a skip frees its dependents within the same scan."""
+    order = {job.job_name: i for i, job in enumerate(jobs)}
+    pending = list(jobs)
+    finished: Set[str] = set()
+    job_results: List[JobResult] = []
+    in_flight: Dict[Future, SparkJobSpec] = {}
+
+    def record(job: SparkJobSpec, result: JobResult) -> None:
+        finished.add(job.job_name)
+        job_results.append(result)
+        store.save_job_result(result)
+
+    with ThreadPoolExecutor(max_workers=max_workers) as pool:
+        while pending or in_flight:
+            for job in list(pending):
+                if len(in_flight) == max_workers:
+                    break
+                if not finished.issuperset(job.dependencies):
+                    continue
+                pending.remove(job)
+                skip = _skip_decision(batch, job, job_results, store, logger, start, clock)
+                row = JobResult(
+                    id=UniqueId.generate().value,
+                    batch_id=batch.batch_id,
+                    job_name=job.job_name,
+                    status=JobStatus.running() if skip is None else skip,
+                    execution_millis=ExecutionMillis(0),
+                    ts=start,
+                )
+                if skip is not None:
+                    record(job, row)
+                    continue
+                store.save_job_result(row)
+                future = pool.submit(
+                    _execute_job,
+                    batch, job, row.id, spark, store, logger, list(job_results),
+                    start, resources, clock,
+                )
+                in_flight[future] = job
+            done, _ = wait(in_flight, return_when=FIRST_COMPLETED)
+            for future in sorted(done, key=lambda f: order[in_flight[f].job_name]):
+                record(in_flight.pop(future), future.result())
+    return job_results
+
+
 def _skip_decision(
     batch: SparkBatchSpec,
     job: SparkJobSpec,
-    job_id: str,
     job_results: Sequence[JobResult],
     store: SparkAdminStore,
     logger: BatchLogger,
     start: datetime.datetime,
     clock: ClockAdapter,
-) -> Optional[JobResult]:
+) -> Optional[JobStatus]:
     """The pre-execution gates, in reference order: batch deadline,
-    all-deps-skipped/failed, refresh interval. Returns the skip result,
+    all-deps-skipped/failed, refresh interval. Returns the skip status,
     or None when the job should actually run. Pure driver-side reads —
     safe to evaluate sequentially while other jobs execute."""
     # Batch-level timeout: the reference declares
@@ -186,15 +311,8 @@ def _skip_decision(
             f"Batch timeout of {batch.timeout_seconds} seconds exceeded; "
             f"skipping [{job.job_name}]."
         )
-        return JobResult(
-            id=job_id,
-            batch_id=batch.batch_id,
-            job_name=job.job_name,
-            status=JobStatus.skipped(
-                f"Batch timeout of {batch.timeout_seconds} seconds exceeded."
-            ),
-            execution_millis=ExecutionMillis(0),
-            ts=start,
+        return JobStatus.skipped(
+            f"Batch timeout of {batch.timeout_seconds} seconds exceeded."
         )
 
     dep_results = [r for r in job_results if r.job_name in job.dependencies]
@@ -205,14 +323,7 @@ def _skip_decision(
             f"All the dependencies for [{job.job_name}] were skipped or failed so "
             f"the job has been skipped."
         )
-        return JobResult(
-            id=job_id,
-            batch_id=batch.batch_id,
-            job_name=job.job_name,
-            status=JobStatus.skipped("Dependencies were skipped or failed."),
-            execution_millis=ExecutionMillis(0),
-            ts=start,
-        )
+        return JobStatus.skipped("Dependencies were skipped or failed.")
 
     last_ok = store.get_last_successful_ts(job.job_name)
     if last_ok is not None:
@@ -223,15 +334,8 @@ def _skip_decision(
                 f"it is set to refresh every {job.min_seconds_between_refreshes} "
                 f"seconds, so there is no need to refresh again."
             )
-            return JobResult(
-                id=job_id,
-                batch_id=batch.batch_id,
-                job_name=job.job_name,
-                status=JobStatus.skipped(
-                    f"The job ran {since:.0f} seconds ago, so it is not time yet."
-                ),
-                execution_millis=ExecutionMillis(0),
-                ts=start,
+            return JobStatus.skipped(
+                f"The job ran {since:.0f} seconds ago, so it is not time yet."
             )
     return None
 
@@ -249,6 +353,7 @@ def _execute_job(
     clock: ClockAdapter,
 ) -> JobResult:
     job_logger = logger.create_job_logger(job.job_name)
+    job_start = clock.now()
     try:
         return _run_job(
             batch, job, job_id, spark, store, job_logger, job_results,
@@ -256,197 +361,14 @@ def _execute_job(
         )
     except Exception as e:
         logger.exception(e)
-        millis = clock.get_elapsed_time(start)
         return JobResult(
             id=job_id,
             batch_id=batch.batch_id,
             job_name=job.job_name,
             status=JobStatus.failed(f"{e}\n{traceback.format_exc(10)}"),
-            execution_millis=millis,
+            execution_millis=clock.get_elapsed_time(job_start),
             ts=start,
         )
-
-
-def _run_jobs(
-    batch: SparkBatchSpec,
-    spark: SparkSession,
-    store: SparkAdminStore,
-    logger: BatchLogger,
-    start: datetime.datetime,
-    resources: dict,
-    clock: ClockAdapter,
-) -> BatchStatus:
-    jobs = batch.create_jobs()
-    check_dependencies(jobs)
-    check_for_duplicate_job_names(jobs)
-
-    job_results: List[JobResult] = []
-    for job in jobs:
-        job_id = UniqueId.generate().value
-        result = _skip_decision(
-            batch, job, job_id, job_results, store, logger, start, clock
-        )
-        if result is None:
-            store.save_job_result(
-                JobResult(
-                    id=job_id,
-                    batch_id=batch.batch_id,
-                    job_name=job.job_name,
-                    status=JobStatus.running(),
-                    execution_millis=ExecutionMillis(0),
-                    ts=start,
-                )
-            )
-            result = _execute_job(
-                batch, job, job_id, spark, store, logger, job_results, start,
-                resources, clock,
-            )
-        job_results.append(result)
-        store.save_job_result(result)
-
-    end = clock.now()
-    return BatchStatus(
-        id=batch.batch_id,
-        name=batch.batch_name,
-        job_results=frozenset(job_results),
-        execution_success_or_failure=Result.success(),
-        execution_millis=ExecutionMillis(int((end - start).total_seconds() * 1000)),
-        running=False,
-        ts=end,
-    )
-
-
-def _dependency_layers(jobs: Sequence[SparkJobSpec]) -> List[List[SparkJobSpec]]:
-    """Topological layers: a job's layer is 1 + max(layer of its deps).
-    Jobs inside one layer have no edges between them (dependencies are
-    validated to point at earlier-listed jobs), so a layer can run
-    concurrently without changing any skip/failure semantics."""
-    level: dict[str, int] = {}
-    layers: List[List[SparkJobSpec]] = []
-    for job in jobs:
-        lvl = 1 + max((level[d] for d in job.dependencies), default=-1)
-        level[job.job_name] = lvl
-        while len(layers) <= lvl:
-            layers.append([])
-        layers[lvl].append(job)
-    return layers
-
-
-def run_batch_parallel_jobs(
-    batch: SparkBatchSpec,
-    spark: SparkSession,
-    store: SparkAdminStore,
-    log_to_console: bool = False,
-    resources: Optional[dict] = None,
-    clock: Optional[ClockAdapter] = None,
-    max_workers: int = 4,
-) -> BatchStatus:
-    """run_batch with independent jobs executing CONCURRENTLY.
-
-    The reference runner is strictly sequential (batch_runner.py:160 —
-    one `for job in jobs` loop); on Spark that leaves the cluster idle
-    whenever a driver-heavy or small job runs. This variant computes
-    the dependency layers of the DAG and runs each layer's jobs in
-    worker threads sharing the one SparkSession — concurrent Spark
-    jobs interleave their stages across executors (FAIR-friendly),
-    which is the Spark-native version of "run independent ETL jobs at
-    once".
-
-    Semantics are preserved exactly: all pre-execution gates (batch
-    deadline, all-deps-skipped/failed, refresh interval) are evaluated
-    SEQUENTIALLY in declaration order between layers, and every admin-
-    store write happens on the coordinating thread (worker threads
-    only run the job bodies), so the ledger sees the same rows as the
-    sequential runner — layer boundaries only add ordering, never
-    remove it.
-    """
-    clock = clock or LocalClockAdapter()
-    start = clock.now()
-    logger = BatchLogger(store, batch.batch_id, log_to_console)
-    store.save_batch(
-        BatchStatus(
-            id=batch.batch_id,
-            name=batch.batch_name,
-            job_results=frozenset(),
-            execution_success_or_failure=None,
-            execution_millis=None,
-            running=True,
-            ts=start,
-        )
-    )
-    logger.info(f"Starting batch [{batch.batch_name}] (parallel jobs)...")
-    try:
-        jobs = batch.create_jobs()
-        check_dependencies(jobs)
-        check_for_duplicate_job_names(jobs)
-
-        job_results: List[JobResult] = []
-        with ThreadPoolExecutor(max_workers=max_workers) as pool:
-            for layer in _dependency_layers(jobs):
-                to_run: List[Tuple[SparkJobSpec, str]] = []
-                skipped: List[JobResult] = []
-                for job in layer:
-                    job_id = UniqueId.generate().value
-                    decision = _skip_decision(
-                        batch, job, job_id, job_results, store, logger, start, clock
-                    )
-                    if decision is None:
-                        store.save_job_result(
-                            JobResult(
-                                id=job_id,
-                                batch_id=batch.batch_id,
-                                job_name=job.job_name,
-                                status=JobStatus.running(),
-                                execution_millis=ExecutionMillis(0),
-                                ts=start,
-                            )
-                        )
-                        to_run.append((job, job_id))
-                    else:
-                        skipped.append(decision)
-                futures = [
-                    pool.submit(
-                        _execute_job,
-                        batch, job, job_id, spark, store, logger,
-                        list(job_results), start, resources or {}, clock,
-                    )
-                    for job, job_id in to_run
-                ]
-                layer_results = skipped + [f.result() for f in futures]
-                # deterministic ledger order regardless of finish order
-                order = {j.job_name: i for i, j in enumerate(layer)}
-                layer_results.sort(key=lambda r: order[r.job_name])
-                for r in layer_results:
-                    job_results.append(r)
-                    store.save_job_result(r)
-
-        end = clock.now()
-        result = BatchStatus(
-            id=batch.batch_id,
-            name=batch.batch_name,
-            job_results=frozenset(job_results),
-            execution_success_or_failure=Result.success(),
-            execution_millis=ExecutionMillis(int((end - start).total_seconds() * 1000)),
-            running=False,
-            ts=end,
-        )
-    except Exception as e:
-        logger.exception(e)
-        result = BatchStatus(
-            id=batch.batch_id,
-            name=batch.batch_name,
-            job_results=frozenset(),
-            execution_success_or_failure=Result.failure(str(e)),
-            execution_millis=clock.get_elapsed_time(start),
-            running=False,
-            ts=clock.now(),
-        )
-        store.save_batch(result)
-        store.flush_logs()
-        raise
-    store.save_batch(result)
-    store.flush_logs()
-    return result
 
 
 def _run_job(
@@ -464,16 +386,9 @@ def _run_job(
     logger.info(f"Starting [{job.job_name}]...")
     start = clock.now()
 
-    dep_failures = {
-        r.job_name
-        for r in prior_results
-        if r.job_name in job.dependencies and r.status.state is JobState.FAILED
-    }
-    dep_test_failures = {
-        r.job_name
-        for r in prior_results
-        if r.job_name in job.dependencies and r.tests_failed
-    }
+    dep_results = [r for r in prior_results if r.job_name in job.dependencies]
+    dep_failures = {r.job_name for r in dep_results if r.status.state is JobState.FAILED}
+    dep_test_failures = {r.job_name for r in dep_results if r.tests_failed}
     if dep_failures:
         errs = ", ".join(sorted(dep_failures))
         if dep_test_failures:
@@ -485,7 +400,8 @@ def _run_job(
         raise Exception(f"The following dependencies failed to execute: {errs}")
 
     ctx = JobContext(spark=spark, logger=logger, resources=resources)
-    status, millis = _run_with_retry(job, ctx, spark, logger, start, clock)
+    group = f"{batch.batch_id}:{job_id}:{job.job_name}"
+    status, millis = _run_with_retry(job, ctx, spark, logger, start, clock, group)
 
     test_results: frozenset = frozenset()
     if status.is_success:
@@ -581,11 +497,12 @@ def _run_with_retry(
     logger: JobLogger,
     start: datetime.datetime,
     clock: ClockAdapter,
+    group: str,
 ) -> Tuple[JobStatus, ExecutionMillis]:
     retries = 0
     while True:
         try:
-            status = _run_with_timeout(job, ctx, spark)
+            status = _run_with_timeout(job, ctx, spark, group)
             millis = clock.get_elapsed_time(start)
             return status or JobStatus.success(), millis
         except Exception:
@@ -605,11 +522,12 @@ def _run_with_retry(
 
 
 def _run_with_timeout(
-    job: SparkJobSpec, ctx: JobContext, spark: SparkSession
+    job: SparkJobSpec, ctx: JobContext, spark: SparkSession, group: str
 ) -> Optional[JobStatus]:
+    """Run the body; with a timeout, in a thread whose Spark jobs carry
+    ``group`` (unique per batch and job) and are cancelled on expiry."""
     if job.timeout_seconds is None:
         return job.run(ctx)
-    group = f"lime-etl-{job.job_name}"
 
     def body() -> Optional[JobStatus]:
         spark.sparkContext.setJobGroup(group, f"job {job.job_name}", interruptOnCancel=True)
@@ -630,6 +548,7 @@ def _run_with_timeout(
         pool.shutdown(wait=False)
 
 
+
 def run_batches_in_parallel(
     batches: Sequence[SparkBatchSpec],
     spark: SparkSession,
@@ -638,29 +557,24 @@ def run_batches_in_parallel(
     timeout: Optional[int] = None,
     log_to_console: bool = False,
 ) -> List[BatchStatus]:
-    """Concurrent batches in one Spark session (FAIR-scheduler threads —
+    """Concurrent batches in one Spark session (threads sharing one JVM —
     the single-JVM analog of the reference's multiprocessing pool).
     ``timeout`` bounds the whole group, like the reference's
     ``future.get(timeout)`` (batch_runner.py:46): on expiry a
     TimeoutError raises and stragglers' Spark jobs keep their own
     per-job timeouts."""
-    spark.sparkContext.setLocalProperty("spark.scheduler.mode", "FAIR")
 
     def one(batch: SparkBatchSpec) -> BatchStatus:
-        import os
-
         store = SparkAdminStore(spark, os.path.join(store_root, batch.batch_name))
         return run_batch(batch, spark, store, log_to_console)
 
-    import time as _time
-
     with ThreadPoolExecutor(max_workers=max_workers or len(batches)) as pool:
         futures = [pool.submit(one, b) for b in batches]
-        deadline = None if timeout is None else _time.monotonic() + timeout
+        deadline = None if timeout is None else time.monotonic() + timeout
         results = []
         try:
             for f in futures:
-                remaining = None if deadline is None else max(0.0, deadline - _time.monotonic())
+                remaining = None if deadline is None else max(0.0, deadline - time.monotonic())
                 results.append(f.result(timeout=remaining))
         except FutureTimeoutError:
             for f in futures:

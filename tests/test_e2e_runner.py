@@ -561,3 +561,55 @@ def test_retry_policy_defaults_and_cap():
         RetryPolicy(base_seconds=-1)
     with pytest.raises(ValueError):
         RetryPolicy(base_seconds=1, factor=0.5)
+
+
+def test_parallel_batches_timeouts_cancel_only_their_own_spark_jobs(spark, tmp_path):
+    """Two concurrent batches each run a job named `shared` under a
+    timeout. One times out while the other's Spark job is running; the
+    cancelled job group is the timed-out job's own, so the other
+    batch's job finishes."""
+    import time
+
+    def stuck(ctx):
+        time.sleep(3)
+        return JobStatus.success()
+
+    def slow_spark(ctx):
+        ctx.spark.sparkContext.parallelize([0], 1).map(lambda x: time.sleep(3) or x).collect()
+        return JobStatus.success()
+
+    batches = [
+        SparkBatchSpec(
+            name="times_out", jobs=[SimpleJobSpec(name="shared", run=stuck, timeout_seconds=1)]
+        ),
+        SparkBatchSpec(
+            name="finishes", jobs=[SimpleJobSpec(name="shared", run=slow_spark, timeout_seconds=30)]
+        ),
+    ]
+    timed_out, finished = run_batches_in_parallel(batches, spark, str(tmp_path / "stores"))
+    assert "timed out" in (next(iter(timed_out.job_results)).status.reason or "")
+    assert finished.broken_jobs == set()
+
+
+def test_failed_job_millis_measured_from_its_own_start(spark, store):
+    """A job that fails late in a batch records its own run time, not
+    the time elapsed since the batch started."""
+    from lime_etl_spark.domain.clock import FakeClockAdapter
+
+    clock = FakeClockAdapter()
+
+    def first(ctx):
+        clock.advance(100)
+        return JobStatus.success()
+
+    batch = SparkBatchSpec(
+        name="late_failure_batch",
+        jobs=[
+            SimpleJobSpec(name="first", run=first),
+            SimpleJobSpec(name="second", run=_boom, max_retries=0),
+        ],
+    )
+    result = run_batch(batch, spark, store, clock=clock)
+    second = next(r for r in result.job_results if r.job_name == "second")
+    assert second.status.is_failed
+    assert second.execution_millis.value < 100_000

@@ -1,11 +1,16 @@
 """run_batch_parallel_jobs: same semantics as the sequential runner,
-concurrent execution of independent DAG layers."""
+with a dependency ready queue: a job starts as soon as its own
+dependencies have finished, concurrently with unrelated jobs."""
 
 from __future__ import annotations
 
+import functools
+import os
 import threading
 import time
+from collections import Counter
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -13,15 +18,13 @@ from lime_etl_spark.adapter.admin_store import SparkAdminStore
 from lime_etl_spark.domain import (
     JobContext,
     JobStatus,
+    Result,
     SimpleJobSpec,
+    SimpleTestResult,
     SparkBatchSpec,
 )
 from lime_etl_spark.domain.statuses import JobState
-from lime_etl_spark.service.runner import (
-    _dependency_layers,
-    run_batch,
-    run_batch_parallel_jobs,
-)
+from lime_etl_spark.service.runner import run_batch, run_batch_parallel_jobs
 
 
 @pytest.fixture()
@@ -38,19 +41,39 @@ def _boom(ctx: JobContext):
     raise RuntimeError("kaboom")
 
 
-def test_dependency_layers_structure():
-    jobs = SparkBatchSpec(
-        name="layers",
+def test_ready_job_does_not_wait_for_unrelated_jobs(spark, store):
+    """job_c needs only job_a, so it starts while the slow job_b is
+    still running; job_d and job_e still wait for all of their own
+    dependencies."""
+    marks = {}
+    lock = threading.Lock()
+
+    def timed(name, seconds=0.0):
+        def run(ctx):
+            with lock:
+                marks[f"{name}_start"] = time.monotonic()
+            time.sleep(seconds)
+            with lock:
+                marks[f"{name}_end"] = time.monotonic()
+            return JobStatus.success()
+
+        return run
+
+    batch = SparkBatchSpec(
+        name="ready_queue",
         jobs=[
-            SimpleJobSpec(name="job_a", run=_ok),
-            SimpleJobSpec(name="job_b", run=_ok),
-            SimpleJobSpec(name="job_c", run=_ok, dependencies=["job_a"]),
-            SimpleJobSpec(name="job_d", run=_ok, dependencies=["job_a", "job_b"]),
-            SimpleJobSpec(name="job_e", run=_ok, dependencies=["job_c", "job_d"]),
+            SimpleJobSpec(name="job_a", run=timed("a")),
+            SimpleJobSpec(name="job_b", run=timed("b", 1.5)),
+            SimpleJobSpec(name="job_c", run=timed("c"), dependencies=["job_a"]),
+            SimpleJobSpec(name="job_d", run=timed("d"), dependencies=["job_a", "job_b"]),
+            SimpleJobSpec(name="job_e", run=timed("e"), dependencies=["job_c", "job_d"]),
         ],
-    ).create_jobs()
-    layers = [[j.job_name for j in layer] for layer in _dependency_layers(jobs)]
-    assert layers == [["job_a", "job_b"], ["job_c", "job_d"], ["job_e"]]
+    )
+    result = run_batch_parallel_jobs(batch, spark, store)
+    assert result.broken_jobs == set()
+    assert marks["a_end"] <= marks["c_start"] < marks["b_end"]
+    assert marks["d_start"] >= marks["b_end"]
+    assert marks["e_start"] >= max(marks["c_end"], marks["d_end"])
 
 
 def test_independent_jobs_overlap_in_time(spark, store):
@@ -109,28 +132,63 @@ def test_parallel_preserves_skip_semantics(spark, store):
     assert states["child_of_both"] == JobState.FAILED
 
 
+def _ledger(spark, root: str, batch_id: str) -> dict:
+    """Per job name, read back from the store's files by a fresh store:
+    the final state, the test outcomes and the number of ledger rows."""
+    rows = Counter(pq.read_table(os.path.join(root, "jobs")).column("job_name").to_pylist())
+    return {
+        r.job_name: (
+            r.status.state,
+            sorted((t.test_name, t.test_passed) for t in r.test_results),
+            rows[r.job_name],
+        )
+        for r in SparkAdminStore(spark, root).get_job_results(batch_id)
+    }
+
+
 def test_parallel_matches_sequential_ledger(spark, store, tmp_path):
-    """Same batch through both runners → same job states and the same
-    set of persisted admin rows."""
+    """Same batch through the sequential runner, the parallel runner and
+    the parallel runner with one worker → same job states and the same
+    persisted admin rows."""
+    def tests(ctx):
+        return [
+            SimpleTestResult(test_name="passes", outcome=Result.success()),
+            SimpleTestResult(test_name="fails", outcome=Result.failure("bad")),
+        ]
+
     def mk():
         return SparkBatchSpec(
             name="same",
             jobs=[
-                SimpleJobSpec(name="job_a", run=_ok),
+                SimpleJobSpec(name="job_a", run=_ok, test=tests),
                 SimpleJobSpec(name="job_b", run=_boom, max_retries=0),
                 SimpleJobSpec(name="job_c", run=_ok, dependencies=["job_a"]),
                 SimpleJobSpec(name="job_d", run=_ok, dependencies=["job_b"]),
             ],
         )
 
-    seq_store = SparkAdminStore(spark, str(tmp_path / "seq"))
-    par_store = SparkAdminStore(spark, str(tmp_path / "par"))
-    seq = run_batch(mk(), spark, seq_store)
-    par = run_batch_parallel_jobs(mk(), spark, par_store)
+    runners = {
+        "seq": run_batch,
+        "par": run_batch_parallel_jobs,
+        "par1": functools.partial(run_batch_parallel_jobs, max_workers=1),
+    }
+    statuses, ledgers = {}, {}
+    for name, runner in runners.items():
+        root = str(tmp_path / name)
+        statuses[name] = runner(mk(), spark, SparkAdminStore(spark, root))
+        ledgers[name] = _ledger(spark, root, statuses[name].id)
+    seq = statuses["seq"]
     seq_states = {r.job_name: r.status.state for r in seq.job_results}
-    par_states = {r.job_name: r.status.state for r in par.job_results}
-    assert seq_states == par_states
-    assert seq.broken_jobs == par.broken_jobs
+    for name in ("par", "par1"):
+        par = statuses[name]
+        assert {r.job_name: r.status.state for r in par.job_results} == seq_states
+        assert par.broken_jobs == seq.broken_jobs
+        assert ledgers[name] == ledgers["seq"]
+    # running + final row per run job, one row per skipped job
+    assert {n: v[2] for n, v in ledgers["seq"].items()} == {
+        "job_a": 2, "job_b": 2, "job_c": 2, "job_d": 1,
+    }
+    assert ledgers["seq"]["job_a"][1] == [("fails", False), ("passes", True)]
 
 
 def test_parallel_refresh_skip(spark, store):
