@@ -13,22 +13,22 @@ DATA is 100 TB but the admin ledger is kilobytes per batch run):
   readers reconstruct current state latest-wins (the same
   ``dedup_latest`` pattern our ETL operator family exposes).
 - **Driver-side writes via Arrow.** Bookkeeping rows are driver
-  metadata — exactly like Spark's own event logs, they are written
-  by the driver, not the cluster. One tiny parquet file per state
-  transition through pyarrow costs microseconds; routing each row
-  through a distributed Spark job would cost a full job-scheduling
-  round-trip per row and buy nothing (there is no data to
-  distribute). Spark reads the same files for the analytical
-  surface (``read_log`` returns a DataFrame), so the ledger is
-  queryable with the rest of the engine.
+  metadata, written like Spark's own event logs by the driver on its
+  local disk: one tiny pyarrow file per state transition costs
+  microseconds, where a Spark job per row would cost a scheduling
+  round-trip. Spark reads the same files for the analytical surface
+  (``read_log`` returns a DataFrame).
 - **Date-partitioned logs** (hive-style ``log_date=YYYY-MM-DD``
   dirs) so ``delete_old_logs`` (reference service/admin/
-  delete_old_logs.py) is a partition drop — a pure filesystem
-  metadata operation, never a rewrite of retained data. That is the
-  only retention pattern that survives years of cluster logs.
+  delete_old_logs.py) is a partition drop, never a rewrite of
+  retained data.
 - **Buffered log appends.** Log lines buffer in memory and flush as
-  one file per batch run (or on explicit ``flush_logs()``); a file
-  per log line would melt any filesystem at scale.
+  one file per batch run (or on explicit ``flush_logs()``).
+- **Crash-safe rewrites.** ``compact`` and ``delete_old_batches``
+  replace a table or log partition only through sources/fs.py's
+  ``overwrite_dir`` (write a hidden sibling, then swap). A directory a
+  crash left missing between the swap's renames is restored before
+  the store next lists, reads or appends to it, so no row is lost.
 - **Incremental keyed index for point lookups.** The runner's gates
   read an in-memory index of the ledger tables, never a table scan.
   Part files are immutable and uuid-named, so a lookup lists the table
@@ -45,6 +45,7 @@ import shutil
 import threading
 import time
 import uuid
+from functools import partial
 from typing import Any, Callable, Dict, List, Optional, Sequence, Set, Tuple
 
 import pyarrow as pa
@@ -58,6 +59,7 @@ from pyspark.sql.types import (
 
 from lime_etl_spark.domain.statuses import BatchStatus, JobResult, JobState, JobStatus, TestResult
 from lime_etl_spark.domain.value_objects import ExecutionMillis, LogLevel, LogMessage, Result
+from lime_etl_spark.sources.fs import overwrite_dir, settle_dirs
 
 _BATCHES = StructType(
     [
@@ -229,22 +231,19 @@ class SparkAdminStore:
     """All admin tables under one root directory.
 
     Concurrency contract: the reference got transactionality from
-    SQLAlchemy; this store gets the equivalent BY CONSTRUCTION from
-    its event-sourced layout — every append writes a NEW uuid-named
-    parquet part file (no rewrite → no torn read, no filename
-    collision) and every read resolves latest-wins on `seq`, so
-    concurrent appends from multiple PROCESSES sharing a root merge
-    safely (tests/test_admin_store.py runs a 4-way spawn-Pool race).
-    `seq` is pid-stamped wall-clock ns (_mint_seq), so concurrent
-    writers never tie and latest-wins is a TOTAL order. Point lookups
-    read the keyed index (_index): each lookup ingests the table's
-    unseen part files and rebuilds when an ingested one is gone, so
-    appends and rewrites by other processes or store instances show at
-    the next lookup. One lock guards the index, the log buffer and log
-    entry ids, so job bodies on worker threads may share a store. The
-    REWRITE paths (compact / delete_old_batches / delete_old_logs)
-    are single-writer — run them from one coordinator with no
-    concurrent appenders, as BatchRunner does.
+    SQLAlchemy; this store gets the equivalent BY CONSTRUCTION from its
+    layout. Every append writes a NEW uuid-named part file (no torn
+    read, no name collision) and every read resolves latest-wins on
+    `seq` (pid-stamped wall-clock ns, _mint_seq: a TOTAL order), so
+    appends from many PROCESSES sharing a root merge safely. Each
+    lookup ingests the unseen part files into the keyed index and
+    rebuilds it when an ingested one is gone, so other writers' appends
+    and rewrites show at the next lookup. One lock guards the index, the
+    log buffer and log entry ids, so worker threads may share a store.
+    The rewrite paths (compact and delete_old_batches through
+    overwrite_dir, delete_old_logs' partition drop) survive a crash at
+    any step but are single-writer: run them from one coordinator with
+    no concurrent appenders, as the admin batch does.
     """
 
     LOG_TABLES = ("batch_log", "job_log")
@@ -281,7 +280,9 @@ class SparkAdminStore:
                 self._idx.ingest(table, _write_file(self._path(table), tbl), _rows(tbl))
 
     def _log_partitions(self, table: str) -> List[str]:
+        """The table's log_date partition dirs, after settling their swaps."""
         path = self._path(table)
+        settle_dirs(None, path)
         entries = os.listdir(path) if os.path.isdir(path) else ()
         return [os.path.join(path, e) for e in entries if e.startswith("log_date=")]
 
@@ -297,16 +298,16 @@ class SparkAdminStore:
                 self._idx.ingest(t, name, _rows(tbl))
         return self._idx
 
-    def _rewrite(self, table: str, keep: Callable[[Dict[str, Any]], bool] = lambda r: True) -> int:
-        """Replace a ledger table's part files with one file of the rows
-        that pass ``keep``; returns how many were kept."""
+    def _rewrite(self, table: str, keep: Callable[[Dict[str, Any]], bool] = lambda r: True) -> None:
+        """Swap a ledger table's part files for one file of the rows that
+        pass ``keep``; the new file enters a fresh index with no read-back."""
         path = self._path(table)
         with self._lock:
             rows = [r for r in _rows(pq.read_table(path)) if keep(r)]
-            shutil.rmtree(path)
+            tbl = pa.Table.from_pylist(rows, schema=_pa_schema(_LEDGER[table]))
+            name = overwrite_dir(None, path, partial(_write_file, tbl=tbl))
             self._idx = _LedgerIndex()
-            self._append(table, rows)
-        return len(rows)
+            self._idx.ingest(table, name, rows)
 
     def row_counts(self) -> Dict[str, int]:
         """Rows per ledger table on disk, from the part-file footers."""
@@ -323,7 +324,8 @@ class SparkAdminStore:
         path = self._path(table)
         if table in self.LOG_TABLES:
             self.flush_logs()
-        if not os.path.exists(path):
+            self._log_partitions(table)  # settles a crashed partition swap
+        if not _settled(path):
             return self.spark.createDataFrame([], schema=schema)
         return self.spark.read.schema(schema).parquet(path)
 
@@ -406,30 +408,22 @@ class SparkAdminStore:
         """
         self.flush_logs()
         stats: Dict[str, Tuple[int, int]] = {}
-        for table in _LEDGER:
-            if os.path.exists(self._path(table)):
-                before = len(_part_files(self._path(table)))
-                stats[table] = (before, 1 if self._rewrite(table) else 0)
-        for table in self.LOG_TABLES:
-            if not os.path.exists(self._path(table)):
-                continue
+        for table in filter(lambda t: _settled(self._path(t)), _LEDGER):
+            stats[table] = (len(_part_files(self._path(table))), 1)
+            self._rewrite(table)
+        for table in filter(lambda t: os.path.isdir(self._path(t)), self.LOG_TABLES):
             parts = self._log_partitions(table)
-            before = 0
-            for part_dir in parts:
-                n = len(_part_files(part_dir))
-                before += n
-                if n > 1:
-                    tbl = pq.read_table(part_dir)
-                    shutil.rmtree(part_dir)
-                    _write_file(part_dir, tbl)
-            stats[table] = (before, len(parts))
+            counts = [len(_part_files(part_dir)) for part_dir in parts]
+            for part_dir in (p for p, n in zip(parts, counts) if n > 1):
+                overwrite_dir(None, part_dir, partial(_write_file, tbl=pq.read_table(part_dir)))
+            stats[table] = (sum(counts), len(parts))
         return stats
 
-    def delete_old_batches(self, days_to_keep: int) -> None:
-        """Rewrite retained batch/job state (small tables by design)."""
-        cutoff = _cutoff(days_to_keep)
+    def delete_old_batches(self, cutoff: datetime.datetime) -> None:
+        """Rewrite retained batch/job state (small tables by design):
+        the rows with ``ts`` at or after ``cutoff``."""
         for table in _LEDGER:
-            if os.path.exists(self._path(table)):
+            if _settled(self._path(table)):
                 self._rewrite(table, lambda r: r["ts"] >= cutoff)
 
     # -- jobs ----------------------------------------------------------------
@@ -534,11 +528,11 @@ class SparkAdminStore:
     def read_log(self, table: str) -> DataFrame:
         return self._read(table, _LOG)
 
-    def delete_old_logs(self, days_to_keep: int) -> None:
-        """Drop whole log_date partitions older than the cutoff — a
+    def delete_old_logs(self, cutoff: datetime.datetime) -> None:
+        """Drop whole log_date partitions dated before ``cutoff`` — a
         filesystem metadata operation, no data rewrite."""
         self.flush_logs()
-        cutoff_date = _cutoff(days_to_keep).strftime("%Y-%m-%d")
+        cutoff_date = cutoff.strftime("%Y-%m-%d")
         for table in self.LOG_TABLES:
             for part_dir in self._log_partitions(table):
                 if part_dir.rsplit("=", 1)[1] < cutoff_date:
@@ -546,20 +540,29 @@ class SparkAdminStore:
 
     def earliest_log_ts(self, table: str = "batch_log") -> Optional[datetime.datetime]:
         self.flush_logs()
-        path = self._path(table)
-        if not os.path.exists(path) or not os.listdir(path):
+        if not self._log_partitions(table):
             return None
-        return _naive(pc.min(pq.read_table(path, columns=["ts"])["ts"]).as_py())
+        return _naive(pc.min(pq.read_table(self._path(table), columns=["ts"])["ts"]).as_py())
+
+
+def _settled(dir_path: str) -> bool:
+    """Whether ``dir_path`` is a directory, once restored if a crash
+    stopped its rewrite between the two renames (sources/fs.py)."""
+    if os.path.isdir(dir_path):
+        return True
+    settle_dirs(None, os.path.dirname(dir_path))
+    return os.path.isdir(dir_path)
 
 
 def _part_files(dir_path: str) -> Set[str]:
-    names = os.listdir(dir_path) if os.path.isdir(dir_path) else ()
+    names = os.listdir(dir_path) if _settled(dir_path) else ()
     return {f for f in names if f.endswith(".parquet")}
 
 
 def _write_file(dir_path: str, tbl: pa.Table) -> str:
     """Write ``tbl`` as a new uuid-named part file; returns its name."""
-    os.makedirs(dir_path, exist_ok=True)
+    if not _settled(dir_path):
+        os.makedirs(dir_path, exist_ok=True)
     name = f"part-{uuid.uuid4().hex}.parquet"
     pq.write_table(tbl, os.path.join(dir_path, name))
     return name
@@ -582,13 +585,6 @@ def _latest_versions(df: DataFrame, key: str) -> DataFrame:
     """The max-seq row per ``key``, as a window in Spark."""
     w = Window.partitionBy(key).orderBy(F.desc("seq"))
     return df.withColumn("__rn", F.row_number().over(w)).where(F.col("__rn") == 1).drop("__rn")
-
-
-def _cutoff(days_to_keep: int) -> datetime.datetime:
-    now = datetime.datetime.now()
-    return datetime.datetime.combine(
-        (now - datetime.timedelta(days=days_to_keep)).date(), datetime.time.min
-    )
 
 
 class _StoreLogger:

@@ -20,6 +20,7 @@ from typing import TYPE_CHECKING, Any, Callable, Dict, List, Optional, Sequence,
 
 from pyspark.sql import SparkSession
 
+from lime_etl_spark.domain.clock import ClockAdapter, LocalClockAdapter
 from lime_etl_spark.domain.statuses import JobStatus, SimpleTestResult
 from lime_etl_spark.domain.value_objects import (
     BatchName,
@@ -37,11 +38,12 @@ if TYPE_CHECKING:
 
 @dataclass
 class JobContext:
-    """What a job gets to work with."""
+    """What a job gets to work with; ``clock`` is the runner's clock."""
 
     spark: SparkSession
     logger: "JobLogger"
     resources: Dict[str, Any] = field(default_factory=dict)
+    clock: ClockAdapter = field(default_factory=LocalClockAdapter)
 
 
 @dataclass(frozen=True)

@@ -18,10 +18,11 @@ from __future__ import annotations
 import math
 import os
 import re
-import shutil
 from typing import List, Optional
 
 from pyspark.sql import DataFrame, SparkSession
+
+from lime_etl_spark.sources.fs import overwrite_dir
 
 
 def dir_bytes(path: str) -> int:
@@ -46,19 +47,20 @@ def compact_parquet(
 ) -> int:
     """Rewrite a parquet directory into ~target-sized files.
 
-    Returns the new file count. Local swap is tmp+rename; a lake table
-    format would express this as a compaction transaction instead —
-    the sizing logic is the part that transfers.
+    Returns the new file count. The swap is sources/fs.py's
+    crash-safe overwrite_dir; a lake table format would express this as
+    a compaction transaction instead — the sizing logic is the part
+    that transfers.
     """
-    n_files = max(1, math.ceil(dir_bytes(path) / (target_file_mb * 1024 * 1024)))
-    df = spark.read.parquet(path)
-    tmp = path + ".compact_tmp"
-    writer = df.repartition(n_files).write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(tmp)
-    shutil.rmtree(path)
-    os.rename(tmp, path)
+
+    def write(tmp: str) -> None:
+        n_files = max(1, math.ceil(dir_bytes(path) / (target_file_mb * 1024 * 1024)))
+        writer = spark.read.parquet(path).repartition(n_files).write
+        if partition_by:
+            writer = writer.partitionBy(*partition_by)
+        writer.parquet(tmp)
+
+    overwrite_dir(spark, path, write)
     return parquet_file_count(path)
 
 

@@ -1,10 +1,10 @@
 """Built-in admin jobs (reference lime_etl/service/admin/).
 
 DeleteOldLogs mirrors reference delete_old_logs.py: purge admin log
-rows older than ``days_to_keep`` and then *test* that nothing older
-remains. On Spark the purge is a date-partition drop (see
-SparkAdminStore.delete_old_logs), so retention cost is O(partitions),
-not O(rows).
+rows older than ``days_to_keep`` by the runner's clock (``ctx.clock``)
+and then *test* that nothing older remains. On Spark the purge is a
+date-partition drop (SparkAdminStore.delete_old_logs), so retention
+cost is O(partitions), not O(rows).
 """
 
 from __future__ import annotations
@@ -30,6 +30,7 @@ class DeleteOldLogs(SparkJobSpec):
         self._store = store
         self._days = DaysToKeep(days_logs_to_keep).value
         self._min_seconds_between_runs = min_seconds_between_runs
+        self._cutoff = datetime.datetime.min
 
     @property
     def job_name(self) -> str:
@@ -40,30 +41,23 @@ class DeleteOldLogs(SparkJobSpec):
         return self._min_seconds_between_runs
 
     def run(self, ctx: JobContext) -> Optional[JobStatus]:
-        self._store.delete_old_logs(self._days)
+        day = (ctx.clock.now() - datetime.timedelta(days=self._days)).date()
+        self._cutoff = datetime.datetime.combine(day, datetime.time.min)
+        self._store.delete_old_logs(self._cutoff)
         ctx.logger.info(f"Deleted log entries older than {self._days} days old.")
-        self._store.delete_old_batches(self._days)
+        self._store.delete_old_batches(self._cutoff)
         ctx.logger.info(f"Deleted batch results older than {self._days} days old.")
         return JobStatus.success()
 
     def test(self, ctx: JobContext) -> List[SimpleTestResult]:
-        cutoff = datetime.datetime.combine(
-            (datetime.datetime.now() - datetime.timedelta(days=self._days)).date(),
-            datetime.time.min,
-        )
         earliest = self._store.earliest_log_ts("batch_log")
+        outcome = Result.success()
+        if earliest is not None and earliest < self._cutoff:
+            outcome = Result.failure(
+                f"The earliest batch log entry is from {earliest:%Y-%m-%d %H:%M:%S}"
+            )
         name = f"No log entries more than {self._days} days old"
-        if earliest is not None and earliest < cutoff:
-            return [
-                SimpleTestResult(
-                    test_name=name,
-                    outcome=Result.failure(
-                        f"The earliest batch log entry is from "
-                        f"{earliest.strftime('%Y-%m-%d %H:%M:%S')}"
-                    ),
-                )
-            ]
-        return [SimpleTestResult(test_name=name, outcome=Result.success())]
+        return [SimpleTestResult(test_name=name, outcome=outcome)]
 
 
 class CompactAdminLedger(SparkJobSpec):
@@ -100,17 +94,10 @@ class CompactAdminLedger(SparkJobSpec):
         return JobStatus.success()
 
     def test(self, ctx: JobContext) -> List[SimpleTestResult]:
-        name = "Ledger row counts unchanged by compaction"
+        outcome = Result.success()
         if self._counts_before != self._counts_after:
-            return [
-                SimpleTestResult(
-                    test_name=name,
-                    outcome=Result.failure(
-                        f"before={self._counts_before} after={self._counts_after}"
-                    ),
-                )
-            ]
-        return [SimpleTestResult(test_name=name, outcome=Result.success())]
+            outcome = Result.failure(f"before={self._counts_before} after={self._counts_after}")
+        return [SimpleTestResult(test_name="Ledger row counts unchanged by compaction", outcome=outcome)]
 
 
 @dataclasses.dataclass(frozen=True)

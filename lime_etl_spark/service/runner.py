@@ -24,9 +24,10 @@ threads sharing the one SparkSession, and the coordinating thread
 writes every ledger row. With one worker (``run_batch``) jobs run in
 the reference's sequential order.
 
-Spark-specific: per-job timeout is enforced by running the job body
-in a worker thread and cancelling the job's Spark job group on
-timeout — the Spark-native way to kill distributed work mid-flight.
+Spark-specific: every job body runs in a Spark job group named
+``batch_id:job_id:job_name``. A per-job timeout runs the body in its own
+thread and cancels that group on expiry — the Spark-native way to kill
+distributed work mid-flight.
 Parallel batches share the session via threads rather than processes
 (one JVM, many concurrent DAGs).
 """
@@ -399,7 +400,7 @@ def _run_job(
             )
         raise Exception(f"The following dependencies failed to execute: {errs}")
 
-    ctx = JobContext(spark=spark, logger=logger, resources=resources)
+    ctx = JobContext(spark=spark, logger=logger, resources=resources, clock=clock)
     group = f"{batch.batch_id}:{job_id}:{job.job_name}"
     status, millis = _run_with_retry(job, ctx, spark, logger, start, clock, group)
 
@@ -524,15 +525,16 @@ def _run_with_retry(
 def _run_with_timeout(
     job: SparkJobSpec, ctx: JobContext, spark: SparkSession, group: str
 ) -> Optional[JobStatus]:
-    """Run the body; with a timeout, in a thread whose Spark jobs carry
-    ``group`` (unique per batch and job) and are cancelled on expiry."""
-    if job.timeout_seconds is None:
-        return job.run(ctx)
+    """Run the body with its Spark jobs in job group ``group`` (unique
+    per batch and job, so the Spark UI maps back to ledger rows); with a
+    timeout, in a thread whose job group is cancelled on expiry."""
 
     def body() -> Optional[JobStatus]:
         spark.sparkContext.setJobGroup(group, f"job {job.job_name}", interruptOnCancel=True)
         return job.run(ctx)
 
+    if job.timeout_seconds is None:
+        return body()
     pool = ThreadPoolExecutor(max_workers=1)
     future = pool.submit(body)
     try:

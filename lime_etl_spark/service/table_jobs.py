@@ -14,16 +14,16 @@ write rows, then test they arrived). Here that pattern is first-class:
   (referential integrity, row-count deltas) that runs after its
   dependencies refresh.
 
-Scale notes: full refresh writes partitioned parquet straight through
-the DataFrameWriter (no driver materialization). Incremental refresh
-rewrites via tmp+rename, which is atomic locally; on an object-store
-lake the same call sites swap to a table format's transactional
-MERGE — the operator semantics (latest-wins on keys) are unchanged.
+Scale notes: both modes write parquet straight through the
+DataFrameWriter (no driver materialization) into a hidden sibling of
+the target, which sources/fs.py's overwrite_dir then swaps in, so a
+crash leaves the old target or the new one, never a partial one. On an
+object-store lake this call site becomes a table format's MERGE; the
+operator semantics (latest-wins on keys) are unchanged.
 """
 
 from __future__ import annotations
 
-import os
 from typing import Callable, List, Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -33,6 +33,7 @@ from lime_etl_spark.domain.specs import JobContext, SparkJobSpec
 from lime_etl_spark.domain.statuses import JobStatus, SimpleTestResult
 from lime_etl_spark.domain.value_objects import Result
 from lime_etl_spark.operators.etl import upsert
+from lime_etl_spark.sources.fs import overwrite_dir, path_exists
 
 
 class TableRefreshJob(SparkJobSpec):
@@ -91,40 +92,26 @@ class TableRefreshJob(SparkJobSpec):
     def run(self, ctx: JobContext) -> Optional[JobStatus]:
         from pyspark.sql import Observation
 
-        df = self._source(ctx.spark)
         # Observation rides the write action itself: the rows-written
         # metric is collected by the SAME job that writes — at 100 TB a
         # separate count() would be a second full pass over the output.
         obs = Observation(f"{self._name}_refresh")
-        if self._mode == "full" or not os.path.exists(self._target):
-            out = df.observe(obs, F.count(F.lit(1)).alias("rows_written"))
-            writer = out.write.mode("overwrite")
-            if self._partition_by:
-                writer = writer.partitionBy(*self._partition_by)
-            writer.parquet(self._target)
-            self.last_metrics = dict(obs.get)
-            ctx.logger.info(
-                f"[{self._name}] full refresh -> {self._target} "
-                f"({self.last_metrics['rows_written']} rows)"
-            )
-        else:
-            base = ctx.spark.read.parquet(self._target)
-            merged = upsert(base, df.dropDuplicates(self._keys), self._keys)
-            out = merged.observe(obs, F.count(F.lit(1)).alias("rows_written"))
-            tmp = self._target + ".tmp"
-            writer = out.write.mode("overwrite")
+
+        def write(tmp: str) -> str:
+            df, how = self._source(ctx.spark), f"full refresh -> {self._target}"
+            if self._mode == "incremental" and path_exists(ctx.spark, self._target):
+                base = ctx.spark.read.parquet(self._target)
+                df = upsert(base, df.dropDuplicates(self._keys), self._keys)
+                how = f"incremental upsert on {self._keys}"
+            writer = df.observe(obs, F.count(F.lit(1)).alias("rows_written")).write
             if self._partition_by:
                 writer = writer.partitionBy(*self._partition_by)
             writer.parquet(tmp)
-            import shutil
+            return how
 
-            shutil.rmtree(self._target)
-            os.rename(tmp, self._target)
-            self.last_metrics = dict(obs.get)
-            ctx.logger.info(
-                f"[{self._name}] incremental upsert on {self._keys} "
-                f"({self.last_metrics['rows_written']} rows)"
-            )
+        how = overwrite_dir(ctx.spark, self._target, write)
+        self.last_metrics = dict(obs.get)
+        ctx.logger.info(f"[{self._name}] {how} ({self.last_metrics['rows_written']} rows)")
         return JobStatus.success()
 
     def test(self, ctx: JobContext) -> List[SimpleTestResult]:

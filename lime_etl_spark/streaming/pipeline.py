@@ -39,7 +39,7 @@ from typing import Callable, Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from lime_etl_spark.sources.fs import path_exists, replace_dir
+from lime_etl_spark.sources.fs import overwrite_dir, path_exists
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import (
     DoubleType,
@@ -151,6 +151,40 @@ def sessionize_stream(
     )
 
 
+def _each_batch(stream: DataFrame, checkpoint_path: str, process: Callable) -> StreamingQuery:
+    """Run ``process(batch_df, batch_id)`` on every micro-batch available
+    now, checkpointed so a replayed batch is not applied twice."""
+    return (
+        stream.writeStream.outputMode("update")
+        .option("checkpointLocation", checkpoint_path)
+        .foreachBatch(process)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
+def _rewrite_each_batch(
+    stream: DataFrame,
+    checkpoint_path: str,
+    dst: str,
+    write: Callable[[str, DataFrame, Optional[DataFrame]], None],
+) -> StreamingQuery:
+    """_each_batch for a sink that rewrites one parquet directory:
+    ``write(tmp, batch_df, current)`` merges a micro-batch into
+    ``current`` (``dst`` read back, None before the first batch), and
+    sources/fs.py's crash-safe overwrite_dir swaps ``tmp`` over ``dst``."""
+    spark = stream.sparkSession
+
+    def process(batch_df: DataFrame, batch_id: int) -> None:
+        def rewrite(tmp: str) -> None:
+            current = spark.read.parquet(dst) if path_exists(spark, dst) else None
+            write(tmp, batch_df, current)
+
+        overwrite_dir(spark, dst, rewrite)
+
+    return _each_batch(stream, checkpoint_path, process)
+
+
 def stream_upsert_sink(
     stream: DataFrame,
     target_path: str,
@@ -164,31 +198,18 @@ def stream_upsert_sink(
     path. The checkpoint makes replays idempotent: re-upserting the
     same batch is a no-op because the keys already hold those rows.
     """
-    spark = stream.sparkSession
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
+    def write(tmp: str, batch_df: DataFrame, base: Optional[DataFrame]) -> None:
         if transform is not None:
             batch_df = transform(batch_df)
         increment = batch_df.dropDuplicates(keys)
-        if path_exists(spark, target_path):
-            base = spark.read.parquet(target_path)
-            merged = upsert(base, increment, keys)
-        else:
-            merged = increment
+        merged = increment if base is None else upsert(base, increment, keys)
         # rewrite-on-merge: parquet has no in-place update; a real lake
         # table format would make this a transactional MERGE. Localize
         # the rewrite by partitioning the target on a key prefix.
-        tmp = target_path + ".tmp"
-        merged.write.mode("overwrite").parquet(tmp)
-        replace_dir(spark, tmp, target_path)
+        merged.write.parquet(tmp)
 
-    return (
-        stream.writeStream.outputMode("update")
-        .option("checkpointLocation", checkpoint_path)
-        .foreachBatch(process)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _rewrite_each_batch(stream, checkpoint_path, target_path, write)
 
 
 
@@ -292,15 +313,7 @@ def run_available_now(
 ) -> DataFrame:
     """Drain everything currently in the source into a memory sink and
     return the result as a batch DataFrame (test/driver harness)."""
-    q = (
-        stream.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(timeout_s)
-    return stream.sparkSession.table(query_name)
+    return run_with_metrics(stream, query_name, output_mode, timeout_s)[0]
 
 
 def dedup_stream(
@@ -350,15 +363,13 @@ def stream_scd2_sink(
     the per-batch cost tracks the hot-key set. The parquet rewrite is
     the same rewrite-on-merge trade documented on stream_upsert_sink.
     """
-    spark = stream.sparkSession
     tb = list(tiebreak or [])
 
     from lime_etl_spark.operators.etl import scd2
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
+    def write(tmp: str, batch_df: DataFrame, hist: Optional[DataFrame]) -> None:
         changes = batch_df.dropDuplicates()
-        if path_exists(spark, target_path):
-            hist = spark.read.parquet(target_path)
+        if hist is not None:
             touched = changes.select(*keys).distinct()
             untouched = hist.join(touched, keys, "left_anti")
             reopened = hist.join(touched, keys, "left_semi").drop(*SCD2_COLS)
@@ -368,17 +379,9 @@ def stream_scd2_sink(
             )
         else:
             final = scd2(changes, keys, F.unix_micros("ts"), tb)
-        tmp = target_path + ".tmp"
-        final.write.mode("overwrite").parquet(tmp)
-        replace_dir(spark, tmp, target_path)
+        final.write.parquet(tmp)
 
-    return (
-        stream.writeStream.outputMode("update")
-        .option("checkpointLocation", checkpoint_path)
-        .foreachBatch(process)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _rewrite_each_batch(stream, checkpoint_path, target_path, write)
 
 
 def kafka_reader_options(
@@ -632,13 +635,7 @@ def stream_near_dup_sink(
         new_bk.unpersist()
         new_sh.unpersist()
 
-    return (
-        doc_stream.writeStream.outputMode("update")
-        .option("checkpointLocation", checkpoint_path)
-        .foreachBatch(process)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _each_batch(doc_stream, checkpoint_path, process)
 
 
 def stream_embedding_near_dup_sink(
@@ -737,13 +734,7 @@ def stream_embedding_near_dup_sink(
         new_bd.unpersist()
         new_vec.unpersist()
 
-    return (
-        vec_stream.writeStream.outputMode("update")
-        .option("checkpointLocation", checkpoint_path)
-        .foreachBatch(process)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _each_batch(vec_stream, checkpoint_path, process)
 
 
 class DqGateResult(dict):
@@ -787,11 +778,7 @@ def with_dq_gate(
         n_null = max((prof[f"n_null_{c}"] for c in check_cols), default=0)
         null_rate = (n_null / n) if n else 0.0
         passed = n >= min_rows and null_rate <= max_null_rate
-        gate_ledger[batch_id] = {
-            "passed": passed,
-            "n_rows": n,
-            "null_rate": null_rate,
-        }
+        gate_ledger[batch_id] = {"passed": passed, "n_rows": n, "null_rate": null_rate}
         if not passed:
             if n:
                 batch_df.write.mode("overwrite").parquet(
@@ -819,8 +806,6 @@ def stream_cms_sink(
     """
     from lime_etl_spark.operators.profiling import CMS_DEPTH, _cms_bucket
 
-    spark = stream.sparkSession
-
     def batch_sketch(df: DataFrame) -> DataFrame:
         votes = df.select(
             F.explode(
@@ -837,10 +822,9 @@ def stream_cms_sink(
         ).select("v.j", "v.bucket")
         return votes.groupBy("j", "bucket").agg(F.count(F.lit(1)).alias("cnt"))
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
+    def write(tmp: str, batch_df: DataFrame, base: Optional[DataFrame]) -> None:
         inc = batch_sketch(batch_df)
-        if path_exists(spark, sketch_path):
-            base = spark.read.parquet(sketch_path)
+        if base is not None:
             merged = (
                 base.unionByName(inc)
                 .groupBy("j", "bucket")
@@ -848,14 +832,6 @@ def stream_cms_sink(
             )
         else:
             merged = inc.select("j", "bucket", F.col("cnt").cast("bigint").alias("cnt"))
-        tmp = sketch_path + ".tmp"
-        merged.coalesce(1).write.mode("overwrite").parquet(tmp)
-        replace_dir(spark, tmp, sketch_path)
+        merged.coalesce(1).write.parquet(tmp)
 
-    return (
-        stream.writeStream.outputMode("update")
-        .option("checkpointLocation", checkpoint_path)
-        .foreachBatch(process)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _rewrite_each_batch(stream, checkpoint_path, sketch_path, write)

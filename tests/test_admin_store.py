@@ -103,7 +103,7 @@ def test_log_append_and_partition_retention(store):
 
     assert store.earliest_log_ts("batch_log") == old
 
-    store.delete_old_logs(days_to_keep=3)
+    store.delete_old_logs(cutoff=NOW - datetime.timedelta(days=3))
 
     remaining = store.read_log("batch_log").collect()
     assert [r["message"] for r in remaining] == ["fresh entry"]
@@ -511,7 +511,7 @@ def test_index_matches_fresh_store_after_rewrites(tmp_path, rewrite, by):
     if rewrite == "compact":
         rewriter.compact()
     else:
-        rewriter.delete_old_batches(days_to_keep=3)
+        rewriter.delete_old_batches(cutoff=now - datetime.timedelta(days=3))
     _assert_index_matches_fresh(warm)
     if rewrite == "delete_old_batches":
         assert warm.get_batch("old-b0") is None and warm.get_last_successful_ts("old-job1") is None
@@ -611,7 +611,7 @@ def test_earliest_log_ts_none_without_rows(tmp_path):
     store.log("job_log", LogLevel.INFO, "newer", "b1", "j", ts=NOW)
     assert store.earliest_log_ts("batch_log") == NOW - datetime.timedelta(days=10)
     assert store.earliest_log_ts("job_log") == NOW
-    store.delete_old_logs(days_to_keep=3)
+    store.delete_old_logs(cutoff=NOW - datetime.timedelta(days=3))
     assert store.earliest_log_ts("batch_log") is None
 
 
@@ -685,3 +685,120 @@ def test_index_matches_fresh_store_after_threaded_appends_and_lookups(tmp_path):
     _run_threads(8, body)
     _assert_index_matches_fresh(store)
     assert len(store.get_job_results("w7-9-b0")) == 3
+
+
+# --- crash safety of the rewrites ------------------------------------------------
+
+
+class _Crash(BaseException):
+    """A crash injected into one filesystem step of a rewrite; a
+    BaseException, so no ``except Exception`` can tidy up after it."""
+
+
+def _inject_crash(monkeypatch, step, which):
+    """Make one step of the write-then-swap of a directory whose name
+    starts with ``which`` raise: ``write`` (after the temp file is
+    written), ``aside`` (renaming the old directory aside), ``forward``
+    (renaming the temp directory into place) or ``drop`` (deleting the
+    aside directory)."""
+    import os
+
+    import pyarrow.parquet as pq_mod
+
+    from lime_etl_spark.sources.fs import _Fs
+
+    def ours(path, kind):
+        name = os.path.basename(path.rstrip("/"))
+        return name.startswith(f".{which}") and f".{kind}-" in name
+
+    real_write, real_rename, real_delete = pq_mod.write_table, _Fs.rename, _Fs.delete
+
+    def write_table(tbl, where, *args, **kwargs):
+        real_write(tbl, where, *args, **kwargs)
+        if step == "write" and ours(os.path.dirname(where), "tmp"):
+            raise _Crash(step)
+
+    def rename(self, src, dst):
+        if (step == "aside" and ours(dst, "old")) or (step == "forward" and ours(src, "tmp")):
+            raise _Crash(step)
+        real_rename(self, src, dst)
+
+    def delete(self, path):
+        if step == "drop" and ours(path, "old"):
+            raise _Crash(step)
+        real_delete(self, path)
+
+    monkeypatch.setattr(pq_mod, "write_table", write_table)
+    monkeypatch.setattr(_Fs, "rename", rename)
+    monkeypatch.setattr(_Fs, "delete", delete)
+
+
+def _hidden_entries(root):
+    import os
+
+    return sorted(
+        os.path.relpath(os.path.join(d, n), root)
+        for d, dirs, files in os.walk(root)
+        for n in dirs + files
+        if n.startswith(".")
+    )
+
+
+def _logs(spark, root):
+    store = SparkAdminStore(spark, root)
+    rows = store.read_log("batch_log").collect() + store.read_log("job_log").collect()
+    earliest = (store.earliest_log_ts("batch_log"), store.earliest_log_ts("job_log"))
+    return sorted((r["entry_id"], r["message"], r["log_date"]) for r in rows), earliest
+
+
+@pytest.mark.parametrize("step", ["write", "aside", "forward", "drop"])
+@pytest.mark.parametrize(
+    "rewrite,which",
+    [("compact", "jobs"), ("compact", "log_date="), ("delete_old_batches", "jobs")],
+)
+def test_rewrite_crash_at_any_step_loses_nothing(spark, tmp_path, monkeypatch, rewrite, which, step):
+    """A crash at any filesystem step of a ledger rewrite leaves every
+    getter of a fresh store, and the log reads, as they were before it,
+    or where a table's swap got past the aside rename, as a clean
+    rewrite leaves them; re-running the rewrite then matches the clean
+    run, and leaves no hidden temp or aside directory."""
+    import shutil
+
+    root, clean_root = str(tmp_path / "admin"), str(tmp_path / "clean")
+    now = datetime.datetime.now()
+    cutoff = now - datetime.timedelta(days=3)
+    store = SparkAdminStore(None, root)
+    _fill_ledger(store, now - datetime.timedelta(days=30), "old")
+    _fill_ledger(store, now - datetime.timedelta(hours=1), "new")
+    for i in range(4):  # two files in each of two log partitions
+        for day in (0, 1):
+            ts = now - datetime.timedelta(days=day)
+            store.log("job_log", LogLevel.INFO, f"line {i}", "b", "job", ts=ts)
+            store.log("batch_log", LogLevel.INFO, f"line {i}", "b", ts=ts)
+        if i % 2:
+            store.flush_logs()
+    shutil.copytree(root, clean_root)
+
+    def run(s):
+        return s.compact() if rewrite == "compact" else s.delete_old_batches(cutoff)
+
+    run(SparkAdminStore(None, clean_root))
+    keys = _ledger_keys(root)
+    before = _getters(SparkAdminStore(None, root), keys)
+    clean = _getters(SparkAdminStore(None, clean_root), keys)
+    logs_before = _logs(spark, root)
+    assert _hidden_entries(clean_root) == []
+
+    with monkeypatch.context() as m:
+        _inject_crash(m, step, which)
+        with pytest.raises(_Crash):
+            run(SparkAdminStore(None, root))
+
+    got = _getters(SparkAdminStore(None, root), keys)
+    bad = [k for k in got if got[k] not in (before[k], clean[k])]
+    assert not bad, f"after a crash at {step}, getters lost state: {bad[:5]}"
+    assert _logs(spark, root) == logs_before
+    run(SparkAdminStore(None, root))
+    assert _getters(SparkAdminStore(None, root), keys) == clean
+    assert _logs(spark, root) == logs_before
+    assert _hidden_entries(root) == []

@@ -516,6 +516,47 @@ def test_admin_batch_prebuilt(spark, store, tmp_path):
     assert result.broken_jobs == set()
 
 
+def test_admin_batch_retention_reads_the_injected_clock(spark, store):
+    """Retention keeps what the runner's clock calls recent: under a
+    fake clock set in 2020 the admin batch deletes none of the rows a
+    user batch just wrote on that clock."""
+    import datetime
+
+    from lime_etl_spark.domain.clock import FakeClockAdapter
+    from lime_etl_spark.service.admin_jobs import AdminConfig, admin_batch
+
+    clock = FakeClockAdapter(datetime.datetime(2020, 1, 1))
+    user = SparkBatchSpec(name="nightly", jobs=[SimpleJobSpec(name="load", run=_ok)])
+    run_batch(user, spark, store, clock=clock)
+    clock.advance(3600)
+    cfg = AdminConfig(admin_dir=store.root, min_seconds_between_runs=0)
+    admin = run_batch(admin_batch(store, cfg), spark, store, clock=clock)
+    assert admin.broken_jobs == set()
+
+    fresh = SparkAdminStore(spark, store.root)
+    kept = fresh.get_batch(user.batch_id)
+    assert kept is not None and not kept.running
+    assert [r.job_name for r in fresh.get_job_results(user.batch_id)] == ["load"]
+    assert fresh.get_last_successful_ts("load") == datetime.datetime(2020, 1, 1)
+
+
+def test_untimed_job_spark_actions_carry_its_job_group(spark, store):
+    """Every job body runs in the Spark job group
+    ``batch_id:job_id:job_name``, with or without a timeout, so the
+    Spark UI maps its jobs back to the ledger row."""
+
+    def act(ctx):
+        ctx.spark.range(10).count()
+        return JobStatus.success()
+
+    batch = SparkBatchSpec(name="tagged", jobs=[SimpleJobSpec(name="act", run=act)])
+    result = run_batch(batch, spark, store)
+    (jr,) = result.job_results
+    assert jr.status.is_success
+    group = f"{batch.batch_id}:{jr.id}:act"
+    assert len(spark.sparkContext.statusTracker().getJobIdsForGroup(group)) >= 1
+
+
 def test_retry_policy_backoff_via_clock(spark, store):
     """Exponential backoff between retries runs through the injected
     clock: two failures with base=10,factor=2 advance the FakeClock by

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from lime_etl_spark.adapter.admin_store import SparkAdminStore
@@ -128,3 +129,75 @@ def test_refresh_observes_rows_written_without_extra_scan(spark, sf_dir, tmp_pat
     n = spark.read.parquet(target).count()
     assert job.last_metrics["rows_written"] == n
     assert str(n) in ctx.logger.last
+
+
+class _Crash(BaseException):
+    """A crash injected into one filesystem step of the target's swap."""
+
+
+class _Log:
+    def info(self, msg):
+        self.last = msg
+
+
+@pytest.mark.parametrize("step", ["write", "aside", "forward", "drop"])
+def test_incremental_refresh_crash_at_any_step_loses_no_rows(spark, tmp_path, monkeypatch, step):
+    """A crash at any filesystem step of an incremental refresh leaves
+    no visible temp directory beside the target, and re-running the job
+    gives the same rows as a run that never crashed."""
+    import os
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from lime_etl_spark.domain.specs import JobContext
+    from lime_etl_spark.sources.fs import _Fs
+
+    base = [(k, k % 3, f"v{k}") for k in range(60)]
+    delta = [(k, k % 3, f"w{k}") for k in range(40, 90)]
+
+    def refresh(lake, mode, rows):
+        job = TableRefreshJob(
+            name="orders_mart", target_path=os.path.join(lake, "orders"), mode=mode,
+            keys=["k"], partition_by=["p"],
+            source=lambda s: s.createDataFrame(rows, "k long, p long, v string"),
+        )
+        job.run(JobContext(spark=spark, logger=_Log()))
+
+    def target_rows(lake):
+        return sorted(spark.read.parquet(os.path.join(lake, "orders")).collect())
+
+    clean, lake = str(tmp_path / "clean"), str(tmp_path / "lake")
+    for d in (clean, lake):
+        refresh(d, "full", base)
+    refresh(clean, "incremental", delta)
+
+    def ours(path, kind):
+        return os.path.basename(path.rstrip("/")).startswith(f".orders.{kind}-")
+
+    real_parquet, real_rename, real_delete = DataFrameWriter.parquet, _Fs.rename, _Fs.delete
+
+    def parquet(self, path, *args, **kwargs):
+        real_parquet(self, path, *args, **kwargs)
+        if step == "write" and ours(path, "tmp"):
+            raise _Crash(step)
+
+    def rename(self, src, dst):
+        if (step == "aside" and ours(dst, "old")) or (step == "forward" and ours(src, "tmp")):
+            raise _Crash(step)
+        real_rename(self, src, dst)
+
+    def delete(self, path):
+        if step == "drop" and ours(path, "old"):
+            raise _Crash(step)
+        real_delete(self, path)
+
+    with monkeypatch.context() as m:
+        m.setattr(DataFrameWriter, "parquet", parquet)
+        m.setattr(_Fs, "rename", rename)
+        m.setattr(_Fs, "delete", delete)
+        with pytest.raises(_Crash):
+            refresh(lake, "incremental", delta)
+    assert {n for n in os.listdir(lake) if not n.startswith(".")} <= {"orders"}
+    refresh(lake, "incremental", delta)
+    assert target_rows(lake) == target_rows(clean)
+    assert os.listdir(lake) == ["orders"]
