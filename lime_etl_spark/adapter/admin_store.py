@@ -57,6 +57,7 @@ from pyspark.sql.types import (
     BooleanType, LongType, StringType, StructField, StructType, TimestampType,
 )
 
+from lime_etl_spark.domain.clock import ClockAdapter
 from lime_etl_spark.domain.statuses import BatchStatus, JobResult, JobState, JobStatus, TestResult
 from lime_etl_spark.domain.value_objects import ExecutionMillis, LogLevel, LogMessage, Result
 from lime_etl_spark.sources.fs import overwrite_dir, settle_dirs
@@ -502,9 +503,9 @@ class SparkAdminStore:
         message: str,
         batch_id: Optional[str],
         job_name: Optional[str] = None,
-        ts: Optional[datetime.datetime] = None,
+        *,
+        ts: datetime.datetime,
     ) -> None:
-        ts = ts or datetime.datetime.now()
         row = {
             "batch_id": batch_id,
             "job_name": job_name,
@@ -588,24 +589,27 @@ def _latest_versions(df: DataFrame, key: str) -> DataFrame:
 
 
 class _StoreLogger:
-    """Log lines into one of the store's log tables."""
+    """Log lines into one of the store's log tables, stamped by the
+    runner's clock."""
 
     table = ""
 
     def __init__(
         self, store: SparkAdminStore, batch_id: str, job_name: Optional[str] = None,
-        to_console: bool = False,
+        to_console: bool = False, *, clock: ClockAdapter,
     ):
         self.store = store
         self.batch_id = batch_id
         self.job_name = job_name
         self.to_console = to_console
+        self.clock = clock
 
     def _log(self, level: LogLevel, message: str) -> None:
+        ts = self.clock.now()
         if self.to_console:
             tag = f" [{self.job_name}]" if self.job_name else ""
-            print(f"{datetime.datetime.now().isoformat()} [{level}]{tag} {message}")
-        self.store.log(self.table, level, message, self.batch_id, self.job_name)
+            print(f"{ts.isoformat()} [{level}]{tag} {message}")
+        self.store.log(self.table, level, message, self.batch_id, self.job_name, ts=ts)
 
     def debug(self, message: str) -> None:
         self._log(LogLevel.DEBUG, message)
@@ -625,11 +629,14 @@ class BatchLogger(_StoreLogger):
 
     table = "batch_log"
 
-    def __init__(self, store: SparkAdminStore, batch_id: str, to_console: bool = False):
-        super().__init__(store, batch_id, None, to_console)
+    def __init__(
+        self, store: SparkAdminStore, batch_id: str, to_console: bool = False, *,
+        clock: ClockAdapter,
+    ):
+        super().__init__(store, batch_id, None, to_console, clock=clock)
 
     def create_job_logger(self, job_name: str) -> "JobLogger":
-        return JobLogger(self.store, self.batch_id, job_name, self.to_console)
+        return JobLogger(self.store, self.batch_id, job_name, self.to_console, clock=self.clock)
 
 
 class JobLogger(_StoreLogger):

@@ -10,13 +10,25 @@ Same contract surface as the reference JobSpec (job_spec.py:18):
 ``dependencies``, ``min_seconds_between_refreshes``,
 ``min_seconds_between_tests``, ``max_retries``, ``timeout_seconds``,
 ``run``, ``test``, ``on_execution_error``, ``on_test_failure``.
+
+Settings are ``SparkJobSpec.__init__`` arguments, validated once and
+stored as the plain attributes the runner reads (``job.job_name``, ...).
+A custom job passes them up and overrides only the hooks::
+
+    class ExportOrders(SparkJobSpec):
+        def __init__(self, target: str):
+            super().__init__(name="export_orders", dependencies=["load_orders"])
+            self.target = target
+
+        def run(self, ctx):  # returning None means success
+            ctx.spark.read.parquet("/lake/orders").write.parquet(self.target)
 """
 
 from __future__ import annotations
 
 import abc
 from dataclasses import dataclass, field
-from typing import TYPE_CHECKING, Any, Callable, Dict, List, Optional, Sequence, Tuple
+from typing import TYPE_CHECKING, Any, Callable, Dict, List, Optional, Sequence
 
 from pyspark.sql import SparkSession
 
@@ -77,37 +89,29 @@ class RetryPolicy:
 
 
 class SparkJobSpec(abc.ABC):
-    """Abstract job: override ``run`` (and optionally ``test``)."""
+    """Abstract job: pass settings to ``__init__``; override ``run`` (and maybe ``test``)."""
 
-    @property
-    @abc.abstractmethod
-    def job_name(self) -> str:
-        raise NotImplementedError
-
-    @property
-    def dependencies(self) -> Tuple[str, ...]:
-        return tuple()
-
-    @property
-    def min_seconds_between_refreshes(self) -> int:
-        return 0
-
-    @property
-    def min_seconds_between_tests(self) -> int:
-        return 0
-
-    @property
-    def max_retries(self) -> int:
-        return 0
-
-    @property
-    def timeout_seconds(self) -> Optional[int]:
-        return None
-
-    @property
-    def retry_policy(self) -> RetryPolicy:
-        """Backoff between retries; default = immediate (reference parity)."""
-        return RetryPolicy()
+    def __init__(
+        self,
+        *,
+        name: str,
+        dependencies: Sequence[str] = (),
+        timeout_seconds: Optional[int] = None,
+        max_retries: int = 0,
+        min_seconds_between_refreshes: int = 0,
+        min_seconds_between_tests: int = 0,
+        retry_policy: Optional[RetryPolicy] = None,
+    ):
+        self.job_name = JobName(name).value
+        self.dependencies = tuple(dependencies)
+        self.timeout_seconds = TimeoutSeconds(timeout_seconds).value
+        self.max_retries = MaxRetries(max_retries).value
+        self.min_seconds_between_refreshes = MinSecondsBetweenRefreshes(
+            min_seconds_between_refreshes
+        ).value
+        self.min_seconds_between_tests = MinSecondsBetweenTests(min_seconds_between_tests).value
+        # Backoff between retries; default = immediate (reference parity).
+        self.retry_policy = retry_policy or RetryPolicy()
 
     @abc.abstractmethod
     def run(self, ctx: JobContext) -> Optional[JobStatus]:
@@ -123,9 +127,7 @@ class SparkJobSpec(abc.ABC):
         """Optionally return a replacement job to run instead."""
         return None
 
-    def on_test_failure(
-        self, test_results: Sequence[SimpleTestResult]
-    ) -> Optional["SparkJobSpec"]:
+    def on_test_failure(self, test_results: Sequence[SimpleTestResult]) -> Optional["SparkJobSpec"]:
         return None
 
     def __repr__(self) -> str:
@@ -138,13 +140,6 @@ class SparkJobSpec(abc.ABC):
         if other.__class__ is self.__class__:
             return self.job_name == other.job_name  # type: ignore[attr-defined]
         return NotImplemented
-
-    def _validate(self) -> None:
-        JobName(self.job_name)
-        MaxRetries(self.max_retries)
-        TimeoutSeconds(self.timeout_seconds)
-        MinSecondsBetweenRefreshes(self.min_seconds_between_refreshes)
-        MinSecondsBetweenTests(self.min_seconds_between_tests)
 
 
 class SimpleJobSpec(SparkJobSpec):
@@ -168,45 +163,16 @@ class SimpleJobSpec(SparkJobSpec):
             Callable[[Sequence[SimpleTestResult]], Optional[SparkJobSpec]]
         ] = None,
     ):
-        self._name = JobName(name).value
+        super().__init__(
+            name=name, dependencies=dependencies, timeout_seconds=timeout_seconds,
+            max_retries=max_retries,
+            min_seconds_between_refreshes=min_seconds_between_refreshes,
+            min_seconds_between_tests=min_seconds_between_tests, retry_policy=retry_policy,
+        )
         self._run = run
         self._test = test
-        self._dependencies = tuple(dependencies)
-        self._timeout_seconds = TimeoutSeconds(timeout_seconds).value
-        self._max_retries = MaxRetries(max_retries).value
-        self._min_refresh = MinSecondsBetweenRefreshes(min_seconds_between_refreshes).value
-        self._min_tests = MinSecondsBetweenTests(min_seconds_between_tests).value
-        self._retry_policy = retry_policy or RetryPolicy()
         self._on_execution_error = on_execution_error
         self._on_test_failure = on_test_failure
-
-    @property
-    def job_name(self) -> str:
-        return self._name
-
-    @property
-    def dependencies(self) -> Tuple[str, ...]:
-        return self._dependencies
-
-    @property
-    def timeout_seconds(self) -> Optional[int]:
-        return self._timeout_seconds
-
-    @property
-    def max_retries(self) -> int:
-        return self._max_retries
-
-    @property
-    def min_seconds_between_refreshes(self) -> int:
-        return self._min_refresh
-
-    @property
-    def min_seconds_between_tests(self) -> int:
-        return self._min_tests
-
-    @property
-    def retry_policy(self) -> RetryPolicy:
-        return self._retry_policy
 
     def run(self, ctx: JobContext) -> Optional[JobStatus]:
         return self._run(ctx)
@@ -217,9 +183,7 @@ class SimpleJobSpec(SparkJobSpec):
     def on_execution_error(self, error_message: str) -> Optional[SparkJobSpec]:
         return self._on_execution_error(error_message) if self._on_execution_error else None
 
-    def on_test_failure(
-        self, test_results: Sequence[SimpleTestResult]
-    ) -> Optional[SparkJobSpec]:
+    def on_test_failure(self, test_results: Sequence[SimpleTestResult]) -> Optional[SparkJobSpec]:
         return self._on_test_failure(test_results) if self._on_test_failure else None
 
 

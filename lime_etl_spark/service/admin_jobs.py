@@ -5,6 +5,10 @@ rows older than ``days_to_keep`` by the runner's clock (``ctx.clock``)
 and then *test* that nothing older remains. On Spark the purge is a
 date-partition drop (SparkAdminStore.delete_old_logs), so retention
 cost is O(partitions), not O(rows).
+
+Both jobs take their fixed names and map ``min_seconds_between_runs``
+to the refresh interval through ``SparkJobSpec.__init__``, which holds
+and validates every job setting.
 """
 
 from __future__ import annotations
@@ -27,18 +31,12 @@ class DeleteOldLogs(SparkJobSpec):
         days_logs_to_keep: int = 3,
         min_seconds_between_runs: int = 0,
     ):
+        super().__init__(
+            name="delete_old_logs", min_seconds_between_refreshes=min_seconds_between_runs
+        )
         self._store = store
         self._days = DaysToKeep(days_logs_to_keep).value
-        self._min_seconds_between_runs = min_seconds_between_runs
         self._cutoff = datetime.datetime.min
-
-    @property
-    def job_name(self) -> str:
-        return "delete_old_logs"
-
-    @property
-    def min_seconds_between_refreshes(self) -> int:
-        return self._min_seconds_between_runs
 
     def run(self, ctx: JobContext) -> Optional[JobStatus]:
         day = (ctx.clock.now() - datetime.timedelta(days=self._days)).date()
@@ -72,18 +70,12 @@ class CompactAdminLedger(SparkJobSpec):
     """
 
     def __init__(self, store: SparkAdminStore, min_seconds_between_runs: int = 0):
+        super().__init__(
+            name="compact_admin_ledger", min_seconds_between_refreshes=min_seconds_between_runs
+        )
         self._store = store
-        self._min_seconds_between_runs = min_seconds_between_runs
         self._counts_before: dict = {}
         self._counts_after: dict = {}
-
-    @property
-    def job_name(self) -> str:
-        return "compact_admin_ledger"
-
-    @property
-    def min_seconds_between_refreshes(self) -> int:
-        return self._min_seconds_between_runs
 
     def run(self, ctx: JobContext) -> Optional[JobStatus]:
         self._counts_before = self._store.row_counts()
@@ -112,9 +104,7 @@ class AdminConfig:
     min_seconds_between_runs: int = 12 * 60 * 60  # admin_batch.py:20
 
 
-def admin_batch(
-    store: SparkAdminStore, config: AdminConfig
-) -> "SparkBatchSpec":
+def admin_batch(store: SparkAdminStore, config: AdminConfig) -> "SparkBatchSpec":
     """The prebuilt housekeeping batch (reference service/admin/
     admin_batch.py): a batch named "admin" that purges old logs and —
     Spark-ledger specific — compacts the append-only admin parquet.
@@ -125,13 +115,7 @@ def admin_batch(
     return SparkBatchSpec(
         name="admin",
         jobs=[
-            DeleteOldLogs(
-                store,
-                days_logs_to_keep=config.days_logs_to_keep,
-                min_seconds_between_runs=config.min_seconds_between_runs,
-            ),
-            CompactAdminLedger(
-                store, min_seconds_between_runs=config.min_seconds_between_runs
-            ),
+            DeleteOldLogs(store, config.days_logs_to_keep, config.min_seconds_between_runs),
+            CompactAdminLedger(store, config.min_seconds_between_runs),
         ],
     )

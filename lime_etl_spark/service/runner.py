@@ -173,7 +173,7 @@ def _run_batch(
     row and the delta. On an error it saves the failed row and re-raises."""
     clock = clock or LocalClockAdapter()
     start = clock.now()
-    logger = BatchLogger(store, batch.batch_id, log_to_console)
+    logger = BatchLogger(store, batch.batch_id, log_to_console, clock=clock)
     previous = store.get_previous_batch(batch.batch_name, exclude_id=batch.batch_id)
     store.save_batch(
         BatchStatus(

@@ -20,6 +20,10 @@ the target, which sources/fs.py's overwrite_dir then swaps in, so a
 crash leaves the old target or the new one, never a partial one. On an
 object-store lake this call site becomes a table format's MERGE; the
 operator semantics (latest-wins on keys) are unchanged.
+
+Scheduling settings (name, dependencies, retries, timeout, refresh
+interval) are forwarded to ``SparkJobSpec.__init__``, which validates
+and holds them; these classes keep only their own refresh/test state.
 """
 
 from __future__ import annotations
@@ -56,38 +60,17 @@ class TableRefreshJob(SparkJobSpec):
             raise ValueError(f"mode must be full|incremental, got {mode!r}")
         if mode == "incremental" and not keys:
             raise ValueError("incremental mode requires keys")
-        self._name = name
+        super().__init__(
+            name=name, dependencies=dependencies, max_retries=max_retries,
+            timeout_seconds=timeout_seconds,
+            min_seconds_between_refreshes=min_seconds_between_refreshes,
+        )
         self._source = source
         self._target = target_path
         self._mode = mode
         self._keys = list(keys or [])
         self._partition_by = list(partition_by or [])
         self._expect_min_rows = expect_min_rows
-        self._dependencies = tuple(dependencies)
-        self._max_retries = max_retries
-        self._timeout = timeout_seconds
-        self._min_refresh = min_seconds_between_refreshes
-        self._validate()
-
-    @property
-    def job_name(self) -> str:
-        return self._name
-
-    @property
-    def dependencies(self):
-        return self._dependencies
-
-    @property
-    def max_retries(self) -> int:
-        return self._max_retries
-
-    @property
-    def timeout_seconds(self) -> Optional[int]:
-        return self._timeout
-
-    @property
-    def min_seconds_between_refreshes(self) -> int:
-        return self._min_refresh
 
     def run(self, ctx: JobContext) -> Optional[JobStatus]:
         from pyspark.sql import Observation
@@ -95,7 +78,7 @@ class TableRefreshJob(SparkJobSpec):
         # Observation rides the write action itself: the rows-written
         # metric is collected by the SAME job that writes — at 100 TB a
         # separate count() would be a second full pass over the output.
-        obs = Observation(f"{self._name}_refresh")
+        obs = Observation(f"{self.job_name}_refresh")
 
         def write(tmp: str) -> str:
             df, how = self._source(ctx.spark), f"full refresh -> {self._target}"
@@ -111,36 +94,31 @@ class TableRefreshJob(SparkJobSpec):
 
         how = overwrite_dir(ctx.spark, self._target, write)
         self.last_metrics = dict(obs.get)
-        ctx.logger.info(f"[{self._name}] {how} ({self.last_metrics['rows_written']} rows)")
+        ctx.logger.info(f"[{self.job_name}] {how} ({self.last_metrics['rows_written']} rows)")
         return JobStatus.success()
 
     def test(self, ctx: JobContext) -> List[SimpleTestResult]:
+        # One read of the written target: with keys, a single aggregate
+        # over the per-key counts returns the row total and the
+        # duplicated-key count together.
         out = ctx.spark.read.parquet(self._target)
-        results = []
-        n = out.count()
-        results.append(
-            SimpleTestResult(
-                test_name=f"{self._name}: at least {self._expect_min_rows} rows",
-                outcome=Result.success()
-                if n >= self._expect_min_rows
-                else Result.failure(f"only {n} rows"),
-            )
-        )
         if self._keys:
-            dups = (
-                out.groupBy(*self._keys)
-                .agg(F.count(F.lit(1)).alias("n"))
-                .where(F.col("n") > 1)
-                .count()
-            )
-            results.append(
-                SimpleTestResult(
-                    test_name=f"{self._name}: unique on {self._keys}",
-                    outcome=Result.success()
-                    if dups == 0
-                    else Result.failure(f"{dups} duplicated keys"),
-                )
-            )
+            per_key = out.groupBy(*self._keys).count()
+            n, dups = per_key.agg(
+                F.coalesce(F.sum("count"), F.lit(0)), F.count(F.when(F.col("count") > 1, 1))
+            ).first()
+        else:
+            n, dups = out.count(), 0
+
+        def check(what: str, failure: Optional[str]) -> SimpleTestResult:
+            outcome = Result.failure(failure) if failure else Result.success()
+            return SimpleTestResult(test_name=f"{self.job_name}: {what}", outcome=outcome)
+
+        floor = self._expect_min_rows
+        results = [check(f"at least {floor} rows", f"only {n} rows" if n < floor else None)]
+        if self._keys:
+            dup_failure = f"{dups} duplicated keys" if dups else None
+            results.append(check(f"unique on {self._keys}", dup_failure))
         return results
 
 
@@ -155,18 +133,8 @@ class DataTestJob(SparkJobSpec):
         checks: Sequence[Callable[[SparkSession], SimpleTestResult]],
         dependencies: Sequence[str] = (),
     ):
-        self._name = name
+        super().__init__(name=name, dependencies=dependencies)
         self._checks = list(checks)
-        self._dependencies = tuple(dependencies)
-        self._validate()
-
-    @property
-    def job_name(self) -> str:
-        return self._name
-
-    @property
-    def dependencies(self):
-        return self._dependencies
 
     def run(self, ctx: JobContext) -> Optional[JobStatus]:
         return JobStatus.success()

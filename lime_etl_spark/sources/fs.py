@@ -9,9 +9,11 @@ The one crash state a reader can notice is ``dst`` missing while an
 ``.old-<uuid>`` exists. Its tmp was complete before step 2, so
 `settle_dirs` renames it forward (and drops asides of finished swaps).
 A tmp with no aside may be a live writer's; the next rewrite of
-``dst`` deletes it. Temp names start with ``.``, which Spark's file
-index, pyarrow and the ledger's partition listing all skip (Spark
-would read a ``_``-prefixed name holding ``=`` as a partition).
+``dst`` deletes it. A rewrite settles only ``dst``'s own swaps:
+parallel jobs rewrite sibling directories of one parent. Temp names
+start with ``.``, which Spark's file index, pyarrow and the ledger's
+partition listing all skip (Spark would read a ``_``-prefixed name
+holding ``=`` as a partition).
 
 Paths resolve through the Hadoop FileSystem API against the session's
 Hadoop configuration, as `spark.read.parquet` does, so a check and a
@@ -84,26 +86,37 @@ def settle_dirs(spark: Optional[SparkSession], parent: str) -> Set[str]:
     fs = _Fs(spark, parent)
     names = set(fs.names(parent))
     for m in filter(None, map(_SWAP.match, list(names))):
-        name, old, tmp = m.group(1), m.group(2) == "old", f".{m.group(1)}.tmp-{m.group(3)}"
-        if old and name not in names and tmp in names:
-            fs.rename(os.path.join(parent, tmp), os.path.join(parent, name))
-            names ^= {tmp, name}
-        if old and name in names and tmp not in names:
-            fs.delete(os.path.join(parent, m.group(0)))
-            names.discard(m.group(0))
+        _settle(fs, parent, names, m)
     return names
+
+
+def _settle(fs: _Fs, parent: str, names: Set[str], m: "re.Match[str]") -> None:
+    """Finish the swap that sibling ``m`` belongs to, keeping ``names`` current."""
+    name, old, tmp = m.group(1), m.group(2) == "old", f".{m.group(1)}.tmp-{m.group(3)}"
+    if old and name not in names and tmp in names:
+        fs.rename(os.path.join(parent, tmp), os.path.join(parent, name))
+        names ^= {tmp, name}
+    if old and name in names and tmp not in names:
+        fs.delete(os.path.join(parent, m.group(0)))
+        names.discard(m.group(0))
 
 
 def overwrite_dir(spark: Optional[SparkSession], dst: str, write: Callable[[str], T]) -> T:
     """Replace directory ``dst`` with what ``write(tmp)`` puts in ``tmp``
     (see the module docstring) and return what ``write`` returns. It
     runs once a half-done swap on ``dst`` is settled, so it may read
-    ``dst``. One writer per ``dst``: it deletes the leftovers it finds."""
+    ``dst``. One writer per ``dst``: it deletes the leftovers it finds.
+    It touches no sibling's swap, since another writer may be mid-way
+    through it."""
     dst = dst.rstrip("/")
     parent, name = os.path.split(dst)
     parent, fs = parent or ".", _Fs(spark, dst)
-    for m in filter(None, map(_SWAP.match, settle_dirs(spark, parent))):
-        if m.group(1) == name:
+    names = set(fs.names(parent))
+    ours = [m for m in map(_SWAP.match, sorted(names)) if m and m.group(1) == name]
+    for m in ours:
+        _settle(fs, parent, names, m)
+    for m in ours:
+        if m.group(0) in names:
             fs.delete(os.path.join(parent, m.group(0)))
     tag = uuid.uuid4().hex
     tmp, old = (os.path.join(parent, f".{name}.{kind}-{tag}") for kind in ("tmp", "old"))

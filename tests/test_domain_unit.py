@@ -7,6 +7,7 @@ test_batch_spec.py scenarios (validation rules + BatchDelta algebra).
 from __future__ import annotations
 
 import datetime
+import inspect
 
 import pytest
 
@@ -26,7 +27,10 @@ from lime_etl_spark.domain import (
     TimeoutSeconds,
     UniqueId,
 )
+from lime_etl_spark.domain.specs import RetryPolicy, SimpleJobSpec
 from lime_etl_spark.domain.statuses import TestResult
+from lime_etl_spark.service.admin_jobs import CompactAdminLedger, DeleteOldLogs
+from lime_etl_spark.service.table_jobs import DataTestJob, TableRefreshJob
 
 NOW = datetime.datetime(2026, 8, 13, 12, 0, 0)
 
@@ -240,3 +244,59 @@ def test_resource_name_and_days():
     assert Days(0).value == 0 and SecondsSinceLastRefresh(30).value == 30
     with pytest.raises(ValueError):
         Days(-1)
+
+
+def _noop(ctx):
+    return None
+
+
+# Every job class with the constructor parameters it takes besides the
+# required payload ones, and the name of its refresh-interval parameter.
+_JOB_CLASSES = [
+    pytest.param(
+        SimpleJobSpec, {"run": _noop},
+        ["name", "run", "test", "dependencies", "timeout_seconds", "max_retries",
+         "min_seconds_between_refreshes", "min_seconds_between_tests", "retry_policy",
+         "on_execution_error", "on_test_failure"],
+        "min_seconds_between_refreshes", id="SimpleJobSpec",
+    ),
+    pytest.param(
+        TableRefreshJob, {"source": _noop, "target_path": "unused"},
+        ["name", "source", "target_path", "mode", "keys", "partition_by", "expect_min_rows",
+         "dependencies", "max_retries", "timeout_seconds", "min_seconds_between_refreshes"],
+        "min_seconds_between_refreshes", id="TableRefreshJob",
+    ),
+    pytest.param(
+        DataTestJob, {"checks": []}, ["name", "checks", "dependencies"], None, id="DataTestJob"
+    ),
+    pytest.param(
+        DeleteOldLogs, {"store": None}, ["store", "days_logs_to_keep", "min_seconds_between_runs"],
+        "min_seconds_between_runs", id="DeleteOldLogs",
+    ),
+    pytest.param(
+        CompactAdminLedger, {"store": None}, ["store", "min_seconds_between_runs"],
+        "min_seconds_between_runs", id="CompactAdminLedger",
+    ),
+]
+
+
+@pytest.mark.parametrize("cls, required, params, interval", _JOB_CLASSES)
+def test_job_settings_are_validated_and_stored_by_the_base(cls, required, params, interval):
+    """Every job class validates its settings through SparkJobSpec's
+    constructor and keeps exactly its own constructor parameters."""
+    assert list(inspect.signature(cls).parameters) == params
+
+    named = {"name": "job_under_test"} if "name" in params else {}
+    if named:
+        with pytest.raises(ValueError):
+            cls(**required, name="ab")
+    if interval:
+        with pytest.raises(ValueError):
+            cls(**required, **named, **{interval: -5})
+
+    deps = {"dependencies": ["upstream"]} if "dependencies" in params else {}
+    job = cls(**required, **named, **deps)
+    assert job.dependencies == (("upstream",) if deps else ())
+    assert isinstance(job.dependencies, tuple)
+    assert job.retry_policy == RetryPolicy() and job.retry_policy.delay(3) == 0.0
+    assert (job.max_retries, job.timeout_seconds, job.min_seconds_between_tests) == (0, None, 0)

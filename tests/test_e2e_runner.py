@@ -654,3 +654,23 @@ def test_failed_job_millis_measured_from_its_own_start(spark, store):
     second = next(r for r in result.job_results if r.job_name == "second")
     assert second.status.is_failed
     assert second.execution_millis.value < 100_000
+
+
+def test_log_rows_follow_the_runner_clock(spark, store):
+    """Batch and job log rows carry the runner's clock, like the batch
+    and job rows do, so their log_date partitions follow it too."""
+    import datetime
+
+    from lime_etl_spark.domain.clock import FakeClockAdapter
+
+    def chatty(ctx):
+        ctx.logger.info("working")
+        return JobStatus.success()
+
+    batch = SparkBatchSpec(name="clocked", jobs=[SimpleJobSpec(name="chatty", run=chatty)])
+    run_batch(batch, spark, store, clock=FakeClockAdapter(datetime.datetime(2020, 1, 1)))
+    for table in ("batch_log", "job_log"):
+        rows = store.read_log(table).select("ts", "log_date").collect()
+        assert rows, table
+        stamps = {(r.ts.date(), str(r.log_date)) for r in rows}
+        assert stamps == {(datetime.date(2020, 1, 1), "2020-01-01")}, table

@@ -201,3 +201,45 @@ def test_incremental_refresh_crash_at_any_step_loses_no_rows(spark, tmp_path, mo
     refresh(lake, "incremental", delta)
     assert target_rows(lake) == target_rows(clean)
     assert os.listdir(lake) == ["orders"]
+
+
+def _tested(spark, tmp_path, rows):
+    """Refresh a keyed target from ``rows`` and return its built-in test results."""
+    from lime_etl_spark.domain.specs import JobContext
+
+    job = TableRefreshJob(
+        name="keyed_mart", target_path=str(tmp_path / "keyed_mart"), keys=["k"],
+        source=lambda s: s.createDataFrame(rows, "k long, v string"),
+    )
+    ctx = JobContext(spark=spark, logger=_Log())
+    job.run(ctx)
+    return {t.test_name: t.outcome for t in job.test(ctx)}
+
+
+def test_refresh_test_counts_duplicated_keys(spark, tmp_path):
+    outcomes = _tested(spark, tmp_path, [(1, "a"), (1, "b"), (2, "c"), (3, "d")])
+    assert outcomes["keyed_mart: at least 1 rows"].is_success
+    assert outcomes["keyed_mart: unique on ['k']"].failure_message == "1 duplicated keys"
+
+
+def test_refresh_test_on_an_empty_keyed_target(spark, tmp_path):
+    outcomes = _tested(spark, tmp_path, [])
+    assert outcomes["keyed_mart: at least 1 rows"].failure_message == "only 0 rows"
+    assert outcomes["keyed_mart: unique on ['k']"].is_success
+
+
+def test_rewrite_leaves_sibling_swaps_in_flight_alone(tmp_path):
+    """Parallel refresh jobs swap sibling targets in one lake directory,
+    so a rewrite must not finish or drop a sibling's swap: ``orders`` is
+    between its two renames and ``customer`` has yet to drop its aside
+    while ``lineitem`` is rewritten."""
+    import os
+
+    from lime_etl_spark.sources.fs import overwrite_dir
+
+    a, b = "1" * 32, "2" * 32
+    in_flight = [f".orders.old-{a}", f".orders.tmp-{a}", "customer", f".customer.old-{b}"]
+    for name in in_flight:
+        (tmp_path / name).mkdir()
+    overwrite_dir(None, str(tmp_path / "lineitem"), os.makedirs)
+    assert sorted(os.listdir(tmp_path)) == sorted(in_flight + ["lineitem"])
