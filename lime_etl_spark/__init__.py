@@ -77,7 +77,6 @@ from lime_etl_spark.service.table_jobs import (
     referential_check,
 )
 from lime_etl_spark.service.runner import (
-    batch_delta,
     run_batch,
     run_batch_with_delta,
     run_batches_in_parallel,
@@ -128,7 +127,6 @@ __all__ = [
     "TimeoutSeconds",
     "UniqueId",
     "admin_batch",
-    "batch_delta",
     "get_spark",
     "referential_check",
     "run_batch",

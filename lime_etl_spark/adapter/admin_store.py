@@ -24,29 +24,32 @@ DATA is 100 TB but the admin ledger is kilobytes per batch run):
   retained data.
 - **Buffered log appends.** Log lines buffer in memory and flush as
   one file per batch run (or on explicit ``flush_logs()``).
-- **Crash-safe rewrites.** ``compact`` and ``delete_old_batches``
-  replace a table or log partition only through sources/fs.py's
-  ``overwrite_dir`` (write a hidden sibling, then swap). A directory a
-  crash left missing between the swap's renames is restored before
-  the store next lists, reads or appends to it, so no row is lost.
+- **One write path; rewrites retire files.** Every part file is
+  written under a hidden ``.`` name, then renamed in, so no reader sees
+  it half-written. A rewrite (``compact``, ``delete_old_batches``)
+  publishes one file whose footer retires every part file it listed,
+  then deletes those (Delta Lake's add/remove log in one footer key).
+  Readers skip retired files, so a crash at any step shows each row
+  once, and files appended during a rewrite are never touched.
 - **Incremental keyed index for point lookups.** The runner's gates
   read an in-memory index of the ledger tables, never a table scan.
   Part files are immutable and uuid-named, so a lookup lists the table
-  directory and ingests only unseen files. A vanished file (compaction
-  or retention, by any process) forces a rebuild. The store's own
-  appends enter the index with no read-back.
+  directory and ingests only unseen files. An ingested file that stops
+  being live (compaction or retention, by any process) forces a
+  rebuild. The store's own appends enter the index with no read-back.
 """
 
 from __future__ import annotations
 
 import datetime
+import functools
+import json
 import os
 import shutil
 import threading
 import time
 import uuid
-from functools import partial
-from typing import Any, Callable, Dict, List, Optional, Sequence, Set, Tuple
+from typing import Any, Callable, Dict, FrozenSet, List, Optional, Sequence, Set, Tuple, TypeVar
 
 import pyarrow as pa
 import pyarrow.compute as pc
@@ -60,7 +63,10 @@ from pyspark.sql.types import (
 from lime_etl_spark.domain.clock import ClockAdapter
 from lime_etl_spark.domain.statuses import BatchStatus, JobResult, JobState, JobStatus, TestResult
 from lime_etl_spark.domain.value_objects import ExecutionMillis, LogLevel, LogMessage, Result
-from lime_etl_spark.sources.fs import overwrite_dir, settle_dirs
+
+T = TypeVar("T")
+_RETIRES = b"lime_etl_spark.retires"  # footer key: the part files a rewrite file replaces
+_REWRITE_TMP = ".rewrite-"  # a rewrite's hidden file; an append's is ``.part-<uuid>.parquet``
 
 _BATCHES = StructType(
     [
@@ -228,23 +234,36 @@ class _LedgerIndex:
             tests.append(t)
 
 
+def _relisting(fn: Callable[..., T]) -> Callable[..., T]:
+    """``fn``, run again while a concurrent rewrite deletes a listed file."""
+
+    @functools.wraps(fn)
+    def run(*args: Any, **kwargs: Any) -> T:
+        for _ in range(9):
+            try:
+                return fn(*args, **kwargs)
+            except FileNotFoundError:
+                pass
+        return fn(*args, **kwargs)
+
+    return run
+
+
 class SparkAdminStore:
     """All admin tables under one root directory.
 
     Concurrency contract: the reference got transactionality from
     SQLAlchemy; this store gets the equivalent BY CONSTRUCTION from its
-    layout. Every append writes a NEW uuid-named part file (no torn
+    layout. Every append renames in a NEW uuid-named part file (no torn
     read, no name collision) and every read resolves latest-wins on
     `seq` (pid-stamped wall-clock ns, _mint_seq: a TOTAL order), so
-    appends from many PROCESSES sharing a root merge safely. Each
-    lookup ingests the unseen part files into the keyed index and
-    rebuilds it when an ingested one is gone, so other writers' appends
-    and rewrites show at the next lookup. One lock guards the index, the
-    log buffer and log entry ids, so worker threads may share a store.
-    The rewrite paths (compact and delete_old_batches through
-    overwrite_dir, delete_old_logs' partition drop) survive a crash at
-    any step but are single-writer: run them from one coordinator with
-    no concurrent appenders, as the admin batch does.
+    appends from many PROCESSES sharing a root merge safely. A rewrite
+    survives a crash at any step and never touches a file appended
+    while it runs: one rewriter at a time (as the admin batch runs
+    them), any number of appenders. Each lookup ingests the unseen live
+    part files into the keyed index and rebuilds it when an ingested one
+    stops being live. One lock guards the index, the retire-set cache,
+    the log buffer and log entry ids, so worker threads may share a store.
     """
 
     LOG_TABLES = ("batch_log", "job_log")
@@ -256,6 +275,7 @@ class SparkAdminStore:
         self._log_buffer: Dict[str, List[dict]] = {t: [] for t in self.LOG_TABLES}
         self._entry_id = 0
         self._idx = _LedgerIndex()
+        self._retires: Dict[str, Dict[str, FrozenSet[str]]] = {}  # dir -> file -> what it retires
 
     # -- plumbing -----------------------------------------------------------
 
@@ -263,72 +283,99 @@ class SparkAdminStore:
         return os.path.join(self.root, table)
 
     def _append(self, table: str, rows: Sequence[dict]) -> None:
-        """One parquet file per append, hive-partitioned for log tables;
-        ledger appends also go straight into the index."""
+        """One file per append (per log_date for logs); ledger rows also enter the index."""
         if not rows:
             return
-        if table in self.LOG_TABLES:
-            by_date: Dict[str, List[dict]] = {}
-            for r in rows:
-                by_date.setdefault(r["log_date"], []).append(r)
-            schema = _pa_schema(_LOG, drop=("log_date",))
-            for log_date, part in by_date.items():
-                path = os.path.join(self._path(table), f"log_date={log_date}")
-                _write_file(path, pa.Table.from_pylist(part, schema=schema))
-        else:
-            tbl = pa.Table.from_pylist(rows, schema=_pa_schema(_LEDGER[table]))
-            with self._lock:  # no lookup in this process reads a half-written file
-                self._idx.ingest(table, _write_file(self._path(table), tbl), _rows(tbl))
+        with self._lock:  # no lookup on another thread ingests the new file too
+            if table in self.LOG_TABLES:
+                by_date: Dict[str, List[dict]] = {}
+                for r in rows:
+                    by_date.setdefault(r["log_date"], []).append(r)
+                schema = _pa_schema(_LOG, drop=("log_date",))
+                for log_date, part in by_date.items():
+                    path = os.path.join(self._path(table), f"log_date={log_date}")
+                    self._write_file(path, pa.Table.from_pylist(part, schema=schema))
+            else:
+                tbl = pa.Table.from_pylist(rows, schema=_pa_schema(_LEDGER[table]))
+                self._idx.ingest(table, self._write_file(self._path(table), tbl), _rows(tbl))
+
+    def _write_file(self, dir_path: str, tbl: pa.Table, retires: Optional[Set[str]] = None) -> str:
+        """Write ``tbl`` under a hidden name and rename it into ``dir_path``
+        as a new part file (a rewrite's lists what it ``retires`` in its
+        footer); returns its name. Call with ``self._lock`` held."""
+        os.makedirs(dir_path, exist_ok=True)
+        name = f"part-{uuid.uuid4().hex}.parquet"
+        hidden = os.path.join(dir_path, ("." if retires is None else _REWRITE_TMP) + name)
+        meta = None if retires is None else {_RETIRES: json.dumps(sorted(retires))}
+        pq.write_table(tbl.replace_schema_metadata(meta), hidden)
+        os.rename(hidden, os.path.join(dir_path, name))
+        self._retires.setdefault(dir_path, {})[name] = frozenset(retires or ())
+        return name
+
+    def _scan(self, dir_path: str) -> Tuple[Set[str], Set[str], Dict[str, pa.Table]]:
+        """``dir_path``'s part files, the live ones (no listed file retires
+        them), and the tables read to learn an unseen file's retire set
+        (once per file: files are immutable). Call with ``self._lock`` held."""
+        names, known = _part_files(dir_path), self._retires.get(dir_path, {})
+        fresh = {n: pq.read_table(os.path.join(dir_path, n)) for n in names - known.keys()}
+        known = {n: known[n] for n in names & known.keys()}
+        for n, tbl in fresh.items():
+            known[n] = frozenset(json.loads((tbl.schema.metadata or {}).get(_RETIRES, b"[]")))
+        self._retires[dir_path] = known
+        return names, names - frozenset().union(*known.values()), fresh
 
     def _log_partitions(self, table: str) -> List[str]:
-        """The table's log_date partition dirs, after settling their swaps."""
         path = self._path(table)
-        settle_dirs(None, path)
         entries = os.listdir(path) if os.path.isdir(path) else ()
         return [os.path.join(path, e) for e in entries if e.startswith("log_date=")]
 
+    @_relisting
+    def _live_paths(self, table: str) -> List[str]:
+        """The table's live part files, in every partition of a log table."""
+        dirs = self._log_partitions(table) if table in self.LOG_TABLES else [self._path(table)]
+        with self._lock:
+            return [os.path.join(d, n) for d in dirs for n in sorted(self._scan(d)[1])]
+
+    @_relisting
     def _index(self, *tables: str) -> _LedgerIndex:
-        """The index, caught up with the part files of ``tables`` on
-        disk. Call with ``self._lock`` held."""
-        on_disk = {t: _part_files(self._path(t)) for t in tables}
-        if any(not self._idx.files[t] <= on_disk[t] for t in tables):  # rewritten since
+        """The index, caught up with the live part files of ``tables``.
+        Call with ``self._lock`` held."""
+        found = {t: self._scan(self._path(t)) for t in tables}
+        if any(not self._idx.files[t] <= found[t][1] for t in tables):  # one was retired
             self._idx = _LedgerIndex()
-        for t in tables:
-            for name in on_disk[t] - self._idx.files[t]:
-                tbl = pq.read_table(os.path.join(self._path(t), name))
-                self._idx.ingest(t, name, _rows(tbl))
+        for t, (_, live, fresh) in found.items():
+            for n in live - self._idx.files[t]:
+                tbl = fresh[n] if n in fresh else pq.read_table(os.path.join(self._path(t), n))
+                self._idx.ingest(t, n, _rows(tbl))
         return self._idx
 
-    def _rewrite(self, table: str, keep: Callable[[Dict[str, Any]], bool] = lambda r: True) -> None:
-        """Swap a ledger table's part files for one file of the rows that
-        pass ``keep``; the new file enters a fresh index with no read-back."""
-        path = self._path(table)
+    def _rewrite(self, path: str, schema: pa.Schema, keep: pc.Expression = pc.scalar(True)) -> int:
+        """Replace the part files of ``path`` (a ledger table or log
+        partition) with one file of their live rows that pass ``keep``;
+        files appended after its listing stay. Returns how many it replaced."""
         with self._lock:
-            rows = [r for r in _rows(pq.read_table(path)) if keep(r)]
-            tbl = pa.Table.from_pylist(rows, schema=_pa_schema(_LEDGER[table]))
-            name = overwrite_dir(None, path, partial(_write_file, tbl=tbl))
-            self._idx = _LedgerIndex()
-            self._idx.ingest(table, name, rows)
+            inputs, live, _ = self._scan(path)
+            files = [os.path.join(path, n) for n in sorted(live)]
+            tbl = pq.read_table(files, schema=schema) if files else schema.empty_table()
+            self._write_file(path, tbl.filter(keep), retires=inputs)
+            crashed = [n for n in os.listdir(path) if n.startswith(_REWRITE_TMP)]  # unpublished
+            for n in sorted(inputs) + crashed:
+                os.remove(os.path.join(path, n))
+            return len(inputs)
 
+    @_relisting
     def row_counts(self) -> Dict[str, int]:
-        """Rows per ledger table on disk, from the part-file footers."""
-        return {
-            table: sum(
-                pq.ParquetFile(os.path.join(self._path(table), f)).metadata.num_rows
-                for f in _part_files(self._path(table))
-            )
-            for table in _LEDGER
-        }
+        """Rows per ledger table on disk, from the live part files' footers."""
+        return {t: sum(pq.read_metadata(p).num_rows for p in self._live_paths(t)) for t in _LEDGER}
 
     def _read(self, table: str, schema: StructType) -> DataFrame:
-        """Analytical surface: the same files as a Spark DataFrame."""
-        path = self._path(table)
+        """Analytical surface: the live files as a Spark DataFrame."""
         if table in self.LOG_TABLES:
             self.flush_logs()
-            self._log_partitions(table)  # settles a crashed partition swap
-        if not _settled(path):
+        files = self._live_paths(table)
+        if not files:
             return self.spark.createDataFrame([], schema=schema)
-        return self.spark.read.schema(schema).parquet(path)
+        return self.spark.read.schema(schema).option("basePath", self._path(table)).parquet(*files)
 
     # -- batches ------------------------------------------------------------
 
@@ -401,31 +448,27 @@ class SparkAdminStore:
         return _latest_versions(df, self._VERSION_KEYS[table])
 
     def compact(self) -> Dict[str, Tuple[int, int]]:
-        """Rewrite each ledger table's many per-append part files into
-        one file per table (one per log_date partition for logs), rows
-        unchanged (seq, not file order, carries the history). Spark
-        reads, directory listings and index rebuilds all pay per file.
-        Returns {table: (files_before, files_after)}.
-        """
+        """Fold each ledger table's part files into one file (and each log
+        partition's), rows unchanged, since every read pays per file.
+        Returns {table: (files_before, files_after)}."""
         self.flush_logs()
         stats: Dict[str, Tuple[int, int]] = {}
-        for table in filter(lambda t: _settled(self._path(t)), _LEDGER):
-            stats[table] = (len(_part_files(self._path(table))), 1)
-            self._rewrite(table)
+        for table in filter(lambda t: os.path.isdir(self._path(t)), _LEDGER):
+            stats[table] = (self._rewrite(self._path(table), _pa_schema(_LEDGER[table])), 1)
         for table in filter(lambda t: os.path.isdir(self._path(t)), self.LOG_TABLES):
             parts = self._log_partitions(table)
             counts = [len(_part_files(part_dir)) for part_dir in parts]
             for part_dir in (p for p, n in zip(parts, counts) if n > 1):
-                overwrite_dir(None, part_dir, partial(_write_file, tbl=pq.read_table(part_dir)))
+                self._rewrite(part_dir, _pa_schema(_LOG, drop=("log_date",)))
             stats[table] = (sum(counts), len(parts))
         return stats
 
     def delete_old_batches(self, cutoff: datetime.datetime) -> None:
         """Rewrite retained batch/job state (small tables by design):
         the rows with ``ts`` at or after ``cutoff``."""
-        for table in _LEDGER:
-            if _settled(self._path(table)):
-                self._rewrite(table, lambda r: r["ts"] >= cutoff)
+        keep = pc.field("ts") >= pa.scalar(cutoff, pa.timestamp("us"))
+        for table in filter(lambda t: os.path.isdir(self._path(t)), _LEDGER):
+            self._rewrite(self._path(table), _pa_schema(_LEDGER[table]), keep)
 
     # -- jobs ----------------------------------------------------------------
 
@@ -538,35 +581,19 @@ class SparkAdminStore:
             for part_dir in self._log_partitions(table):
                 if part_dir.rsplit("=", 1)[1] < cutoff_date:
                     shutil.rmtree(part_dir)
+                    self._retires.pop(part_dir, None)
 
+    @_relisting
     def earliest_log_ts(self, table: str = "batch_log") -> Optional[datetime.datetime]:
         self.flush_logs()
-        if not self._log_partitions(table):
-            return None
-        return _naive(pc.min(pq.read_table(self._path(table), columns=["ts"])["ts"]).as_py())
-
-
-def _settled(dir_path: str) -> bool:
-    """Whether ``dir_path`` is a directory, once restored if a crash
-    stopped its rewrite between the two renames (sources/fs.py)."""
-    if os.path.isdir(dir_path):
-        return True
-    settle_dirs(None, os.path.dirname(dir_path))
-    return os.path.isdir(dir_path)
+        files = self._live_paths(table)
+        return _naive(pc.min(pq.read_table(files, columns=["ts"])["ts"]).as_py()) if files else None
 
 
 def _part_files(dir_path: str) -> Set[str]:
-    names = os.listdir(dir_path) if _settled(dir_path) else ()
-    return {f for f in names if f.endswith(".parquet")}
-
-
-def _write_file(dir_path: str, tbl: pa.Table) -> str:
-    """Write ``tbl`` as a new uuid-named part file; returns its name."""
-    if not _settled(dir_path):
-        os.makedirs(dir_path, exist_ok=True)
-    name = f"part-{uuid.uuid4().hex}.parquet"
-    pq.write_table(tbl, os.path.join(dir_path, name))
-    return name
+    """``dir_path``'s part files, less the hidden ones still being written."""
+    names = os.listdir(dir_path) if os.path.isdir(dir_path) else ()
+    return {f for f in names if f.endswith(".parquet") and not f.startswith(".")}
 
 
 def _test_result(r: Dict[str, Any]) -> TestResult:

@@ -34,7 +34,7 @@ from pyspark.sql.window import Window
 
 from lime_etl_spark.functions.text import tokens, word_shingles
 from lime_etl_spark.operators.training import hash_bucket, _bucket_sql
-from lime_etl_spark.plans.registry import register
+from lime_etl_spark.plans.registry import register, track_persist
 from lime_etl_spark.sources.readers import load_table
 
 DECON_N = 13  # industry-standard benchmark-overlap n-gram size
@@ -644,7 +644,7 @@ def _bigram_doc_scores(docs: DataFrame) -> DataFrame:
     # All counts and formulas are the same integers; per-doc sums use
     # sum(m·bits) = sum over tokens of bits exactly.
     base = docs.select("doc_id", "lang", F.split("text", " ").alias("t"))
-    dbi = (
+    dbi = track_persist(
         base.select(
             "doc_id",
             "lang",

@@ -30,7 +30,7 @@ from lime_etl_spark.functions.text import shingle_int_sql
 from lime_etl_spark.operators.dedup import _minhash_sql
 from lime_etl_spark.operators.graph import _LPA_FINAL, _lpa_sql
 from lime_etl_spark.operators.training import _bucket_sql
-from lime_etl_spark.plans.registry import register
+from lime_etl_spark.plans.registry import register, track_persist
 from lime_etl_spark.sources.readers import load_table
 
 # --- market-basket part affinity -------------------------------------------
@@ -4870,9 +4870,9 @@ def ann_tuning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         nearest_centroids,
     )
 
-    emb = load_table(spark, sf_dir, "embeddings").withColumn(
+    emb = track_persist(load_table(spark, sf_dir, "embeddings").withColumn(
         "bucket", ivf_bucket(F.col("embedding"))
-    ).persist()
+    ).persist())
     # One bounded count job: qmod (the query-shard stride, a literal so
     # the vec_id filter stays pushdown-eligible) plus an UPPER BOUND on
     # the query count for the broadcast-vs-shuffle plan choice below —

@@ -586,7 +586,3 @@ def run_batches_in_parallel(
             )
         return results
 
-
-def batch_delta(store: SparkAdminStore, current: BatchStatus, previous_id: Optional[str]) -> BatchDelta:
-    previous = store.get_batch(previous_id) if previous_id else None
-    return BatchDelta(current=current, previous=previous)

@@ -1,19 +1,14 @@
-"""Scheme-aware filesystem helpers, and the one crash-safe directory
-rewrite: refresh jobs, streaming sinks, compaction and the admin ledger
-replace a directory only through `overwrite_dir`, which (1) has
-``write(tmp)`` fill a hidden sibling ``.<name>.tmp-<uuid>``, (2) renames
-the old ``dst`` aside to ``.<name>.old-<uuid>``, (3) renames the tmp to
-``dst`` and (4) deletes the aside.
-
-The one crash state a reader can notice is ``dst`` missing while an
-``.old-<uuid>`` exists. Its tmp was complete before step 2, so
-`settle_dirs` renames it forward (and drops asides of finished swaps).
-A tmp with no aside may be a live writer's; the next rewrite of
-``dst`` deletes it. A rewrite settles only ``dst``'s own swaps:
+"""Scheme-aware filesystem helpers, and the one crash-safe rewrite of a
+directory that one writer owns (refresh targets, streaming sinks,
+compaction): `overwrite_dir` (1) has ``write(tmp)`` fill a hidden
+sibling ``.<name>.tmp-<uuid>``, (2) renames ``dst`` aside to
+``.<name>.old-<uuid>``, (3) renames the tmp to ``dst`` and (4) deletes
+the aside. A crash between (2) and (3) leaves ``dst`` missing beside a
+complete tmp, which the next rewrite of ``dst`` renames forward before
+it deletes ``dst``'s other leftovers. It touches no sibling's swap:
 parallel jobs rewrite sibling directories of one parent. Temp names
-start with ``.``, which Spark's file index, pyarrow and the ledger's
-partition listing all skip (Spark would read a ``_``-prefixed name
-holding ``=`` as a partition).
+start with ``.``, which Spark's file index and pyarrow skip (Spark reads
+a ``_``-prefixed name holding ``=`` as a partition).
 
 Paths resolve through the Hadoop FileSystem API against the session's
 Hadoop configuration, as `spark.read.parquet` does, so a check and a
@@ -29,7 +24,7 @@ import os
 import re
 import shutil
 import uuid
-from typing import Callable, List, Optional, Set, TypeVar
+from typing import Callable, List, Optional, TypeVar
 
 from pyspark.sql import SparkSession
 
@@ -77,44 +72,20 @@ def path_exists(spark: Optional[SparkSession], path: str) -> bool:
     return _Fs(spark, path).exists(path)
 
 
-def settle_dirs(spark: Optional[SparkSession], parent: str) -> Set[str]:
-    """Finish every swap a crash left half-done among ``parent``'s
-    children: where ``<name>`` is missing but ``.<name>.old-<uuid>``
-    exists, rename the complete ``.<name>.tmp-<uuid>`` to ``<name>``;
-    then delete each aside whose swap is finished. Returns the names
-    left in ``parent``."""
-    fs = _Fs(spark, parent)
-    names = set(fs.names(parent))
-    for m in filter(None, map(_SWAP.match, list(names))):
-        _settle(fs, parent, names, m)
-    return names
-
-
-def _settle(fs: _Fs, parent: str, names: Set[str], m: "re.Match[str]") -> None:
-    """Finish the swap that sibling ``m`` belongs to, keeping ``names`` current."""
-    name, old, tmp = m.group(1), m.group(2) == "old", f".{m.group(1)}.tmp-{m.group(3)}"
-    if old and name not in names and tmp in names:
-        fs.rename(os.path.join(parent, tmp), os.path.join(parent, name))
-        names ^= {tmp, name}
-    if old and name in names and tmp not in names:
-        fs.delete(os.path.join(parent, m.group(0)))
-        names.discard(m.group(0))
-
-
 def overwrite_dir(spark: Optional[SparkSession], dst: str, write: Callable[[str], T]) -> T:
     """Replace directory ``dst`` with what ``write(tmp)`` puts in ``tmp``
-    (see the module docstring) and return what ``write`` returns. It
-    runs once a half-done swap on ``dst`` is settled, so it may read
-    ``dst``. One writer per ``dst``: it deletes the leftovers it finds.
-    It touches no sibling's swap, since another writer may be mid-way
-    through it."""
+    (see the module docstring) and return what ``write`` returns. A
+    half-done swap of ``dst`` is settled first, so ``write`` may read it."""
     dst = dst.rstrip("/")
     parent, name = os.path.split(dst)
     parent, fs = parent or ".", _Fs(spark, dst)
     names = set(fs.names(parent))
     ours = [m for m in map(_SWAP.match, sorted(names)) if m and m.group(1) == name]
-    for m in ours:
-        _settle(fs, parent, names, m)
+    for m in ours:  # a crash between the renames left dst missing: its tmp is complete
+        tmp = f".{name}.tmp-{m.group(3)}"
+        if m.group(2) == "old" and name not in names and tmp in names:
+            fs.rename(os.path.join(parent, tmp), dst)
+            names ^= {tmp, name}
     for m in ours:
         if m.group(0) in names:
             fs.delete(os.path.join(parent, m.group(0)))

@@ -687,6 +687,139 @@ def test_index_matches_fresh_store_after_threaded_appends_and_lookups(tmp_path):
     assert len(store.get_job_results("w7-9-b0")) == 3
 
 
+# --- rewrites next to concurrent appenders ---------------------------------------
+
+
+@pytest.mark.parametrize("rewrite", ["compact", "delete_old_batches"])
+def test_rewrite_keeps_rows_appended_while_it_writes(tmp_path, monkeypatch, rewrite):
+    """A second store appends a jobs row while the first store's rewrite
+    is inside its write step: a fresh store sees every appended row, as
+    on a copy of the ledger that got the same append and no rewrite."""
+    import os
+    import shutil
+
+    import pyarrow.parquet as pq_mod
+
+    root, clean_root = str(tmp_path / "admin"), str(tmp_path / "clean")
+    t0 = datetime.datetime(2026, 6, 1, 9, 0)
+    rewriter = SparkAdminStore(None, root)
+    _fill_ledger(rewriter, t0, "a", n_batches=2)
+    shutil.copytree(root, clean_root)
+    late = JobResult(id="late-j", batch_id="a-b1", job_name="job_b", status=JobStatus.success(),
+                     execution_millis=ExecutionMillis(7), ts=t0)
+    SparkAdminStore(None, clean_root).save_job_result(late)
+    before = rewriter.row_counts()
+
+    appender, real_write, armed = SparkAdminStore(None, root), pq_mod.write_table, [True]
+
+    def write_table(tbl, where, *args, **kwargs):
+        real_write(tbl, where, *args, **kwargs)
+        if armed[0] and os.path.relpath(where, root).lstrip(".").startswith("jobs"):
+            armed[0] = False  # the rewrite of jobs has written its new file
+            appender.save_job_result(late)
+
+    with monkeypatch.context() as m:
+        m.setattr(pq_mod, "write_table", write_table)
+        if rewrite == "compact":
+            rewriter.compact()
+        else:
+            rewriter.delete_old_batches(cutoff=datetime.datetime(2000, 1, 1))
+    assert not armed[0]
+
+    fresh = SparkAdminStore(None, root)
+    assert fresh.row_counts() == {**before, "jobs": before["jobs"] + 1}
+    assert fresh.get_last_successful_ts("job_b") == t0
+    keys = _ledger_keys(clean_root)
+    assert _getters(fresh, keys) == _getters(SparkAdminStore(None, clean_root), keys)
+    _assert_index_matches_fresh(rewriter)
+
+
+def test_lookup_during_an_append_skips_the_unfinished_file(tmp_path, monkeypatch):
+    """Another store's lookups while an append's file is half-written
+    neither raise nor see the unfinished row."""
+    import pyarrow.parquet as pq_mod
+
+    root = str(tmp_path / "admin")
+    t0 = datetime.datetime(2026, 6, 1, 9, 0)
+    writer, reader = SparkAdminStore(None, root), SparkAdminStore(None, root)
+    _fill_ledger(writer, t0, "a", n_batches=1)
+    jobs_before = reader.row_counts()["jobs"]
+    seen, real_write = {}, pq_mod.write_table
+
+    def write_table(tbl, where, *args, **kwargs):
+        with open(where, "wb") as f:
+            f.write(b"PAR1")  # the bytes a parquet writer puts down first
+        seen["ts"] = reader.get_last_successful_ts("late-job")
+        seen["jobs"] = len(reader.get_job_results("a-b0"))
+        seen["rows"] = reader.row_counts()["jobs"]
+        real_write(tbl, where, *args, **kwargs)
+
+    with monkeypatch.context() as m:
+        m.setattr(pq_mod, "write_table", write_table)
+        writer.save_job_result(JobResult(
+            id="late-j", batch_id="a-b0", job_name="late-job", status=JobStatus.success(),
+            execution_millis=ExecutionMillis(1), ts=t0))
+    assert seen == {"ts": None, "jobs": 3, "rows": jobs_before}
+    assert reader.get_last_successful_ts("late-job") == t0
+    assert len(reader.get_job_results("a-b0")) == 4
+
+
+def _mp_paced_appender(args) -> int:
+    """Child-process body: one batch version and one job row at a time,
+    with a pause after each, so the appends span many of the parent
+    process's rewrites."""
+    root, w, n = args
+    import datetime as dt
+    import time
+
+    from lime_etl_spark.adapter.admin_store import SparkAdminStore
+    from lime_etl_spark.domain.statuses import BatchStatus, JobResult, JobStatus
+    from lime_etl_spark.domain.value_objects import ExecutionMillis, Result
+
+    store, ts = SparkAdminStore(None, root), dt.datetime(2024, 3, 1, 12, 0)
+    for i in range(n):
+        store.save_batch(BatchStatus(
+            id=f"batch-w{w}", name=f"batch-w{w}", job_results=frozenset(),
+            execution_success_or_failure=Result.success(), execution_millis=ExecutionMillis(i),
+            running=False, ts=ts))
+        store.save_job_result(JobResult(
+            id=f"job-w{w}-{i}", batch_id=f"batch-w{w}", job_name=f"job_w{w}",
+            status=JobStatus.success(), execution_millis=ExecutionMillis(i), ts=ts))
+        time.sleep(0.01)
+    return w
+
+
+def test_rewrites_next_to_multiprocess_appends_lose_nothing(tmp_path):
+    """Three processes append batches and jobs while this one loops
+    compact() and delete_old_batches(cutoff in the past): no row is
+    lost, and a fresh store's getters match the rewriting store's."""
+    import multiprocessing as mp
+
+    root = str(tmp_path / "admin_mp")
+    warm = SparkAdminStore(None, root)
+    _fill_ledger(warm, datetime.datetime(2024, 3, 1, 11, 0), "pre")
+    pre = warm.row_counts()
+    n_workers, n, seen = 3, 60, []
+    with mp.get_context("spawn").Pool(n_workers) as pool:
+        done = pool.map_async(_mp_paced_appender, [(root, w, n) for w in range(n_workers)])
+        while not done.ready():
+            warm.compact()
+            warm.delete_old_batches(cutoff=datetime.datetime(2000, 1, 1))
+            seen.append(warm.row_counts()["batches"])
+        assert sorted(done.get()) == list(range(n_workers))
+    assert len(set(seen)) >= 3  # the rewrites ran while the others appended
+
+    assert SparkAdminStore(None, root).row_counts() == {
+        "batches": pre["batches"] + n_workers * n,
+        "jobs": pre["jobs"] + n_workers * n,
+        "test_results": pre["test_results"],
+    }
+    _assert_index_matches_fresh(warm)
+    for w in range(n_workers):
+        assert warm.get_batch(f"batch-w{w}").execution_millis.value == n - 1
+        assert len(warm.get_job_results(f"batch-w{w}")) == n
+
+
 # --- crash safety of the rewrites ------------------------------------------------
 
 
@@ -696,41 +829,38 @@ class _Crash(BaseException):
 
 
 def _inject_crash(monkeypatch, step, which):
-    """Make one step of the write-then-swap of a directory whose name
-    starts with ``which`` raise: ``write`` (after the temp file is
-    written), ``aside`` (renaming the old directory aside), ``forward``
-    (renaming the temp directory into place) or ``drop`` (deleting the
-    aside directory)."""
+    """Make one step of a rewrite of a directory whose name starts with
+    ``which`` raise: ``write`` (after its hidden rewrite file is
+    written), ``publish`` (renaming that file into the directory) or
+    ``retire`` (after the first of the files it replaces is deleted)."""
     import os
 
     import pyarrow.parquet as pq_mod
 
-    from lime_etl_spark.sources.fs import _Fs
+    def ours(path, hidden):
+        d, name = os.path.split(path)
+        return os.path.basename(d).startswith(which) and name.startswith(".rewrite-") == hidden
 
-    def ours(path, kind):
-        name = os.path.basename(path.rstrip("/"))
-        return name.startswith(f".{which}") and f".{kind}-" in name
-
-    real_write, real_rename, real_delete = pq_mod.write_table, _Fs.rename, _Fs.delete
+    real_write, real_rename, real_remove = pq_mod.write_table, os.rename, os.remove
 
     def write_table(tbl, where, *args, **kwargs):
         real_write(tbl, where, *args, **kwargs)
-        if step == "write" and ours(os.path.dirname(where), "tmp"):
+        if step == "write" and ours(where, hidden=True):
             raise _Crash(step)
 
-    def rename(self, src, dst):
-        if (step == "aside" and ours(dst, "old")) or (step == "forward" and ours(src, "tmp")):
+    def rename(src, dst):
+        if step == "publish" and ours(src, hidden=True):
             raise _Crash(step)
-        real_rename(self, src, dst)
+        real_rename(src, dst)
 
-    def delete(self, path):
-        if step == "drop" and ours(path, "old"):
+    def remove(path):
+        real_remove(path)
+        if step == "retire" and ours(path, hidden=False):
             raise _Crash(step)
-        real_delete(self, path)
 
     monkeypatch.setattr(pq_mod, "write_table", write_table)
-    monkeypatch.setattr(_Fs, "rename", rename)
-    monkeypatch.setattr(_Fs, "delete", delete)
+    monkeypatch.setattr(os, "rename", rename)
+    monkeypatch.setattr(os, "remove", remove)
 
 
 def _hidden_entries(root):
@@ -751,7 +881,7 @@ def _logs(spark, root):
     return sorted((r["entry_id"], r["message"], r["log_date"]) for r in rows), earliest
 
 
-@pytest.mark.parametrize("step", ["write", "aside", "forward", "drop"])
+@pytest.mark.parametrize("step", ["write", "publish", "retire"])
 @pytest.mark.parametrize(
     "rewrite,which",
     [("compact", "jobs"), ("compact", "log_date="), ("delete_old_batches", "jobs")],
@@ -759,9 +889,9 @@ def _logs(spark, root):
 def test_rewrite_crash_at_any_step_loses_nothing(spark, tmp_path, monkeypatch, rewrite, which, step):
     """A crash at any filesystem step of a ledger rewrite leaves every
     getter of a fresh store, and the log reads, as they were before it,
-    or where a table's swap got past the aside rename, as a clean
-    rewrite leaves them; re-running the rewrite then matches the clean
-    run, and leaves no hidden temp or aside directory."""
+    or once the rewrite file is published, as a clean rewrite leaves
+    them; re-running the rewrite then matches the clean run, and leaves
+    no hidden file behind."""
     import shutil
 
     root, clean_root = str(tmp_path / "admin"), str(tmp_path / "clean")

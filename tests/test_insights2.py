@@ -1166,6 +1166,20 @@ def test_ann_tuning_curve_is_monotone_in_scan_fraction(spark, sf_dir):
         assert 0.0 <= r.recall_at_k <= 1.0
 
 
+def test_ann_tuning_curve_persists_are_released(spark, sf_dir):
+    """A direct (non-hygienic) build registers its persist, so
+    release_tracked_persists() leaves the session's cache empty."""
+    from lime_etl_spark.plans.registry import release_tracked_persists
+
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    release_tracked_persists()
+    spark.catalog.clearCache()
+    all_queries()["ann_tuning_curve"].builder(spark, sf_dir).collect()
+    assert not cache.isEmpty()
+    release_tracked_persists()
+    assert cache.isEmpty()
+
+
 def test_lsh_tuning_curve_shape(spark, sf_dir):
     """More bands ⇒ candidates can only grow (any r-row band match in
     a coarse split implies a match in a finer split of the same
