@@ -24,10 +24,12 @@ threads sharing the one SparkSession, and the coordinating thread
 writes every ledger row. With one worker (``run_batch``) jobs run in
 the reference's sequential order.
 
-Spark-specific: every job body runs in a Spark job group named
-``batch_id:job_id:job_name``. A per-job timeout runs the body in its own
-thread and cancels that group on expiry — the Spark-native way to kill
-distributed work mid-flight.
+Spark-specific: every attempt of a job body runs on its ready-queue
+worker thread, in a Spark job group named ``batch_id:job_id:job_name``.
+A per-job timeout cancels that group at the deadline — the Spark-native
+way to kill distributed work mid-flight. Python code in a body is not
+preempted: the attempt fails with a timeout once the body returns, and
+a retry starts only after that.
 Parallel batches share the session via threads rather than processes
 (one JVM, many concurrent DAGs).
 """
@@ -36,10 +38,9 @@ from __future__ import annotations
 
 import datetime
 import os
-import time
+import threading
 import traceback
 from concurrent.futures import FIRST_COMPLETED, Future, ThreadPoolExecutor, wait
-from concurrent.futures import TimeoutError as FutureTimeoutError
 from typing import Dict, List, Optional, Sequence, Set, Tuple
 
 from pyspark.sql import SparkSession
@@ -503,7 +504,7 @@ def _run_with_retry(
     retries = 0
     while True:
         try:
-            status = _run_with_timeout(job, ctx, spark, group)
+            status = _run_attempt(job, ctx, spark, group)
             millis = clock.get_elapsed_time(start)
             return status or JobStatus.success(), millis
         except Exception:
@@ -522,33 +523,35 @@ def _run_with_retry(
             raise
 
 
-def _run_with_timeout(
+def _run_attempt(
     job: SparkJobSpec, ctx: JobContext, spark: SparkSession, group: str
 ) -> Optional[JobStatus]:
-    """Run the body with its Spark jobs in job group ``group`` (unique
-    per batch and job, so the Spark UI maps back to ledger rows); with a
-    timeout, in a thread whose job group is cancelled on expiry."""
+    """Run the body on the calling thread, its Spark jobs in job group
+    ``group`` (unique per batch and job, so the Spark UI maps back to
+    ledger rows). A timeout only cancels that group at the deadline; the
+    attempt then fails once the body returns. The timer is joined first,
+    so a late cancel cannot reach the job's tests or its next attempt."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, f"job {job.job_name}", interruptOnCancel=True)
+    expired = threading.Event()
 
-    def body() -> Optional[JobStatus]:
-        spark.sparkContext.setJobGroup(group, f"job {job.job_name}", interruptOnCancel=True)
-        return job.run(ctx)
+    def expire() -> None:
+        expired.set()
+        sc.cancelJobGroup(group)
 
-    if job.timeout_seconds is None:
-        return body()
-    pool = ThreadPoolExecutor(max_workers=1)
-    future = pool.submit(body)
+    timer = threading.Timer(job.timeout_seconds or 0, expire)
+    if job.timeout_seconds is not None:
+        timer.start()
     try:
-        return future.result(timeout=job.timeout_seconds)
-    except FutureTimeoutError:
-        spark.sparkContext.cancelJobGroup(group)
-        raise TimeoutError(
-            f"[{job.job_name}] timed out after {job.timeout_seconds} seconds."
-        )
+        return job.run(ctx)
     finally:
-        # wait=False: the cancelled job group unblocks the worker thread on
-        # its own; blocking here would serialize the timeout into the caller
-        pool.shutdown(wait=False)
-
+        timer.cancel()
+        if timer.is_alive():
+            timer.join()
+        if expired.is_set():
+            raise TimeoutError(
+                f"[{job.job_name}] timed out after {job.timeout_seconds} seconds."
+            )
 
 
 def run_batches_in_parallel(
@@ -562,27 +565,23 @@ def run_batches_in_parallel(
     """Concurrent batches in one Spark session (threads sharing one JVM —
     the single-JVM analog of the reference's multiprocessing pool).
     ``timeout`` bounds the whole group, like the reference's
-    ``future.get(timeout)`` (batch_runner.py:46): on expiry a
-    TimeoutError raises and stragglers' Spark jobs keep their own
-    per-job timeouts."""
+    ``future.get(timeout)`` (batch_runner.py:46): at the deadline a
+    TimeoutError raises at once and unstarted batches are cancelled.
+    Stragglers finish under their own per-job timeouts, which cancel
+    their Spark work but do not preempt Python code; a retry starts only
+    after the timed-out attempt has returned."""
 
     def one(batch: SparkBatchSpec) -> BatchStatus:
         store = SparkAdminStore(spark, os.path.join(store_root, batch.batch_name))
         return run_batch(batch, spark, store, log_to_console)
 
-    with ThreadPoolExecutor(max_workers=max_workers or len(batches)) as pool:
+    pool = ThreadPoolExecutor(max_workers=max_workers or len(batches))
+    try:
         futures = [pool.submit(one, b) for b in batches]
-        deadline = None if timeout is None else time.monotonic() + timeout
-        results = []
-        try:
-            for f in futures:
-                remaining = None if deadline is None else max(0.0, deadline - time.monotonic())
-                results.append(f.result(timeout=remaining))
-        except FutureTimeoutError:
-            for f in futures:
-                f.cancel()
+        if wait(futures, timeout=timeout).not_done:
             raise TimeoutError(
                 f"run_batches_in_parallel timed out after {timeout} seconds."
             )
-        return results
-
+        return [f.result() for f in futures]
+    finally:
+        pool.shutdown(wait=False, cancel_futures=True)

@@ -65,9 +65,12 @@ def spread_for_agg(df: DataFrame, *cols: str) -> DataFrame:
     the aggregate provably reuses this exchange's partitioning (hash
     partitioning is only reused when key AND partition count match —
     r9 ADVICE: with the two confs diverging, the old form paid a
-    second exchange and the spread became pure cost)."""
+    second exchange and the spread became pure cost). A non-numeric
+    conf (e.g. ``auto`` on some platforms) falls back to
+    defaultParallelism."""
     spark = df.sparkSession
-    target = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    conf = spark.conf.get("spark.sql.shuffle.partitions")
+    target = int(conf) if conf.isdigit() else spark.sparkContext.defaultParallelism
     try:
         n_files = len(df.inputFiles())
     except Exception:  # noqa: BLE001

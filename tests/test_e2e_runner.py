@@ -284,6 +284,65 @@ def test_job_timeout_cancels_and_fails(spark, store):
     assert "timed out" in (jr.status.reason or "")
 
 
+def test_timed_out_attempts_never_overlap(spark, store):
+    """A retry starts only after the timed-out attempt has returned, so
+    attempts of one job never run at once and none is still running
+    when run_batch returns."""
+    import threading
+    import time
+
+    lock = threading.Lock()
+    seen = {"calls": 0, "running": 0, "peak": 0}
+
+    def slow(ctx):
+        with lock:
+            seen["calls"] += 1
+            seen["running"] += 1
+            seen["peak"] = max(seen["peak"], seen["running"])
+        try:
+            time.sleep(1.5)
+        finally:
+            with lock:
+                seen["running"] -= 1
+        return JobStatus.success()
+
+    batch = SparkBatchSpec(
+        name="overlap_batch",
+        jobs=[SimpleJobSpec(name="slow_job", run=slow, timeout_seconds=1, max_retries=2)],
+    )
+    result = run_batch(batch, spark, store)
+    with lock:
+        assert seen == {"calls": 3, "running": 0, "peak": 1}
+    (jr,) = result.job_results
+    assert jr.status.is_failed
+    assert "timed out" in (jr.status.reason or "")
+
+
+def test_timeout_cancels_a_running_spark_stage(spark, store):
+    """A timeout cancels the attempt's Spark job group, so a body stuck
+    in a long Spark stage returns at its deadline and the retry follows."""
+    import time
+
+    calls = {"n": 0}
+
+    def stage(ctx):
+        calls["n"] += 1
+        ctx.spark.sparkContext.parallelize([0], 1).map(lambda x: time.sleep(20) or x).collect()
+        return JobStatus.success()
+
+    batch = SparkBatchSpec(
+        name="stage_batch",
+        jobs=[SimpleJobSpec(name="stage_job", run=stage, timeout_seconds=1, max_retries=1)],
+    )
+    t0 = time.monotonic()
+    result = run_batch(batch, spark, store)
+    assert time.monotonic() - t0 < 8
+    assert calls["n"] == 2
+    (jr,) = result.job_results
+    assert jr.status.is_failed
+    assert "timed out" in (jr.status.reason or "")
+
+
 def test_delete_old_logs_job(spark, store, tmp_path):
     import datetime
 
@@ -324,6 +383,25 @@ def test_parallel_batches_group_timeout(spark, tmp_path):
     ]
     with pytest.raises(TimeoutError, match="timed out after 1"):
         run_batches_in_parallel(batches, spark, str(tmp_path / "stores"), timeout=1)
+
+
+def test_parallel_batches_raise_at_their_deadline(spark, tmp_path):
+    """The group timeout raises at its deadline, not after the
+    stragglers finish."""
+    import time
+
+    def slow(ctx):
+        time.sleep(4)
+        return JobStatus.success()
+
+    batches = [
+        SparkBatchSpec(name=f"late_batch_{i}", jobs=[SimpleJobSpec(name=f"late_{i}", run=slow)])
+        for i in range(2)
+    ]
+    t0 = time.monotonic()
+    with pytest.raises(TimeoutError, match="timed out after 1"):
+        run_batches_in_parallel(batches, spark, str(tmp_path / "stores"), timeout=1)
+    assert time.monotonic() - t0 < 2.5
 
 
 def test_run_batch_with_delta_reports_newly_fixed_and_broken(spark, store):

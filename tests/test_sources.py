@@ -220,3 +220,21 @@ def test_partition_overwrite_touches_only_changed_partitions(spark, tmp_path):
             assert os.path.exists(f) and os.path.getmtime(f) == mt
     # conf restored
     assert spark.conf.get("spark.sql.sources.partitionOverwriteMode").upper() == "STATIC"
+
+
+def test_spread_for_agg_non_numeric_shuffle_partitions_falls_back(spark, monkeypatch):
+    """A platform may report spark.sql.shuffle.partitions as "auto";
+    spread_for_agg then targets defaultParallelism. Vanilla Spark refuses
+    to set "auto", so the conf read is stubbed."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    real_get = RuntimeConfig.get
+
+    def get(self, key, *default):
+        if key == "spark.sql.shuffle.partitions":
+            return "auto"
+        return real_get(self, key, *default)
+
+    monkeypatch.setattr(RuntimeConfig, "get", get)
+    out = readers.spread_for_agg(spark.range(10), "id")
+    assert out.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
