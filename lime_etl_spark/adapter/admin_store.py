@@ -12,12 +12,14 @@ DATA is 100 TB but the admin ledger is kilobytes per batch run):
   updates are new rows with a monotonically increasing ``seq``;
   readers reconstruct current state latest-wins (the same
   ``dedup_latest`` pattern our ETL operator family exposes).
-- **Driver-side writes via Arrow.** Bookkeeping rows are driver
-  metadata, written like Spark's own event logs by the driver on its
-  local disk: one tiny pyarrow file per state transition costs
+- **Driver-side writes and reads via Arrow.** Bookkeeping rows are
+  driver metadata, written like Spark's own event logs by the driver on
+  its local disk: one tiny pyarrow file per state transition costs
   microseconds, where a Spark job per row would cost a scheduling
-  round-trip. Spark reads the same files for the analytical surface
-  (``read_log`` returns a DataFrame).
+  round-trip. pyarrow is also the only reader of ledger files: the
+  analytical reads hand Spark the live rows already read, a snapshot
+  that a later rewrite cannot break. The index already holds every
+  ledger row on the driver and retention bounds the logs.
 - **Date-partitioned logs** (hive-style ``log_date=YYYY-MM-DD``
   dirs) so ``delete_old_logs`` (reference service/admin/
   delete_old_logs.py) is a partition drop, never a rewrite of
@@ -56,9 +58,6 @@ import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    BooleanType, LongType, StringType, StructField, StructType, TimestampType,
-)
 
 from lime_etl_spark.domain.clock import ClockAdapter
 from lime_etl_spark.domain.statuses import BatchStatus, JobResult, JobState, JobStatus, TestResult
@@ -68,69 +67,55 @@ T = TypeVar("T")
 _RETIRES = b"lime_etl_spark.retires"  # footer key: the part files a rewrite file replaces
 _REWRITE_TMP = ".rewrite-"  # a rewrite's hidden file; an append's is ``.part-<uuid>.parquet``
 
-_BATCHES = StructType(
+_BATCHES = pa.schema(
     [
-        StructField("batch_id", StringType(), False),
-        StructField("name", StringType(), False),
-        StructField("running", BooleanType(), False),
-        StructField("error_occurred", BooleanType(), True),
-        StructField("error_message", StringType(), True),
-        StructField("execution_millis", LongType(), True),
-        StructField("ts", TimestampType(), False),
-        StructField("seq", LongType(), False),
+        ("batch_id", pa.string()),
+        ("name", pa.string()),
+        ("running", pa.bool_()),
+        ("error_occurred", pa.bool_()),
+        ("error_message", pa.string()),
+        ("execution_millis", pa.int64()),
+        ("ts", pa.timestamp("us")),
+        ("seq", pa.int64()),
     ]
 )
 
-_JOBS = StructType(
+_JOBS = pa.schema(
     [
-        StructField("job_id", StringType(), False),
-        StructField("batch_id", StringType(), False),
-        StructField("job_name", StringType(), False),
-        StructField("state", StringType(), False),
-        StructField("reason", StringType(), True),
-        StructField("execution_millis", LongType(), True),
-        StructField("ts", TimestampType(), False),
-        StructField("seq", LongType(), False),
+        ("job_id", pa.string()),
+        ("batch_id", pa.string()),
+        ("job_name", pa.string()),
+        ("state", pa.string()),
+        ("reason", pa.string()),
+        ("execution_millis", pa.int64()),
+        ("ts", pa.timestamp("us")),
+        ("seq", pa.int64()),
     ]
 )
 
-_TEST_RESULTS = StructType(
+_TEST_RESULTS = pa.schema(
     [
-        StructField("test_id", StringType(), False),
-        StructField("job_id", StringType(), False),
-        StructField("job_name", StringType(), False),
-        StructField("test_name", StringType(), False),
-        StructField("passed", BooleanType(), False),
-        StructField("failure_message", StringType(), True),
-        StructField("execution_millis", LongType(), False),
-        StructField("ts", TimestampType(), False),
+        ("test_id", pa.string()),
+        ("job_id", pa.string()),
+        ("job_name", pa.string()),
+        ("test_name", pa.string()),
+        ("passed", pa.bool_()),
+        ("failure_message", pa.string()),
+        ("execution_millis", pa.int64()),
+        ("ts", pa.timestamp("us")),
     ]
 )
 
-_LOG = StructType(
+_LOG = pa.schema(  # a log part file; its rows' log_date is its partition's name
     [
-        StructField("entry_id", LongType(), False),
-        StructField("batch_id", StringType(), True),
-        StructField("job_name", StringType(), True),
-        StructField("level", StringType(), False),
-        StructField("message", StringType(), False),
-        StructField("ts", TimestampType(), False),
-        StructField("log_date", StringType(), False),
+        ("entry_id", pa.int64()),
+        ("batch_id", pa.string()),
+        ("job_name", pa.string()),
+        ("level", pa.string()),
+        ("message", pa.string()),
+        ("ts", pa.timestamp("us")),
     ]
 )
-
-_PA_TYPES = {
-    StringType(): pa.string(),
-    BooleanType(): pa.bool_(),
-    LongType(): pa.int64(),
-    TimestampType(): pa.timestamp("us"),
-}
-
-
-def _pa_schema(schema: StructType, drop: Sequence[str] = ()) -> pa.Schema:
-    return pa.schema(
-        [pa.field(f.name, _PA_TYPES[f.dataType]) for f in schema.fields if f.name not in drop]
-    )
 
 
 # --- seq minting (r8 verdict #8) --------------------------------------------
@@ -163,20 +148,14 @@ def _mint_seq() -> int:
         return cand
 
 
-def _naive(v: Any) -> Any:
-    """A tz-aware timestamp as local naive time, like every ledger ts."""
-    if isinstance(v, datetime.datetime) and v.tzinfo is not None:
-        return v.astimezone().replace(tzinfo=None)
-    return v
-
-
 def _rows(tbl: pa.Table) -> List[Dict[str, Any]]:
-    """Rows of a ledger table read from parquet, timestamps naive."""
+    """Rows of a ledger table read from parquet, a tz-aware timestamp
+    as local naive time, like every ledger ts."""
     rows = tbl.to_pylist()
     for f in tbl.schema:
         if pa.types.is_timestamp(f.type) and f.type.tz is not None:
             for r in rows:
-                r[f.name] = _naive(r[f.name])
+                r[f.name] = r[f.name].astimezone().replace(tzinfo=None)
     return rows
 
 
@@ -264,6 +243,8 @@ class SparkAdminStore:
     part files into the keyed index and rebuilds it when an ingested one
     stops being live. One lock guards the index, the retire-set cache,
     the log buffer and log entry ids, so worker threads may share a store.
+    The analytical reads return Spark DataFrames built from Arrow
+    snapshots of the live files; Spark never opens a ledger file.
     """
 
     LOG_TABLES = ("batch_log", "job_log")
@@ -291,12 +272,11 @@ class SparkAdminStore:
                 by_date: Dict[str, List[dict]] = {}
                 for r in rows:
                     by_date.setdefault(r["log_date"], []).append(r)
-                schema = _pa_schema(_LOG, drop=("log_date",))
                 for log_date, part in by_date.items():
                     path = os.path.join(self._path(table), f"log_date={log_date}")
-                    self._write_file(path, pa.Table.from_pylist(part, schema=schema))
+                    self._write_file(path, pa.Table.from_pylist(part, schema=_LOG))
             else:
-                tbl = pa.Table.from_pylist(rows, schema=_pa_schema(_LEDGER[table]))
+                tbl = pa.Table.from_pylist(rows, schema=_LEDGER[table])
                 self._idx.ingest(table, self._write_file(self._path(table), tbl), _rows(tbl))
 
     def _write_file(self, dir_path: str, tbl: pa.Table, retires: Optional[Set[str]] = None) -> str:
@@ -330,13 +310,6 @@ class SparkAdminStore:
         return [os.path.join(path, e) for e in entries if e.startswith("log_date=")]
 
     @_relisting
-    def _live_paths(self, table: str) -> List[str]:
-        """The table's live part files, in every partition of a log table."""
-        dirs = self._log_partitions(table) if table in self.LOG_TABLES else [self._path(table)]
-        with self._lock:
-            return [os.path.join(d, n) for d in dirs for n in sorted(self._scan(d)[1])]
-
-    @_relisting
     def _index(self, *tables: str) -> _LedgerIndex:
         """The index, caught up with the live part files of ``tables``.
         Call with ``self._lock`` held."""
@@ -354,28 +327,48 @@ class SparkAdminStore:
         partition) with one file of their live rows that pass ``keep``;
         files appended after its listing stay. Returns how many it replaced."""
         with self._lock:
-            inputs, live, _ = self._scan(path)
-            files = [os.path.join(path, n) for n in sorted(live)]
-            tbl = pq.read_table(files, schema=schema) if files else schema.empty_table()
+            inputs, tbl = self._live_rows(path, schema)
             self._write_file(path, tbl.filter(keep), retires=inputs)
             crashed = [n for n in os.listdir(path) if n.startswith(_REWRITE_TMP)]  # unpublished
             for n in sorted(inputs) + crashed:
                 os.remove(os.path.join(path, n))
             return len(inputs)
 
+    def _live_rows(self, dir_path: str, schema: pa.Schema) -> Tuple[Set[str], pa.Table]:
+        """``dir_path``'s part files, and its live rows as one Arrow table.
+        Call with ``self._lock`` held."""
+        names, live, _ = self._scan(dir_path)
+        files = [os.path.join(dir_path, n) for n in sorted(live)]
+        return names, pq.read_table(files, schema=schema) if files else schema.empty_table()
+
+    @_relisting
+    def _arrow(self, table: str) -> pa.Table:
+        """The table's live rows, read now; a log table's carry the
+        ``log_date`` of their partition as a last column."""
+        if table not in self.LOG_TABLES:
+            with self._lock:
+                return self._live_rows(self._path(table), _LEDGER[table])[1]
+        self.flush_logs()
+        tables, dates = [_LOG.empty_table()], []
+        with self._lock:
+            for d in self._log_partitions(table):
+                tables.append(self._live_rows(d, _LOG)[1])
+                dates += [d.rsplit("=", 1)[1]] * tables[-1].num_rows
+        return pa.concat_tables(tables).append_column("log_date", pa.array(dates, pa.string()))
+
     @_relisting
     def row_counts(self) -> Dict[str, int]:
         """Rows per ledger table on disk, from the live part files' footers."""
-        return {t: sum(pq.read_metadata(p).num_rows for p in self._live_paths(t)) for t in _LEDGER}
+        with self._lock:
+            live = {t: self._scan(self._path(t))[1] for t in _LEDGER}
+        return {
+            t: sum(pq.read_metadata(os.path.join(self._path(t), n)).num_rows for n in names)
+            for t, names in live.items()
+        }
 
-    def _read(self, table: str, schema: StructType) -> DataFrame:
-        """Analytical surface: the live files as a Spark DataFrame."""
-        if table in self.LOG_TABLES:
-            self.flush_logs()
-        files = self._live_paths(table)
-        if not files:
-            return self.spark.createDataFrame([], schema=schema)
-        return self.spark.read.schema(schema).option("basePath", self._path(table)).parquet(*files)
+    def _read(self, table: str) -> DataFrame:
+        """Analytical surface: the live rows, read now, as a Spark DataFrame."""
+        return self.spark.createDataFrame(self._arrow(table))
 
     # -- batches ------------------------------------------------------------
 
@@ -439,12 +432,12 @@ class SparkAdminStore:
         version row with ts ≤ the snapshot time, reduced to the newest
         (max seq) per entity. The ledger is append-only, so "what did
         the scheduler believe at 03:00?" is a filter, not a restore.
-        Returned as a Spark DataFrame: the filter and the window both
-        push into the scan.
+        Returned as a Spark DataFrame over the rows live at call time;
+        the filter and the window run in Spark.
         """
         if table not in self._VERSION_KEYS:
             raise ValueError(f"snapshot_as_of supports {tuple(self._VERSION_KEYS)}, got {table!r}")
-        df = self._read(table, _LEDGER[table]).where(F.col("ts") <= F.lit(ts))
+        df = self._read(table).where(F.col("ts") <= F.lit(ts))
         return _latest_versions(df, self._VERSION_KEYS[table])
 
     def compact(self) -> Dict[str, Tuple[int, int]]:
@@ -454,12 +447,12 @@ class SparkAdminStore:
         self.flush_logs()
         stats: Dict[str, Tuple[int, int]] = {}
         for table in filter(lambda t: os.path.isdir(self._path(t)), _LEDGER):
-            stats[table] = (self._rewrite(self._path(table), _pa_schema(_LEDGER[table])), 1)
+            stats[table] = (self._rewrite(self._path(table), _LEDGER[table]), 1)
         for table in filter(lambda t: os.path.isdir(self._path(t)), self.LOG_TABLES):
             parts = self._log_partitions(table)
             counts = [len(_part_files(part_dir)) for part_dir in parts]
             for part_dir in (p for p, n in zip(parts, counts) if n > 1):
-                self._rewrite(part_dir, _pa_schema(_LOG, drop=("log_date",)))
+                self._rewrite(part_dir, _LOG)
             stats[table] = (sum(counts), len(parts))
         return stats
 
@@ -468,7 +461,7 @@ class SparkAdminStore:
         the rows with ``ts`` at or after ``cutoff``."""
         keep = pc.field("ts") >= pa.scalar(cutoff, pa.timestamp("us"))
         for table in filter(lambda t: os.path.isdir(self._path(t)), _LEDGER):
-            self._rewrite(self._path(table), _pa_schema(_LEDGER[table]), keep)
+            self._rewrite(self._path(table), _LEDGER[table], keep)
 
     # -- jobs ----------------------------------------------------------------
 
@@ -570,7 +563,7 @@ class SparkAdminStore:
                     self._append(table, buf)
 
     def read_log(self, table: str) -> DataFrame:
-        return self._read(table, _LOG)
+        return self._read(table)
 
     def delete_old_logs(self, cutoff: datetime.datetime) -> None:
         """Drop whole log_date partitions dated before ``cutoff`` — a
@@ -583,11 +576,8 @@ class SparkAdminStore:
                     shutil.rmtree(part_dir)
                     self._retires.pop(part_dir, None)
 
-    @_relisting
     def earliest_log_ts(self, table: str = "batch_log") -> Optional[datetime.datetime]:
-        self.flush_logs()
-        files = self._live_paths(table)
-        return _naive(pc.min(pq.read_table(files, columns=["ts"])["ts"]).as_py()) if files else None
+        return pc.min(self._arrow(table)["ts"]).as_py()
 
 
 def _part_files(dir_path: str) -> Set[str]:
@@ -675,12 +665,12 @@ class JobLogger(_StoreLogger):
 def job_health_stats(store: "SparkAdminStore") -> "DataFrame":
     """Operational analytics over the jobs ledger: per job name, run /
     failure counts, failure rate, and p50/p95 duration of successful
-    runs. Latest-wins per job_id is a window over seq computed IN
-    Spark, so the analysis scales with the ledger (point lookups use
-    the store's in-memory index instead). This is the dashboard query
+    runs, over the jobs rows live at call time. Latest-wins per job_id
+    is a window over seq computed in Spark (point lookups use the
+    store's in-memory index instead). This is the dashboard query
     the reference's admin schema (adapter/admin_orm.py) exists to serve.
     """
-    latest = _latest_versions(store._read("jobs", _JOBS), "job_id")
+    latest = _latest_versions(store._read("jobs"), "job_id")
     latest = latest.where(F.col("state") != "running")
     ok_ms = F.when(F.col("state") == "succeeded", F.col("execution_millis"))
     return (

@@ -13,7 +13,7 @@ import abc
 import datetime
 import time
 
-from lime_etl_spark.domain.value_objects import ExecutionMillis, Timestamp
+from lime_etl_spark.domain.value_objects import ExecutionMillis
 
 __all__ = ("ClockAdapter", "LocalClockAdapter", "FakeClockAdapter")
 
@@ -30,9 +30,7 @@ class ClockAdapter(abc.ABC):
 
     def get_elapsed_time(self, start: datetime.datetime) -> ExecutionMillis:
         """Reference TimestampAdapter.get_elapsed_time (timestamp_adapter.py:22)."""
-        return ExecutionMillis.calculate(
-            start=Timestamp(start), end=Timestamp(self.now())
-        )
+        return ExecutionMillis(int((self.now() - start).total_seconds() * 1000))
 
 
 class LocalClockAdapter(ClockAdapter):

@@ -110,9 +110,7 @@ class DaysToKeep(_NonNegativeInt):
 
 
 class ExecutionMillis(_NonNegativeInt):
-    @staticmethod
-    def calculate(start: Timestamp, end: Timestamp) -> "ExecutionMillis":
-        return ExecutionMillis(int((end.value - start.value).total_seconds() * 1000))
+    pass
 
 
 class MinSecondsBetweenRefreshes(_NonNegativeInt):

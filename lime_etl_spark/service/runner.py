@@ -201,7 +201,6 @@ def _run_batch(
     except Exception as e:
         logger.exception(e)
         error = e
-    end = clock.now()
     result = BatchStatus(
         id=batch.batch_id,
         name=batch.batch_name,
@@ -209,9 +208,9 @@ def _run_batch(
         execution_success_or_failure=(
             Result.success() if error is None else Result.failure(str(error))
         ),
-        execution_millis=ExecutionMillis(int((end - start).total_seconds() * 1000)),
+        execution_millis=clock.get_elapsed_time(start),
         running=False,
-        ts=end,
+        ts=clock.now(),
     )
     store.save_batch(result)
     if error is not None:
@@ -411,7 +410,7 @@ def _run_job(
         if not batch.skip_tests and _tests_due(job, store, logger, clock):
             t0 = clock.now()
             simple = job.test(ctx)
-            t_millis = int((clock.now() - t0).total_seconds() * 1000)
+            t_millis = clock.get_elapsed_time(t0)
             if simple:
                 passed = sum(1 for t in simple if t.test_passed)
                 failed = sum(1 for t in simple if t.test_failed)
@@ -424,7 +423,7 @@ def _run_job(
                         job_id=job_id,
                         test_name=t.test_name,
                         outcome=t.outcome,
-                        execution_millis=ExecutionMillis(t_millis),
+                        execution_millis=t_millis,
                         ts=start,
                     )
                     for t in simple

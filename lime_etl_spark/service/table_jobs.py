@@ -82,10 +82,10 @@ class TableRefreshJob(SparkJobSpec):
 
         def write(tmp: str) -> str:
             df, how = self._source(ctx.spark), f"full refresh -> {self._target}"
-            if self._mode == "incremental" and path_exists(ctx.spark, self._target):
-                base = ctx.spark.read.parquet(self._target)
-                df = upsert(base, df.dropDuplicates(self._keys), self._keys)
-                how = f"incremental upsert on {self._keys}"
+            if self._mode == "incremental":  # the first run, with no target yet, dedupes too
+                df, how = df.dropDuplicates(self._keys), f"incremental upsert on {self._keys}"
+                if path_exists(ctx.spark, self._target):
+                    df = upsert(ctx.spark.read.parquet(self._target), df, self._keys)
             writer = df.observe(obs, F.count(F.lit(1)).alias("rows_written")).write
             if self._partition_by:
                 writer = writer.partitionBy(*self._partition_by)

@@ -8,6 +8,7 @@ column pruning and partition pruning for free. Never ``collect`` here.
 from __future__ import annotations
 
 import os
+from typing import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -49,14 +50,7 @@ def spread(df: DataFrame, *cols: str) -> DataFrame:
     keyed exchange it adds is bounded by one extra pass and only fires
     when files < cores, i.e. never on an at-scale table.
     """
-    target = df.sparkSession.sparkContext.defaultParallelism
-    try:
-        n_files = len(df.inputFiles())
-    except Exception:  # noqa: BLE001 - non-file-backed frame: planless fallback
-        n_files = 0
-    if n_files >= target:
-        return df
-    return df.repartition(target, *cols) if cols else df.repartition(target)
+    return _spread_to(df, df.sparkSession.sparkContext.defaultParallelism, cols)
 
 
 def spread_for_agg(df: DataFrame, *cols: str) -> DataFrame:
@@ -71,13 +65,17 @@ def spread_for_agg(df: DataFrame, *cols: str) -> DataFrame:
     spark = df.sparkSession
     conf = spark.conf.get("spark.sql.shuffle.partitions")
     target = int(conf) if conf.isdigit() else spark.sparkContext.defaultParallelism
+    return _spread_to(df, target, cols)
+
+
+def _spread_to(df: DataFrame, target: int, cols: Sequence[str]) -> DataFrame:
+    """``df`` repartitioned to ``target`` partitions (hashed on ``cols``,
+    if any) when its scan lists fewer than ``target`` files, else ``df``."""
     try:
         n_files = len(df.inputFiles())
-    except Exception:  # noqa: BLE001
+    except Exception:  # noqa: BLE001 - non-file-backed frame: planless fallback
         n_files = 0
-    if n_files >= target:
-        return df
-    return df.repartition(target, *cols)
+    return df if n_files >= target else df.repartition(target, *cols)
 
 
 def _path(sf_dir: str, name: str) -> str:

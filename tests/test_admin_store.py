@@ -455,7 +455,7 @@ def test_index_matches_fresh_store_after_own_appends(tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq_mod
 
-    from lime_etl_spark.adapter.admin_store import _JOBS, _pa_schema
+    from lime_etl_spark.adapter.admin_store import _JOBS
 
     store = SparkAdminStore(None, str(tmp_path / "admin"))
     t0 = datetime.datetime(2026, 3, 1, 9, 0)
@@ -471,7 +471,7 @@ def test_index_matches_fresh_store_after_own_appends(tmp_path):
         running=False, ts=aware))
     # ...and a part file whose ts column itself is tz-typed, as another
     # writer (e.g. Spark) may leave it
-    schema = _pa_schema(_JOBS).set(6, pa.field("ts", pa.timestamp("us", tz="UTC")))
+    schema = _JOBS.set(6, pa.field("ts", pa.timestamp("us", tz="UTC")))
     utc = datetime.datetime(2026, 3, 3, 8, 0, tzinfo=datetime.timezone.utc)
     row = {"job_id": "foreign-j", "batch_id": "aware", "job_name": "a-job1",
            "state": "succeeded", "reason": None, "execution_millis": 5, "ts": utc, "seq": 1}
@@ -519,6 +519,83 @@ def test_index_matches_fresh_store_after_rewrites(tmp_path, rewrite, by):
     # appends after the rewrite land on top of the rewritten index
     _fill_ledger(warm, now, "after", n_batches=2)
     _assert_index_matches_fresh(warm)
+
+
+def _analytics(store, as_of):
+    """Every analytical read of the store, as Spark DataFrames."""
+    from lime_etl_spark.adapter.admin_store import job_health_stats
+
+    return {
+        "batch_log": store.read_log("batch_log"),
+        "job_log": store.read_log("job_log"),
+        "batches": store.snapshot_as_of("batches", as_of),
+        "jobs": store.snapshot_as_of("jobs", as_of),
+        "job_health_stats": job_health_stats(store),
+    }
+
+
+def _counted(frames):
+    from collections import Counter
+
+    return {k: Counter(df.collect()) for k, df in frames.items()}
+
+
+@pytest.mark.parametrize("rewrite", ["compact", "delete_old_batches"])
+def test_analytics_frames_are_snapshots_that_survive_rewrites(spark, tmp_path, rewrite):
+    """A DataFrame taken before a rewrite retires the files it was read
+    from, and first run after it, returns the rows of a twin run before
+    it; a DataFrame taken after the rewrite shows the rewritten ledger."""
+    store = SparkAdminStore(spark, str(tmp_path / "admin"))
+    now = datetime.datetime.now()
+    _fill_ledger(store, now - datetime.timedelta(days=30), "old")
+    _fill_ledger(store, now - datetime.timedelta(hours=1), "new")
+    for i in range(4):  # two files in each log partition
+        store.log("batch_log", LogLevel.INFO, f"line {i}", "b", ts=now)
+        store.log("job_log", LogLevel.INFO, f"line {i}", "b", "job", ts=now)
+        if i % 2:
+            store.flush_logs()
+    want = _counted(_analytics(store, now))
+    assert all(want.values())
+    frames = _analytics(store, now)
+    if rewrite == "compact":
+        store.compact()
+    else:
+        store.delete_old_batches(cutoff=now - datetime.timedelta(days=3))
+    assert _counted(frames) == want
+    assert (_counted(_analytics(store, now)) == want) == (rewrite == "compact")
+
+
+def test_snapshot_as_of_matches_the_index(spark, tmp_path):
+    """``snapshot_as_of`` past the newest ts holds the same latest job
+    versions as the index, a part file with a tz-typed ts included."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq_mod
+
+    from lime_etl_spark.adapter.admin_store import _JOBS
+
+    store = SparkAdminStore(spark, str(tmp_path / "admin"))
+    t0 = datetime.datetime(2026, 3, 1, 9, 0)
+    _fill_ledger(store, t0, "a")
+    _fill_ledger(store, t0 + datetime.timedelta(hours=1), "b")
+    schema = _JOBS.set(6, pa.field("ts", pa.timestamp("us", tz="UTC")))
+    utc = datetime.datetime(2026, 3, 3, 8, 0, tzinfo=datetime.timezone.utc)
+    row = {"job_id": "foreign-j", "batch_id": "a-b0", "job_name": "a-job1",
+           "state": "succeeded", "reason": None, "execution_millis": 5, "ts": utc, "seq": 1}
+    pq_mod.write_table(pa.Table.from_pylist([row], schema=schema),
+                       os.path.join(store.root, "jobs", "part-foreign.parquet"))
+    index = {
+        (r.id, r.batch_id, r.job_name, str(r.status.state), r.status.reason,
+         r.execution_millis.value, r.ts)
+        for b in _ledger_keys(store.root)["batch_ids"]
+        for r in store.get_job_results(b)
+    }
+    snapshot = {
+        (r.job_id, r.batch_id, r.job_name, r.state, r.reason, r.execution_millis, r.ts)
+        for r in store.snapshot_as_of("jobs", datetime.datetime(2026, 3, 4)).collect()
+    }
+    assert snapshot == index and len(index) == 19
 
 
 def test_lookups_read_only_unseen_part_files(tmp_path, monkeypatch):

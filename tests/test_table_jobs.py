@@ -228,6 +228,23 @@ def test_refresh_test_on_an_empty_keyed_target(spark, tmp_path):
     assert outcomes["keyed_mart: unique on ['k']"].is_success
 
 
+def test_incremental_first_load_is_unique_on_keys(spark, tmp_path):
+    """An incremental refresh dedupes on its keys on every run, the first
+    one too, when there is no target to upsert into yet."""
+    from lime_etl_spark.domain.specs import JobContext
+
+    job = TableRefreshJob(
+        name="keyed_mart", target_path=str(tmp_path / "keyed_mart"), mode="incremental",
+        keys=["k"], source=lambda s: s.createDataFrame([(1, "a"), (1, "b"), (2, "c")], "k long, v string"),
+    )
+    ctx = JobContext(spark=spark, logger=_Log())
+    job.run(ctx)
+    assert spark.read.parquet(str(tmp_path / "keyed_mart")).count() == 2
+    assert job.last_metrics["rows_written"] == 2
+    assert "incremental upsert on ['k']" in ctx.logger.last
+    assert all(t.test_passed for t in job.test(ctx))
+
+
 def test_rewrite_leaves_sibling_swaps_in_flight_alone(tmp_path):
     """Parallel refresh jobs swap sibling targets in one lake directory,
     so a rewrite must not finish or drop a sibling's swap: ``orders`` is
