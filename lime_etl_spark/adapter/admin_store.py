@@ -33,6 +33,9 @@ DATA is 100 TB but the admin ledger is kilobytes per batch run):
   then deletes those (Delta Lake's add/remove log in one footer key).
   Readers skip retired files, so a crash at any step shows each row
   once, and files appended during a rewrite are never touched.
+- **One rewriter at a time, enforced** by an exclusive ``flock`` on the
+  root directory (readers share it, appends skip it), as Delta Lake
+  serialises commits. It needs a POSIX local disk: the ledger's by design.
 - **Incremental keyed index for point lookups.** The runner's gates
   read an in-memory index of the ledger tables, never a table scan.
   Part files are immutable and uuid-named, so a lookup lists the table
@@ -43,15 +46,16 @@ DATA is 100 TB but the admin ledger is kilobytes per batch run):
 
 from __future__ import annotations
 
+import contextlib
 import datetime
-import functools
+import fcntl
 import json
 import os
 import shutil
 import threading
 import time
 import uuid
-from typing import Any, Callable, Dict, FrozenSet, List, Optional, Sequence, Set, Tuple, TypeVar
+from typing import Any, Dict, FrozenSet, Iterator, List, NamedTuple, Optional, Sequence, Set, Tuple
 
 import pyarrow as pa
 import pyarrow.compute as pc
@@ -63,7 +67,6 @@ from lime_etl_spark.domain.clock import ClockAdapter
 from lime_etl_spark.domain.statuses import BatchStatus, JobResult, JobState, JobStatus, TestResult
 from lime_etl_spark.domain.value_objects import ExecutionMillis, LogLevel, LogMessage, Result
 
-T = TypeVar("T")
 _RETIRES = b"lime_etl_spark.retires"  # footer key: the part files a rewrite file replaces
 _REWRITE_TMP = ".rewrite-"  # a rewrite's hidden file; an append's is ``.part-<uuid>.parquet``
 
@@ -213,19 +216,7 @@ class _LedgerIndex:
             tests.append(t)
 
 
-def _relisting(fn: Callable[..., T]) -> Callable[..., T]:
-    """``fn``, run again while a concurrent rewrite deletes a listed file."""
-
-    @functools.wraps(fn)
-    def run(*args: Any, **kwargs: Any) -> T:
-        for _ in range(9):
-            try:
-                return fn(*args, **kwargs)
-            except FileNotFoundError:
-                pass
-        return fn(*args, **kwargs)
-
-    return run
+_Footer = NamedTuple("_Footer", [("retires", FrozenSet[str]), ("rows", int)])  # of a part file
 
 
 class SparkAdminStore:
@@ -238,11 +229,11 @@ class SparkAdminStore:
     `seq` (pid-stamped wall-clock ns, _mint_seq: a TOTAL order), so
     appends from many PROCESSES sharing a root merge safely. A rewrite
     survives a crash at any step and never touches a file appended
-    while it runs: one rewriter at a time (as the admin batch runs
-    them), any number of appenders. Each lookup ingests the unseen live
-    part files into the keyed index and rebuilds it when an ingested one
-    stops being live. One lock guards the index, the retire-set cache,
-    the log buffer and log entry ids, so worker threads may share a store.
+    while it runs: one rewriter at a time, enforced by a flock on the
+    root directory (POSIX local filesystems), any number of appenders.
+    Each lookup ingests the unseen live part files into the keyed index
+    and rebuilds it when one stops being live. One lock, taken before the
+    flock, guards the index, footers, log buffer and entry ids for threads.
     The analytical reads return Spark DataFrames built from Arrow
     snapshots of the live files; Spark never opens a ledger file.
     """
@@ -256,12 +247,25 @@ class SparkAdminStore:
         self._log_buffer: Dict[str, List[dict]] = {t: [] for t in self.LOG_TABLES}
         self._entry_id = 0
         self._idx = _LedgerIndex()
-        self._retires: Dict[str, Dict[str, FrozenSet[str]]] = {}  # dir -> file -> what it retires
+        self._footers: Dict[str, Dict[str, _Footer]] = {}  # dir -> part file -> its footer
 
     # -- plumbing -----------------------------------------------------------
 
     def _path(self, table: str) -> str:
         return os.path.join(self.root, table)
+
+    @contextlib.contextmanager
+    def _flock(self, kind: int) -> Iterator[None]:
+        """Hold ``kind`` (``LOCK_SH`` to read, ``LOCK_EX`` to rewrite) on the root
+        directory, no lock file; the OS drops it with its process. Never nest it."""
+        if not os.path.isdir(self.root):
+            os.makedirs(self.root, exist_ok=True)
+        fd = os.open(self.root, os.O_RDONLY)
+        try:
+            fcntl.flock(fd, kind)
+            yield
+        finally:
+            os.close(fd)
 
     def _append(self, table: str, rows: Sequence[dict]) -> None:
         """One file per append (per log_date for logs); ledger rows also enter the index."""
@@ -289,44 +293,43 @@ class SparkAdminStore:
         meta = None if retires is None else {_RETIRES: json.dumps(sorted(retires))}
         pq.write_table(tbl.replace_schema_metadata(meta), hidden)
         os.rename(hidden, os.path.join(dir_path, name))
-        self._retires.setdefault(dir_path, {})[name] = frozenset(retires or ())
+        self._footers.setdefault(dir_path, {})[name] = _Footer(frozenset(retires or ()), len(tbl))
         return name
 
-    def _scan(self, dir_path: str) -> Tuple[Set[str], Set[str], Dict[str, pa.Table]]:
-        """``dir_path``'s part files, the live ones (no listed file retires
-        them), and the tables read to learn an unseen file's retire set
-        (once per file: files are immutable). Call with ``self._lock`` held."""
-        names, known = _part_files(dir_path), self._retires.get(dir_path, {})
-        fresh = {n: pq.read_table(os.path.join(dir_path, n)) for n in names - known.keys()}
-        known = {n: known[n] for n in names & known.keys()}
-        for n, tbl in fresh.items():
-            known[n] = frozenset(json.loads((tbl.schema.metadata or {}).get(_RETIRES, b"[]")))
-        self._retires[dir_path] = known
-        return names, names - frozenset().union(*known.values()), fresh
+    def _scan(self, dir_path: str) -> Tuple[Set[str], Set[str]]:
+        """``dir_path``'s part files and the live ones (no listed file
+        retires them). An unseen file's footer is read once: files are
+        immutable. Call with ``self._lock`` and the flock held."""
+        names, old = _part_files(dir_path), self._footers.get(dir_path, {})
+        self._footers[dir_path] = known = {n: old[n] for n in names & old.keys()}
+        for n in names - old.keys():
+            meta = pq.read_metadata(os.path.join(dir_path, n))
+            retires = json.loads((meta.metadata or {}).get(_RETIRES, b"[]"))
+            known[n] = _Footer(frozenset(retires), meta.num_rows)
+        return names, names - frozenset().union(*(f.retires for f in known.values()))
 
     def _log_partitions(self, table: str) -> List[str]:
         path = self._path(table)
         entries = os.listdir(path) if os.path.isdir(path) else ()
         return [os.path.join(path, e) for e in entries if e.startswith("log_date=")]
 
-    @_relisting
     def _index(self, *tables: str) -> _LedgerIndex:
         """The index, caught up with the live part files of ``tables``.
         Call with ``self._lock`` held."""
-        found = {t: self._scan(self._path(t)) for t in tables}
-        if any(not self._idx.files[t] <= found[t][1] for t in tables):  # one was retired
-            self._idx = _LedgerIndex()
-        for t, (_, live, fresh) in found.items():
-            for n in live - self._idx.files[t]:
-                tbl = fresh[n] if n in fresh else pq.read_table(os.path.join(self._path(t), n))
-                self._idx.ingest(t, n, _rows(tbl))
+        with self._flock(fcntl.LOCK_SH):
+            live = {t: self._scan(self._path(t))[1] for t in tables}
+            if any(not self._idx.files[t] <= live[t] for t in tables):  # one was retired
+                self._idx = _LedgerIndex()
+            for t in tables:
+                for n in live[t] - self._idx.files[t]:
+                    self._idx.ingest(t, n, _rows(pq.read_table(os.path.join(self._path(t), n))))
         return self._idx
 
     def _rewrite(self, path: str, schema: pa.Schema, keep: pc.Expression = pc.scalar(True)) -> int:
         """Replace the part files of ``path`` (a ledger table or log
         partition) with one file of their live rows that pass ``keep``;
         files appended after its listing stay. Returns how many it replaced."""
-        with self._lock:
+        with self._lock, self._flock(fcntl.LOCK_EX):
             inputs, tbl = self._live_rows(path, schema)
             self._write_file(path, tbl.filter(keep), retires=inputs)
             crashed = [n for n in os.listdir(path) if n.startswith(_REWRITE_TMP)]  # unpublished
@@ -336,35 +339,30 @@ class SparkAdminStore:
 
     def _live_rows(self, dir_path: str, schema: pa.Schema) -> Tuple[Set[str], pa.Table]:
         """``dir_path``'s part files, and its live rows as one Arrow table.
-        Call with ``self._lock`` held."""
-        names, live, _ = self._scan(dir_path)
+        Call with ``self._lock`` and the flock held."""
+        names, live = self._scan(dir_path)
         files = [os.path.join(dir_path, n) for n in sorted(live)]
         return names, pq.read_table(files, schema=schema) if files else schema.empty_table()
 
-    @_relisting
     def _arrow(self, table: str) -> pa.Table:
         """The table's live rows, read now; a log table's carry the
         ``log_date`` of their partition as a last column."""
         if table not in self.LOG_TABLES:
-            with self._lock:
+            with self._lock, self._flock(fcntl.LOCK_SH):
                 return self._live_rows(self._path(table), _LEDGER[table])[1]
         self.flush_logs()
         tables, dates = [_LOG.empty_table()], []
-        with self._lock:
+        with self._lock, self._flock(fcntl.LOCK_SH):
             for d in self._log_partitions(table):
                 tables.append(self._live_rows(d, _LOG)[1])
                 dates += [d.rsplit("=", 1)[1]] * tables[-1].num_rows
         return pa.concat_tables(tables).append_column("log_date", pa.array(dates, pa.string()))
 
-    @_relisting
     def row_counts(self) -> Dict[str, int]:
         """Rows per ledger table on disk, from the live part files' footers."""
-        with self._lock:
+        with self._lock, self._flock(fcntl.LOCK_SH):
             live = {t: self._scan(self._path(t))[1] for t in _LEDGER}
-        return {
-            t: sum(pq.read_metadata(os.path.join(self._path(t), n)).num_rows for n in names)
-            for t, names in live.items()
-        }
+            return {t: sum(self._footers[self._path(t)][n].rows for n in live[t]) for t in _LEDGER}
 
     def _read(self, table: str) -> DataFrame:
         """Analytical surface: the live rows, read now, as a Spark DataFrame."""
@@ -570,11 +568,12 @@ class SparkAdminStore:
         filesystem metadata operation, no data rewrite."""
         self.flush_logs()
         cutoff_date = cutoff.strftime("%Y-%m-%d")
-        for table in self.LOG_TABLES:
-            for part_dir in self._log_partitions(table):
-                if part_dir.rsplit("=", 1)[1] < cutoff_date:
-                    shutil.rmtree(part_dir)
-                    self._retires.pop(part_dir, None)
+        with self._lock, self._flock(fcntl.LOCK_EX):
+            for table in self.LOG_TABLES:
+                for part_dir in self._log_partitions(table):
+                    if part_dir.rsplit("=", 1)[1] < cutoff_date:
+                        shutil.rmtree(part_dir)
+                        self._footers.pop(part_dir, None)
 
     def earliest_log_ts(self, table: str = "batch_log") -> Optional[datetime.datetime]:
         return pc.min(self._arrow(table)["ts"]).as_py()

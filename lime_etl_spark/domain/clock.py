@@ -29,8 +29,9 @@ class ClockAdapter(abc.ABC):
         raise NotImplementedError
 
     def get_elapsed_time(self, start: datetime.datetime) -> ExecutionMillis:
-        """Reference TimestampAdapter.get_elapsed_time (timestamp_adapter.py:22)."""
-        return ExecutionMillis(int((self.now() - start).total_seconds() * 1000))
+        """Reference TimestampAdapter.get_elapsed_time (timestamp_adapter.py:22);
+        0 when the clock stepped back past ``start``."""
+        return ExecutionMillis(max(0, int((self.now() - start).total_seconds() * 1000)))
 
 
 class LocalClockAdapter(ClockAdapter):

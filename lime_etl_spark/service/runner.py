@@ -171,7 +171,8 @@ def _run_batch(
     max_workers: int,
 ) -> Tuple[BatchStatus, BatchDelta]:
     """The batch bracket: a running row, the ready queue, then the final
-    row and the delta. On an error it saves the failed row and re-raises."""
+    row and the delta. On any error, ``KeyboardInterrupt`` too, it saves
+    the failed row, flushes the logs and re-raises."""
     clock = clock or LocalClockAdapter()
     start = clock.now()
     logger = BatchLogger(store, batch.batch_id, log_to_console, clock=clock)
@@ -189,7 +190,7 @@ def _run_batch(
     )
     logger.info(f"Starting batch [{batch.batch_name}]...")
     job_results: List[JobResult] = []
-    error: Optional[Exception] = None
+    error: Optional[BaseException] = None
     try:
         jobs = batch.create_jobs()
         check_dependencies(jobs)
@@ -198,7 +199,7 @@ def _run_batch(
             batch, jobs, spark, store, logger, start, resources or {}, clock,
             max_workers,
         )
-    except Exception as e:
+    except BaseException as e:
         logger.exception(e)
         error = e
     result = BatchStatus(
@@ -206,7 +207,7 @@ def _run_batch(
         name=batch.batch_name,
         job_results=frozenset(job_results),
         execution_success_or_failure=(
-            Result.success() if error is None else Result.failure(str(error))
+            Result.success() if error is None else Result.failure(str(error) or repr(error))
         ),
         execution_millis=clock.get_elapsed_time(start),
         running=False,
@@ -329,7 +330,7 @@ def _skip_decision(
     last_ok = store.get_last_successful_ts(job.job_name)
     if last_ok is not None:
         since = (clock.now() - last_ok).total_seconds()
-        if since <= job.min_seconds_between_refreshes:
+        if 0 <= since <= job.min_seconds_between_refreshes:  # < 0: the clock stepped back
             logger.info(
                 f"[{job.job_name}] was run successfully {since:.0f} seconds ago and "
                 f"it is set to refresh every {job.min_seconds_between_refreshes} "
@@ -476,9 +477,9 @@ def _tests_due(
             f"The tests for [{job.job_name}] have not been run before, so they will be run now."
         )
         return True
-    last_ts = max(t.ts for t in last)
-    since = int((clock.now() - last_ts).total_seconds())
-    if since >= job.min_seconds_between_tests:
+    last_ts, now = max(t.ts for t in last), clock.now()
+    since = int((now - last_ts).total_seconds())
+    if last_ts > now or since >= job.min_seconds_between_tests:  # or the clock stepped back
         logger.info(
             f"The tests for [{job.job_name}] were last run {since} seconds ago, and they "
             f"are set to run every {job.min_seconds_between_tests}, so they will be run now."
@@ -502,10 +503,8 @@ def _run_with_retry(
 ) -> Tuple[JobStatus, ExecutionMillis]:
     retries = 0
     while True:
-        try:
+        try:  # only the body: its failure, and nothing else, is retried
             status = _run_attempt(job, ctx, spark, group)
-            millis = clock.get_elapsed_time(start)
-            return status or JobStatus.success(), millis
         except Exception:
             if job.max_retries > retries:
                 delay = job.retry_policy.delay(retries)
@@ -520,6 +519,7 @@ def _run_with_retry(
                 continue
             logger.info(f"[{job.job_name}] failed after {job.max_retries} retries.")
             raise
+        return status or JobStatus.success(), clock.get_elapsed_time(start)
 
 
 def _run_attempt(

@@ -866,10 +866,23 @@ def _mp_paced_appender(args) -> int:
     return w
 
 
-def test_rewrites_next_to_multiprocess_appends_lose_nothing(tmp_path):
+def _mp_rewriter(root, stop) -> None:
+    """Child-process body: loop the rewrites until ``stop`` is set."""
+    import datetime as dt
+
+    from lime_etl_spark.adapter.admin_store import SparkAdminStore
+
+    store = SparkAdminStore(None, root)
+    while not stop.is_set():
+        store.compact()
+        store.delete_old_batches(cutoff=dt.datetime(2000, 1, 1))
+
+
+def test_rewrites_next_to_multiprocess_appends_lose_nothing(tmp_path, rewriter_procs=0):
     """Three processes append batches and jobs while this one loops
-    compact() and delete_old_batches(cutoff in the past): no row is
-    lost, and a fresh store's getters match the rewriting store's."""
+    compact() and delete_old_batches(cutoff in the past), and
+    ``rewriter_procs`` more processes loop them too: no row is lost or
+    duplicated, and a fresh store's getters match the rewriting store's."""
     import multiprocessing as mp
 
     root = str(tmp_path / "admin_mp")
@@ -877,13 +890,23 @@ def test_rewrites_next_to_multiprocess_appends_lose_nothing(tmp_path):
     _fill_ledger(warm, datetime.datetime(2024, 3, 1, 11, 0), "pre")
     pre = warm.row_counts()
     n_workers, n, seen = 3, 60, []
-    with mp.get_context("spawn").Pool(n_workers) as pool:
+    ctx = mp.get_context("spawn")
+    stop = ctx.Event()
+    rewriters = [ctx.Process(target=_mp_rewriter, args=(root, stop), daemon=True)
+                 for _ in range(rewriter_procs)]
+    for p in rewriters:
+        p.start()
+    with ctx.Pool(n_workers) as pool:
         done = pool.map_async(_mp_paced_appender, [(root, w, n) for w in range(n_workers)])
         while not done.ready():
             warm.compact()
             warm.delete_old_batches(cutoff=datetime.datetime(2000, 1, 1))
             seen.append(warm.row_counts()["batches"])
         assert sorted(done.get()) == list(range(n_workers))
+    stop.set()
+    for p in rewriters:
+        p.join(timeout=60)
+        assert p.exitcode == 0  # no rewrite raised in the other process
     assert len(set(seen)) >= 3  # the rewrites ran while the others appended
 
     assert SparkAdminStore(None, root).row_counts() == {
@@ -895,6 +918,111 @@ def test_rewrites_next_to_multiprocess_appends_lose_nothing(tmp_path):
     for w in range(n_workers):
         assert warm.get_batch(f"batch-w{w}").execution_millis.value == n - 1
         assert len(warm.get_job_results(f"batch-w{w}")) == n
+
+
+def test_rewrites_in_two_processes_next_to_appends_lose_and_duplicate_nothing(tmp_path):
+    test_rewrites_next_to_multiprocess_appends_lose_nothing(tmp_path, rewriter_procs=1)
+
+
+# --- one rewriter at a time ---------------------------------------------------------
+
+
+def test_a_second_rewriter_waits_for_the_first(tmp_path, monkeypatch):
+    """Store B's compact() starts on another thread once store A's
+    compact() has listed the batches files. B waits for A's rewrite;
+    neither raises, and no row is lost or duplicated (with both
+    rewrites interleaved, each published a file that retired the same
+    inputs, and both stayed live)."""
+    import threading
+
+    from lime_etl_spark.adapter import admin_store
+
+    root = str(tmp_path / "admin")
+    a, b = SparkAdminStore(None, root), SparkAdminStore(None, root)
+    _fill_ledger(a, datetime.datetime(2026, 6, 1, 9, 0), "a")
+    before = a.row_counts()
+    errors, blocked, armed = [], [], [threading.get_ident()]
+    real_part_files = admin_store._part_files
+
+    def b_compact():
+        try:
+            b.compact()
+        except Exception as e:  # noqa: BLE001 - reported by the assertion below
+            errors.append(e)
+
+    other = threading.Thread(target=b_compact)
+
+    def part_files(dir_path):
+        names = real_part_files(dir_path)
+        if armed and armed[0] == threading.get_ident() and dir_path.endswith("batches"):
+            armed.clear()  # A has listed the batches files
+            other.start()
+            other.join(timeout=0.5)
+            blocked.append(other.is_alive())
+        return names
+
+    monkeypatch.setattr(admin_store, "_part_files", part_files)
+    a.compact()
+    other.join(timeout=60)
+    assert not other.is_alive() and errors == []
+    assert blocked == [True]
+    assert SparkAdminStore(None, root).row_counts() == before
+    _assert_index_matches_fresh(a)
+
+
+def test_readers_and_rewriters_on_threads_of_one_process_all_finish(tmp_path):
+    """Stores on one root, three reading and three rewriting, each on
+    its own thread: the shared and exclusive locks of one process never
+    wait on each other for good, and every read is whole."""
+    root = str(tmp_path / "admin")
+    seed = SparkAdminStore(None, root)
+    _fill_ledger(seed, datetime.datetime(2026, 6, 1, 9, 0), "a")
+    seed.log("batch_log", LogLevel.INFO, "line", "a-b0", ts=NOW)
+    seed.flush_logs()
+    want, errors, counts = seed.row_counts(), [], []
+
+    def body(w):
+        store = SparkAdminStore(None, root)
+        try:
+            for _ in range(10):
+                if w % 2:
+                    store.compact()
+                    store.delete_old_batches(cutoff=datetime.datetime(2000, 1, 1))
+                    continue
+                counts.append(store.row_counts())
+                assert store._arrow("jobs").num_rows == want["jobs"]
+                assert store.earliest_log_ts("batch_log") == NOW
+                assert SparkAdminStore(None, root).get_batch("a-b0") is not None
+        except Exception as e:  # noqa: BLE001 - reported by the assertion below
+            errors.append(e)
+
+    _run_threads(6, body)
+    assert errors == []
+    assert counts == [want] * 30
+
+
+def test_a_fresh_store_reads_foreign_part_files_once(tmp_path, monkeypatch):
+    """A fresh store learns each part file's retire set from its footer
+    alone, so reading a table over N foreign part files reads their
+    data in one call, and counting their rows reads no data."""
+    import pyarrow.parquet as pq_mod
+
+    root = str(tmp_path / "admin")
+    _fill_ledger(SparkAdminStore(None, root), datetime.datetime(2026, 4, 1, 9, 0), "x")
+    reads, real_read_table = [], pq_mod.read_table
+
+    def read_table(source, *args, **kwargs):
+        reads.append(source)
+        return real_read_table(source, *args, **kwargs)
+
+    monkeypatch.setattr(pq_mod, "read_table", read_table)
+    fresh = SparkAdminStore(None, root)
+    assert fresh._arrow("jobs").num_rows == 18  # over 18 part files
+    assert len(reads) == 1
+    reads.clear()
+    counts = SparkAdminStore(None, root).row_counts()
+    assert counts == {"batches": 5, "jobs": 18, "test_results": 18}
+    assert reads == []
 
 
 # --- crash safety of the rewrites ------------------------------------------------

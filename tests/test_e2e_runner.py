@@ -752,3 +752,106 @@ def test_log_rows_follow_the_runner_clock(spark, store):
         assert rows, table
         stamps = {(r.ts.date(), str(r.log_date)) for r in rows}
         assert stamps == {(datetime.date(2020, 1, 1), "2020-01-01")}, table
+
+
+class _FailingBatch(SparkBatchSpec):
+    """A batch whose ``create_jobs`` raises ``error``."""
+
+    def __init__(self, error: BaseException):
+        super().__init__(name="failing_batch", jobs=[])
+        self.error = error
+
+    def create_jobs(self):
+        raise self.error
+
+
+@pytest.mark.parametrize(
+    "error,reason",
+    [
+        (RuntimeError(), "RuntimeError()"),
+        (AssertionError(), "AssertionError()"),  # what a bare ``assert`` raises
+        (KeyboardInterrupt(), "KeyboardInterrupt()"),
+    ],
+    ids=["RuntimeError", "assert", "KeyboardInterrupt"],
+)
+def test_batch_error_without_a_message_closes_its_batch_row(spark, store, error, reason):
+    """An error whose message is empty, or that is not an Exception,
+    still reaches the caller as itself, after the final failed batch
+    row and the batch log are written."""
+    batch = _FailingBatch(error)
+    with pytest.raises(type(error)) as raised:
+        run_batch(batch, spark, store)
+    assert raised.value is error
+    fresh = SparkAdminStore(spark, store.root)
+    row = fresh.get_batch(batch.batch_id)
+    assert row is not None and not row.running
+    assert row.execution_success_or_failure == Result.failure(reason)
+    messages = [r.message for r in fresh.read_log("batch_log").collect()]
+    assert reason in messages
+
+
+@pytest.mark.parametrize("where", ["body", "later_job"])
+def test_clock_step_back_never_fails_or_reruns_a_job(spark, store, where):
+    """The clock steps back an hour (a DST fall-back, an NTP step)
+    inside a job body, or in a later job's: every body runs once and
+    succeeds, the batch row is final, and no duration is negative."""
+    import datetime
+
+    from lime_etl_spark.domain.clock import FakeClockAdapter
+
+    clock = FakeClockAdapter(datetime.datetime(2020, 1, 1, 2, 0))
+    calls = {"first": 0, "second": 0}
+
+    def body(name, step):
+        def run(ctx):
+            calls[name] += 1
+            clock.advance(step)
+            return JobStatus.success()
+
+        return run
+
+    first_step = -3600 if where == "body" else 60
+    jobs = [SimpleJobSpec(name="first", run=body("first", first_step), max_retries=2)]
+    if where == "later_job":
+        jobs.append(SimpleJobSpec(
+            name="second", run=body("second", -3600), dependencies=["first"], max_retries=2))
+    batch = SparkBatchSpec(name="stepped_batch", jobs=jobs)
+    result = run_batch(batch, spark, store, clock=clock)
+    assert calls == {"first": 1, "second": 1 if where == "later_job" else 0}
+    assert result.broken_jobs == set()
+    assert all(r.status.is_success for r in result.job_results)
+    row = SparkAdminStore(spark, store.root).get_batch(batch.batch_id)
+    assert row is not None and not row.running and row.execution_success_or_failure.is_success
+    millis = [row.execution_millis.value] + [r.execution_millis.value for r in row.job_results]
+    assert len(millis) == len(jobs) + 1 and min(millis) >= 0
+
+
+def test_refresh_and_test_gates_after_a_clock_step_back(spark, store):
+    """A job that last succeeded (and was tested) "later" than now,
+    because the clock stepped back, is due: its refresh gate does not
+    skip it, and its tests run again."""
+    import datetime
+
+    from lime_etl_spark.domain.clock import FakeClockAdapter
+
+    clock = FakeClockAdapter(datetime.datetime(2020, 1, 1, 2, 0))
+    runs = {"body": 0, "tests": 0}
+
+    def counted(ctx):
+        runs["body"] += 1
+        return JobStatus.success()
+
+    def tests(ctx):
+        runs["tests"] += 1
+        return [SimpleTestResult(test_name="ok", outcome=Result.success())]
+
+    def mk():
+        return SparkBatchSpec(name="gated", jobs=[SimpleJobSpec(
+            name="gated_job", run=counted, test=tests, min_seconds_between_tests=600)])
+
+    run_batch(mk(), spark, store, clock=clock)
+    assert runs == {"body": 1, "tests": 1}
+    clock.advance(-3000)  # 01:10, before the 02:00 run
+    result = run_batch(mk(), spark, store, clock=clock)
+    assert runs == {"body": 2, "tests": 2}
+    assert next(iter(result.job_results)).status.is_success
