@@ -9,9 +9,10 @@ Storage decisions (sized for a 1000-executor deployment where the
 DATA is 100 TB but the admin ledger is kilobytes per batch run):
 
 - **Append-only event sourcing.** Parquet files are immutable, so
-  updates are new rows with a monotonically increasing ``seq``;
-  readers reconstruct current state latest-wins (the same
-  ``dedup_latest`` pattern our ETL operator family exposes).
+  updates are new rows with a monotonically increasing ``seq``. One
+  fold, ``_LedgerIndex``, reconstructs current state latest-wins for
+  every reader: the runner's lookups, the dashboard and time travel.
+  Every ``ts`` is naive UTC; a tz-aware foreign file reads as UTC too.
 - **Driver-side writes and reads via Arrow.** Bookkeeping rows are
   driver metadata, written like Spark's own event logs by the driver on
   its local disk: one tiny pyarrow file per state transition costs
@@ -60,7 +61,7 @@ from typing import Any, Dict, FrozenSet, Iterator, List, NamedTuple, Optional, S
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lime_etl_spark.domain.clock import ClockAdapter
@@ -133,8 +134,8 @@ _LOG = pa.schema(  # a log part file; its rows' log_date is its partition's name
 # monotone across every store instance in the process and survives
 # fork (the child's pid bits differ). Cross-process ordering tracks
 # wall time at ~4 ms granularity with the pid as tie-break — total,
-# never equal. seq is only ever compared with other seqs (latest-wins
-# windows, max); time-travel reads filter on the `ts` column.
+# never equal. seq is only ever compared with other seqs (the index's
+# latest-wins fold); time-travel reads filter on the `ts` column.
 _SEQ_PID_BITS = 22
 _SEQ_PID_MASK = (1 << _SEQ_PID_BITS) - 1
 _SEQ_LOCK = threading.Lock()
@@ -153,12 +154,12 @@ def _mint_seq() -> int:
 
 def _rows(tbl: pa.Table) -> List[Dict[str, Any]]:
     """Rows of a ledger table read from parquet, a tz-aware timestamp
-    as local naive time, like every ledger ts."""
+    as naive UTC, like every ledger ts."""
     rows = tbl.to_pylist()
     for f in tbl.schema:
         if pa.types.is_timestamp(f.type) and f.type.tz is not None:
             for r in rows:
-                r[f.name] = r[f.name].astimezone().replace(tzinfo=None)
+                r[f.name] = r[f.name].astimezone(datetime.timezone.utc).replace(tzinfo=None)
     return rows
 
 
@@ -166,7 +167,8 @@ _LEDGER = {"batches": _BATCHES, "jobs": _JOBS, "test_results": _TEST_RESULTS}
 
 
 class _LedgerIndex:
-    """Keyed state of the ledger tables, fed one part file at a time.
+    """Keyed state of the ledger tables, fed one part file at a time: the
+    one place that decides which version row of a batch or job wins.
     Every fold is order-independent (latest-wins on seq, max over ts,
     union of test rows), so files may arrive in any order."""
 
@@ -328,9 +330,12 @@ class SparkAdminStore:
     def _rewrite(self, path: str, schema: pa.Schema, keep: pc.Expression = pc.scalar(True)) -> int:
         """Replace the part files of ``path`` (a ledger table or log
         partition) with one file of their live rows that pass ``keep``;
-        files appended after its listing stay. Returns how many it replaced."""
+        files appended after its listing stay. Returns how many it replaced;
+        with none (a partition another store dropped) it writes nothing."""
         with self._lock, self._flock(fcntl.LOCK_EX):
             inputs, tbl = self._live_rows(path, schema)
+            if not inputs:
+                return 0
             self._write_file(path, tbl.filter(keep), retires=inputs)
             crashed = [n for n in os.listdir(path) if n.startswith(_REWRITE_TMP)]  # unpublished
             for n in sorted(inputs) + crashed:
@@ -363,10 +368,6 @@ class SparkAdminStore:
         with self._lock, self._flock(fcntl.LOCK_SH):
             live = {t: self._scan(self._path(t))[1] for t in _LEDGER}
             return {t: sum(self._footers[self._path(t)][n].rows for n in live[t]) for t in _LEDGER}
-
-    def _read(self, table: str) -> DataFrame:
-        """Analytical surface: the live rows, read now, as a Spark DataFrame."""
-        return self.spark.createDataFrame(self._arrow(table))
 
     # -- batches ------------------------------------------------------------
 
@@ -422,21 +423,20 @@ class SparkAdminStore:
             prev = [(seq, bid) for bid, seq in completed.items() if bid != exclude_id]
             return self.get_batch(max(prev)[1]) if prev else None
 
-    _VERSION_KEYS = {"batches": "batch_id", "jobs": "job_id"}
-
     def snapshot_as_of(self, table: str, ts: datetime.datetime) -> DataFrame:
         """Time travel over the event-sourced ledger: the latest-wins
-        state of ``batches``/``jobs`` as it stood at ``ts`` — every
-        version row with ts ≤ the snapshot time, reduced to the newest
-        (max seq) per entity. The ledger is append-only, so "what did
-        the scheduler believe at 03:00?" is a filter, not a restore.
-        Returned as a Spark DataFrame over the rows live at call time;
-        the filter and the window run in Spark.
-        """
-        if table not in self._VERSION_KEYS:
-            raise ValueError(f"snapshot_as_of supports {tuple(self._VERSION_KEYS)}, got {table!r}")
-        df = self._read(table).where(F.col("ts") <= F.lit(ts))
-        return _latest_versions(df, self._VERSION_KEYS[table])
+        state of ``batches``/``jobs`` as it stood at ``ts`` (UTC) — the
+        version rows with ts ≤ the snapshot time, folded by a fresh
+        ``_LedgerIndex`` like every lookup. The ledger is append-only, so
+        "what did the scheduler believe at 03:00?" is a filter, not a
+        restore. A Spark DataFrame over the rows live at call time."""
+        if table not in ("batches", "jobs"):
+            raise ValueError(f"snapshot_as_of supports ('batches', 'jobs'), got {table!r}")
+        idx = _LedgerIndex()
+        keep = pc.field("ts") <= pa.scalar(ts, pa.timestamp("us"))
+        idx.ingest(table, "", _rows(self._arrow(table).filter(keep)))
+        latest = list((idx.batches if table == "batches" else idx.jobs).values())
+        return self.spark.createDataFrame(pa.Table.from_pylist(latest, schema=_LEDGER[table]))
 
     def compact(self) -> Dict[str, Tuple[int, int]]:
         """Fold each ledger table's part files into one file (and each log
@@ -445,7 +445,8 @@ class SparkAdminStore:
         self.flush_logs()
         stats: Dict[str, Tuple[int, int]] = {}
         for table in filter(lambda t: os.path.isdir(self._path(t)), _LEDGER):
-            stats[table] = (self._rewrite(self._path(table), _LEDGER[table]), 1)
+            n = self._rewrite(self._path(table), _LEDGER[table])
+            stats[table] = (n, min(n, 1))
         for table in filter(lambda t: os.path.isdir(self._path(t)), self.LOG_TABLES):
             parts = self._log_partitions(table)
             counts = [len(_part_files(part_dir)) for part_dir in parts]
@@ -561,7 +562,8 @@ class SparkAdminStore:
                     self._append(table, buf)
 
     def read_log(self, table: str) -> DataFrame:
-        return self._read(table)
+        """The log table's live rows, read now, as a Spark DataFrame."""
+        return self.spark.createDataFrame(self._arrow(table))
 
     def delete_old_logs(self, cutoff: datetime.datetime) -> None:
         """Drop whole log_date partitions dated before ``cutoff`` — a
@@ -596,12 +598,6 @@ def _test_result(r: Dict[str, Any]) -> TestResult:
         execution_millis=ExecutionMillis(r["execution_millis"]),
         ts=r["ts"],
     )
-
-
-def _latest_versions(df: DataFrame, key: str) -> DataFrame:
-    """The max-seq row per ``key``, as a window in Spark."""
-    w = Window.partitionBy(key).orderBy(F.desc("seq"))
-    return df.withColumn("__rn", F.row_number().over(w)).where(F.col("__rn") == 1).drop("__rn")
 
 
 class _StoreLogger:
@@ -664,13 +660,15 @@ class JobLogger(_StoreLogger):
 def job_health_stats(store: "SparkAdminStore") -> "DataFrame":
     """Operational analytics over the jobs ledger: per job name, run /
     failure counts, failure rate, and p50/p95 duration of successful
-    runs, over the jobs rows live at call time. Latest-wins per job_id
-    is a window over seq computed in Spark (point lookups use the
-    store's in-memory index instead). This is the dashboard query
-    the reference's admin schema (adapter/admin_orm.py) exists to serve.
+    runs, over the jobs rows live at call time. The latest row per
+    job_id comes from the store's index, the fold every lookup reads, so
+    a warm store reads no file; the aggregate runs in Spark. This is the
+    dashboard query the reference's admin schema (adapter/admin_orm.py)
+    exists to serve.
     """
-    latest = _latest_versions(store._read("jobs"), "job_id")
-    latest = latest.where(F.col("state") != "running")
+    with store._lock:
+        rows = [r for r in store._index("jobs").jobs.values() if r["state"] != "running"]
+    latest = store.spark.createDataFrame(pa.Table.from_pylist(rows, schema=_JOBS))
     ok_ms = F.when(F.col("state") == "succeeded", F.col("execution_millis"))
     return (
         latest.groupBy("job_name")

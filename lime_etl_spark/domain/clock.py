@@ -3,7 +3,7 @@
 The reference threads a TimestampAdapter resource through the runner so
 refresh-interval / test-interval decisions are testable without real
 sleeps; ``ClockAdapter`` is the same seam. Production uses
-``LocalClockAdapter`` (wall clock); tests use ``FakeClockAdapter`` and
+``LocalClockAdapter`` (wall clock, naive UTC); tests use ``FakeClockAdapter`` and
 advance time explicitly.
 """
 
@@ -36,7 +36,8 @@ class ClockAdapter(abc.ABC):
 
 class LocalClockAdapter(ClockAdapter):
     def now(self) -> datetime.datetime:
-        return datetime.datetime.now()
+        """Naive UTC, so a DST change never steps it (the ledger's ts is UTC)."""
+        return datetime.datetime.now(datetime.timezone.utc).replace(tzinfo=None)
 
     def sleep(self, seconds: float) -> None:
         if seconds > 0:

@@ -478,7 +478,7 @@ def test_index_matches_fresh_store_after_own_appends(tmp_path):
     pq_mod.write_table(pa.Table.from_pylist([row], schema=schema),
                        os.path.join(store.root, "jobs", "part-foreign.parquet"))
     _assert_index_matches_fresh(store)
-    assert store.get_last_successful_ts("a-job1") == utc.astimezone().replace(tzinfo=None)
+    assert store.get_last_successful_ts("a-job1") == utc.replace(tzinfo=None)
     assert store.get_previous_batch("a-nightly").id == "aware"
     assert store.get_previous_batch("a-nightly", exclude_id="aware").id == "a-b1"
 
@@ -565,9 +565,61 @@ def test_analytics_frames_are_snapshots_that_survive_rewrites(spark, tmp_path, r
     assert (_counted(_analytics(store, now)) == want) == (rewrite == "compact")
 
 
+def _window_latest(df, key):
+    """The reference reduction for the index's latest-wins fold: the
+    max-seq row per ``key``, as a Spark window."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    w = Window.partitionBy(key).orderBy(F.desc("seq"))
+    return df.withColumn("__rn", F.row_number().over(w)).where(F.col("__rn") == 1).drop("__rn")
+
+
+def _assert_folds_match_the_window(spark, store, stamps):
+    """``job_health_stats``, and ``snapshot_as_of`` at each of ``stamps``,
+    equal the Spark-window reduction of the live rows."""
+    from collections import Counter
+
+    from pyspark.sql import functions as F
+
+    from lime_etl_spark.adapter.admin_store import job_health_stats
+
+    live = {t: spark.createDataFrame(store._arrow(t)) for t in ("batches", "jobs")}
+    latest = _window_latest(live["jobs"], "job_id").where(F.col("state") != "running")
+    ok_ms = F.when(F.col("state") == "succeeded", F.col("execution_millis"))
+    want = (
+        latest.groupBy("job_name")
+        .agg(
+            F.count(F.lit(1)).alias("n_runs"),
+            F.sum(F.when(F.col("state") == "failed", 1).otherwise(0)).alias("n_failed"),
+            F.sum(F.when(F.col("state") == "skipped", 1).otherwise(0)).alias("n_skipped"),
+            F.percentile(ok_ms, 0.5).alias("p50_millis"),
+            F.percentile(ok_ms, 0.95).alias("p95_millis"),
+        )
+        .withColumn("failure_rate", F.col("n_failed").cast("double") / F.col("n_runs"))
+        .orderBy("job_name")
+    )
+    got = job_health_stats(store)
+    assert got.dtypes == [
+        ("job_name", "string"), ("n_runs", "bigint"), ("n_failed", "bigint"),
+        ("n_skipped", "bigint"), ("p50_millis", "double"), ("p95_millis", "double"),
+        ("failure_rate", "double"),
+    ]
+    assert got.collect() == want.collect() and want.count() > 0
+    for table, key in (("batches", "batch_id"), ("jobs", "job_id")):
+        for ts in stamps:
+            want = _window_latest(live[table].where(F.col("ts") <= F.lit(ts)), key)
+            got = store.snapshot_as_of(table, ts)
+            assert got.schema == want.schema
+            assert Counter(got.collect()) == Counter(want.collect()), (table, ts)
+
+
 def test_snapshot_as_of_matches_the_index(spark, tmp_path):
     """``snapshot_as_of`` past the newest ts holds the same latest job
-    versions as the index, a part file with a tz-typed ts included."""
+    versions as the index, a part file with a tz-typed ts included.
+    It and ``job_health_stats`` equal the Spark-window reduction of the
+    live rows, before and after foreign appends, a compaction and a
+    retention rewrite."""
     import os
 
     import pyarrow as pa
@@ -576,9 +628,10 @@ def test_snapshot_as_of_matches_the_index(spark, tmp_path):
     from lime_etl_spark.adapter.admin_store import _JOBS
 
     store = SparkAdminStore(spark, str(tmp_path / "admin"))
+    other = SparkAdminStore(None, store.root)
     t0 = datetime.datetime(2026, 3, 1, 9, 0)
     _fill_ledger(store, t0, "a")
-    _fill_ledger(store, t0 + datetime.timedelta(hours=1), "b")
+    _fill_ledger(other, t0 + datetime.timedelta(hours=1), "b")
     schema = _JOBS.set(6, pa.field("ts", pa.timestamp("us", tz="UTC")))
     utc = datetime.datetime(2026, 3, 3, 8, 0, tzinfo=datetime.timezone.utc)
     row = {"job_id": "foreign-j", "batch_id": "a-b0", "job_name": "a-job1",
@@ -596,6 +649,53 @@ def test_snapshot_as_of_matches_the_index(spark, tmp_path):
         for r in store.snapshot_as_of("jobs", datetime.datetime(2026, 3, 4)).collect()
     }
     assert snapshot == index and len(index) == 19
+
+    hour, minute = datetime.timedelta(hours=1), datetime.timedelta(minutes=1)
+    # before the first row, on a row's ts, between two rows, after the last
+    stamps = [t0 - 24 * hour, t0 + hour + minute, t0 + hour + 1.5 * minute, datetime.datetime(2026, 3, 4)]
+    _assert_folds_match_the_window(spark, store, stamps)
+    _fill_ledger(other, t0 + 2 * hour, "c")
+    store.compact()
+    _fill_ledger(other, t0 + 3 * hour, "d", n_batches=2)
+    other.save_job_result(JobResult(  # a job still running: not on the dashboard
+        id="d-b1-j9", batch_id="d-b1", job_name="d-job9", status=JobStatus.running(),
+        execution_millis=ExecutionMillis(0), ts=t0 + 3 * hour))
+    store.delete_old_batches(cutoff=t0 + 0.5 * hour)  # drops the "a" rows
+    assert store.get_batch("a-b0") is None and store.get_batch("d-b1") is not None
+    _assert_folds_match_the_window(spark, store, stamps + [t0 + 3 * hour])
+
+
+def test_ledger_ts_reads_as_utc_under_a_dst_zone(spark, tmp_path, dst_local_tz):
+    """A tz-typed foreign part file's ts reads as naive UTC, whatever the
+    process's local zone: the index reads 08:00 UTC as 08:00, and
+    ``snapshot_as_of`` holds the instant 08:00 UTC and reads its bound
+    as UTC."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq_mod
+    from pyspark.sql import functions as F
+
+    from lime_etl_spark.adapter.admin_store import _JOBS
+
+    store = SparkAdminStore(spark, str(tmp_path / "admin"))
+    os.makedirs(os.path.join(store.root, "jobs"))
+    schema = _JOBS.set(6, pa.field("ts", pa.timestamp("us", tz="UTC")))
+    utc = datetime.datetime(2026, 3, 3, 8, 0, tzinfo=datetime.timezone.utc)
+    row = {"job_id": "foreign-j", "batch_id": "foreign-b", "job_name": "a-job1",
+           "state": "succeeded", "reason": None, "execution_millis": 5, "ts": utc, "seq": 1}
+    pq_mod.write_table(pa.Table.from_pylist([row], schema=schema),
+                       os.path.join(store.root, "jobs", "part-foreign.parquet"))
+    eight = datetime.datetime(2026, 3, 3, 8, 0)
+    assert [r.ts for r in store.get_job_results("foreign-b")] == [eight]
+    assert store.get_last_successful_ts("a-job1") == eight
+
+    def epochs(ts):
+        df = store.snapshot_as_of("jobs", ts).select(F.col("ts").cast("long").alias("s"))
+        return [r.s for r in df.collect()]
+
+    assert epochs(eight) == [int(utc.timestamp())]
+    assert epochs(eight - datetime.timedelta(minutes=1)) == []
 
 
 def test_lookups_read_only_unseen_part_files(tmp_path, monkeypatch):
@@ -667,6 +767,71 @@ def test_lookups_read_only_unseen_part_files(tmp_path, monkeypatch):
     lookups()
     assert reads == []
     _assert_index_matches_fresh(warm)
+
+
+def test_dashboard_on_a_warm_store_reads_no_part_file(spark, tmp_path, monkeypatch):
+    """Read-count guard: once the index is warm, ``job_health_stats``
+    reads no part file, for the store's own appends neither; after a
+    foreign append it reads only the new file."""
+    import pyarrow.parquet as pq_mod
+
+    from lime_etl_spark.adapter.admin_store import job_health_stats
+
+    root = str(tmp_path / "admin")
+    warm, other = SparkAdminStore(spark, root), SparkAdminStore(None, root)
+    t0 = datetime.datetime(2026, 4, 1, 9, 0)
+    _fill_ledger(other, t0, "x")
+    warm.get_last_successful_ts("x-job1")  # warms the index
+
+    reads = []
+    real_read_table = pq_mod.read_table
+
+    def read_table(source, *args, **kwargs):
+        reads.append(source)
+        return real_read_table(source, *args, **kwargs)
+
+    monkeypatch.setattr(pq_mod, "read_table", read_table)
+
+    def runs():
+        return sum(r["n_runs"] for r in job_health_stats(warm).collect())
+
+    assert runs() == 9 and reads == []
+    _fill_ledger(warm, t0, "own", n_batches=1)
+    assert runs() == 12 and reads == []
+    other.save_job_result(JobResult(
+        id="x-b9-j0", batch_id="x-b9", job_name="x-job0", status=JobStatus.success(),
+        execution_millis=ExecutionMillis(1), ts=t0))
+    assert runs() == 13 and len(reads) == 1
+
+
+def test_compact_leaves_a_log_partition_dropped_under_it_dropped(tmp_path, monkeypatch):
+    """A log partition that another store drops between ``compact``'s
+    file count and its rewrite stays dropped: the rewrite finds no part
+    file and writes none."""
+    import os
+
+    root = str(tmp_path / "admin")
+    compactor, dropper = SparkAdminStore(None, root), SparkAdminStore(None, root)
+    old, new = datetime.datetime(2020, 1, 1, 9, 0), datetime.datetime(2020, 1, 5, 9, 0)
+    for ts in (old, old, new, new):  # two files in each partition
+        compactor.log("job_log", LogLevel.INFO, "line", "b", "job", ts=ts)
+        compactor.flush_logs()
+    rewrites = []
+    real_rewrite = compactor._rewrite
+
+    def rewrite(path, *args, **kwargs):
+        if not rewrites:  # after the count, before the first rewrite
+            dropper.delete_old_logs(cutoff=datetime.datetime(2020, 1, 3))
+        rewrites.append(path)
+        return real_rewrite(path, *args, **kwargs)
+
+    monkeypatch.setattr(compactor, "_rewrite", rewrite)
+    compactor.compact()
+    assert len(rewrites) == 2  # both partitions were counted with two files
+    logs = os.path.join(root, "job_log")
+    assert os.listdir(logs) == ["log_date=2020-01-05"]
+    assert len(os.listdir(os.path.join(logs, "log_date=2020-01-05"))) == 1
+    assert compactor._arrow("job_log")["log_date"].to_pylist() == ["2020-01-05"] * 2
 
 
 def test_row_counts_are_disk_rows(tmp_path):

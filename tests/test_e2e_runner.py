@@ -855,3 +855,15 @@ def test_refresh_and_test_gates_after_a_clock_step_back(spark, store):
     result = run_batch(mk(), spark, store, clock=clock)
     assert runs == {"body": 2, "tests": 2}
     assert next(iter(result.job_results)).status.is_success
+
+
+def test_local_clock_reads_naive_utc_under_a_dst_zone(dst_local_tz):
+    """The production clock is naive UTC, not local wall time, so a DST
+    fall-back never steps it back."""
+    import datetime
+
+    from lime_etl_spark.domain.clock import LocalClockAdapter
+
+    now = LocalClockAdapter().now()
+    utc = datetime.datetime.now(datetime.timezone.utc).replace(tzinfo=None)
+    assert now.tzinfo is None and abs((now - utc).total_seconds()) < 1
