@@ -63,6 +63,7 @@ import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from lime_etl_spark.domain.clock import ClockAdapter
 from lime_etl_spark.domain.statuses import BatchStatus, JobResult, JobState, JobStatus, TestResult
@@ -164,6 +165,14 @@ def _rows(tbl: pa.Table) -> List[Dict[str, Any]]:
 
 
 _LEDGER = {"batches": _BATCHES, "jobs": _JOBS, "test_results": _TEST_RESULTS}
+
+
+def _frame(spark: SparkSession, tbl: pa.Table) -> DataFrame:
+    """``tbl`` as a Spark DataFrame whose naive timestamps (every ledger
+    ``ts``) are TIMESTAMP_NTZ: the naive UTC value the ledger holds, so
+    ``collect()`` and ``toPandas()`` return it under any local zone (a
+    TimestampType column would be rendered in the process's local time)."""
+    return spark.createDataFrame(tbl, schema=from_arrow_schema(tbl.schema, prefer_timestamp_ntz=True))
 
 
 class _LedgerIndex:
@@ -429,14 +438,15 @@ class SparkAdminStore:
         version rows with ts ≤ the snapshot time, folded by a fresh
         ``_LedgerIndex`` like every lookup. The ledger is append-only, so
         "what did the scheduler believe at 03:00?" is a filter, not a
-        restore. A Spark DataFrame over the rows live at call time."""
+        restore. A Spark DataFrame over the rows live at call time, its
+        ``ts`` TIMESTAMP_NTZ (naive UTC, see ``_frame``)."""
         if table not in ("batches", "jobs"):
             raise ValueError(f"snapshot_as_of supports ('batches', 'jobs'), got {table!r}")
         idx = _LedgerIndex()
         keep = pc.field("ts") <= pa.scalar(ts, pa.timestamp("us"))
         idx.ingest(table, "", _rows(self._arrow(table).filter(keep)))
         latest = list((idx.batches if table == "batches" else idx.jobs).values())
-        return self.spark.createDataFrame(pa.Table.from_pylist(latest, schema=_LEDGER[table]))
+        return _frame(self.spark, pa.Table.from_pylist(latest, schema=_LEDGER[table]))
 
     def compact(self) -> Dict[str, Tuple[int, int]]:
         """Fold each ledger table's part files into one file (and each log
@@ -562,8 +572,9 @@ class SparkAdminStore:
                     self._append(table, buf)
 
     def read_log(self, table: str) -> DataFrame:
-        """The log table's live rows, read now, as a Spark DataFrame."""
-        return self.spark.createDataFrame(self._arrow(table))
+        """The log table's live rows, read now, as a Spark DataFrame with
+        ``ts`` TIMESTAMP_NTZ (naive UTC, see ``_frame``)."""
+        return _frame(self.spark, self._arrow(table))
 
     def delete_old_logs(self, cutoff: datetime.datetime) -> None:
         """Drop whole log_date partitions dated before ``cutoff`` — a

@@ -16,6 +16,10 @@ read never disagree; with no JVM (``spark`` None, Spark Connect) they
 are local paths. Directory renames are atomic on HDFS and local disks;
 on object stores a rename is a copy, so there only a table format's
 commit makes the swap atomic.
+
+`file_listing` fingerprints a path (every file's name, size and mtime)
+for `sources/readers.py`'s schema cache and `TableRefreshJob`'s tests:
+a swap, an appended or removed file or a rewritten file changes it.
 """
 
 from __future__ import annotations
@@ -24,7 +28,8 @@ import os
 import re
 import shutil
 import uuid
-from typing import Callable, List, Optional, TypeVar
+from typing import Callable, List, Optional, Tuple, TypeVar
+from urllib.parse import urlparse
 
 from pyspark.sql import SparkSession
 
@@ -54,6 +59,27 @@ class _Fs:
             return []
         return [s.getPath().getName() for s in self._fs.listStatus(self._p(parent))]
 
+    def files(self, path: str) -> Tuple[Tuple[str, int, int], ...]:
+        """``(name, size, mtime)`` of every file under ``path`` (of
+        ``path`` itself if it is a file), sorted, names relative to
+        ``path``; raises if ``path`` does not exist. A local filesystem
+        is listed with ``os`` calls (ns mtimes), which cost microseconds
+        where a JVM call per file attribute costs a round trip."""
+        if self._jvm is None or self._fs.getScheme() == "file":
+            return _local_files(urlparse(path).path if path.startswith("file:") else path)
+        return self._hadoop_files(path)
+
+    def _hadoop_files(self, path: str) -> Tuple[Tuple[str, int, int], ...]:
+        out, root, todo = [], self._fs.makeQualified(self._p(path)).toString(), [self._p(path)]
+        while todo:
+            for st in self._fs.listStatus(todo.pop()):
+                if st.isDirectory():
+                    todo.append(st.getPath())
+                else:
+                    name = st.getPath().toString()[len(root):].lstrip("/")
+                    out.append((name, st.getLen(), st.getModificationTime()))
+        return tuple(sorted(out))
+
     def rename(self, src: str, dst: str) -> None:
         if self._jvm is None:
             os.rename(src, dst)
@@ -65,6 +91,26 @@ class _Fs:
             shutil.rmtree(path)
         else:
             self._fs.delete(self._p(path), True)
+
+
+def _local_files(path: str) -> Tuple[Tuple[str, int, int], ...]:
+    st = os.stat(path)  # raises FileNotFoundError for a missing path
+    if not os.path.isdir(path):
+        return (("", st.st_size, st.st_mtime_ns),)
+    out = []
+    for parent, _, names in os.walk(path):
+        for n in names:
+            full = os.path.join(parent, n)
+            st = os.stat(full)
+            out.append((os.path.relpath(full, path), st.st_size, st.st_mtime_ns))
+    return tuple(sorted(out))
+
+
+def file_listing(spark: Optional[SparkSession], path: str) -> Tuple[Tuple[str, int, int], ...]:
+    """Every file under ``path`` with its size and mtime: a fingerprint
+    that changes when a file is added, removed or rewritten, or when the
+    directory is swapped for another."""
+    return _Fs(spark, path).files(path)
 
 
 def path_exists(spark: Optional[SparkSession], path: str) -> bool:

@@ -3,16 +3,39 @@
 At 100 TB these tables are directory-partitioned parquet; the readers
 stay declarative (``spark.read``) so Catalyst gets predicate pushdown,
 column pruning and partition pruning for free. Never ``collect`` here.
+
+``load_table`` and ``service/table_jobs.py`` read parquet through
+:func:`read_parquet`. ``spark.read.parquet(path)`` with no schema runs
+a Spark job that reads footers to discover the schema (about 0.1 s,
+whatever the data size); ``read_parquet`` runs it once per path and
+then reads with
+``spark.read.schema(<that schema>)``, which starts no job. Its cache
+holds one entry per path: the inferred schema, the path's file listing
+(every file's name, size and mtime, through ``sources/fs.py``) taken
+BEFORE the inference, and the session confs that steer parquet schema
+and partition inference (``_SCHEMA_CONFS``). An entry is used only
+when the listing and the confs read now equal the stored ones, so it
+cannot go stale: an ``overwrite_dir`` swap, an appended or removed
+file, a rewritten file or a changed conf each infer again and replace
+the entry. (A listing taken before the inference can only be older than
+the files inferred from, so a change racing the inference makes the
+next read infer again rather than reuse a schema the files no longer
+have.) A path that cannot be listed (missing, a glob) is read as
+``spark.read.parquet`` reads it, errors included.
 """
 
 from __future__ import annotations
 
 import os
-from typing import Sequence
+import threading
+from typing import Dict, Sequence, Tuple
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
+
+from lime_etl_spark.sources.fs import file_listing
 
 TABLES = (
     "region",
@@ -101,6 +124,42 @@ def _normalize_ntz(df: DataFrame) -> DataFrame:
     return df
 
 
+# Session confs that change the schema Spark infers for a parquet path
+# (footer type mapping, footer merging, partition-value typing).
+_SCHEMA_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.parquet.respectSummaryFiles",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+    "spark.sql.timestampType",
+    "spark.sql.session.timeZone",
+    "spark.sql.caseSensitive",
+)
+_schema_lock = threading.Lock()
+_schemas: Dict[str, Tuple[tuple, tuple, StructType]] = {}  # path -> (listing, confs, schema)
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, with the schema discovered once per
+    file listing and conf state (see the module docstring)."""
+    try:
+        listing = file_listing(spark, path)
+    except (OSError, Py4JError):  # missing path or glob: Spark reads (and raises) as usual
+        return spark.read.parquet(path)
+    confs = tuple(spark.conf.get(k) for k in _SCHEMA_CONFS)
+    with _schema_lock:
+        hit = _schemas.get(path)
+    if hit is not None and hit[0] == listing and hit[1] == confs:
+        return spark.read.schema(hit[2]).parquet(path)
+    df = spark.read.parquet(path)
+    with _schema_lock:
+        _schemas[path] = (listing, confs, df.schema)
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one table. Declarative parquet scan → pushdown-friendly.
 
@@ -112,11 +171,11 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(_path(sf_dir, name))
+        df = read_parquet(spark, _path(sf_dir, name))
         if dict(df.dtypes).get("ts") == "bigint":
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         return _normalize_ntz(df)
-    return _normalize_ntz(spark.read.parquet(_path(sf_dir, name)))
+    return _normalize_ntz(read_parquet(spark, _path(sf_dir, name)))
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

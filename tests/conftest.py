@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import time
+import uuid
 
 import pytest
 
@@ -19,6 +20,25 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture()
+def spark_jobs(spark):
+    """``spark_jobs(fn)`` -> ``(fn(), number of Spark jobs fn started)``,
+    counted as the runner counts them: fn runs in a job group of its own
+    and the status tracker lists that group's job ids."""
+    sc = spark.sparkContext
+
+    def count(fn):
+        group = f"spark_jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "counted by the spark_jobs fixture")
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count
 
 
 @pytest.fixture()

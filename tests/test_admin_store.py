@@ -584,7 +584,12 @@ def _assert_folds_match_the_window(spark, store, stamps):
 
     from lime_etl_spark.adapter.admin_store import job_health_stats
 
-    live = {t: spark.createDataFrame(store._arrow(t)) for t in ("batches", "jobs")}
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    def frame(tbl):  # the ledger frames' dtypes: ts is TIMESTAMP_NTZ
+        return spark.createDataFrame(tbl, schema=from_arrow_schema(tbl.schema, prefer_timestamp_ntz=True))
+
+    live = {t: frame(store._arrow(t)) for t in ("batches", "jobs")}
     latest = _window_latest(live["jobs"], "job_id").where(F.col("state") != "running")
     ok_ms = F.when(F.col("state") == "succeeded", F.col("execution_millis"))
     want = (
@@ -691,11 +696,30 @@ def test_ledger_ts_reads_as_utc_under_a_dst_zone(spark, tmp_path, dst_local_tz):
     assert store.get_last_successful_ts("a-job1") == eight
 
     def epochs(ts):
-        df = store.snapshot_as_of("jobs", ts).select(F.col("ts").cast("long").alias("s"))
+        ts_col = F.col("ts").cast("timestamp")  # TIMESTAMP_NTZ -> the UTC instant (UTC session)
+        df = store.snapshot_as_of("jobs", ts).select(ts_col.cast("long").alias("s"))
         return [r.s for r in df.collect()]
 
     assert epochs(eight) == [int(utc.timestamp())]
     assert epochs(eight - datetime.timedelta(minutes=1)) == []
+
+
+def test_ledger_frames_collect_naive_utc_under_a_dst_zone(spark, tmp_path, dst_local_tz):
+    """``read_log`` and ``snapshot_as_of`` collect the same naive UTC
+    ``ts`` as the point lookup, whatever the process's local zone: a row
+    stored at 08:00 UTC collects as 08:00, not as New York time."""
+    eight = datetime.datetime(2026, 1, 15, 8, 0)  # EST: local time would be 03:00
+    store = SparkAdminStore(spark, str(tmp_path / "admin"))
+    store.save_job_result(JobResult(
+        id="tz-b1-j1", batch_id="tz-b1", job_name="tz-job1", status=JobStatus.success(),
+        execution_millis=ExecutionMillis(5), ts=eight))
+    store.log("batch_log", LogLevel.INFO, "hello", "tz-b1", ts=eight)
+    [looked_up] = [r.ts for r in store.get_job_results("tz-b1")]
+    snapshot = store.snapshot_as_of("jobs", eight)
+    assert dict(snapshot.dtypes)["ts"] == "timestamp_ntz"
+    assert [r.ts for r in snapshot.collect()] == [looked_up] == [eight]
+    assert list(snapshot.toPandas()["ts"]) == [eight]
+    assert [r.ts for r in store.read_log("batch_log").collect()] == [eight]
 
 
 def test_lookups_read_only_unseen_part_files(tmp_path, monkeypatch):

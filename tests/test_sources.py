@@ -238,3 +238,162 @@ def test_spread_for_agg_non_numeric_shuffle_partitions_falls_back(spark, monkeyp
     monkeypatch.setattr(RuntimeConfig, "get", get)
     out = readers.spread_for_agg(spark.range(10), "id")
     assert out.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+
+
+# --- read_parquet: schema discovery once per file listing --------------------
+
+
+def _write_pa(path, table):
+    import pyarrow.parquet as pq
+
+    pq.write_table(table, path)
+
+
+def test_warm_load_table_starts_no_spark_job(spark, sf_dir, spark_jobs):
+    """The first load of a table may discover its schema (one Spark
+    job); a second load of the unchanged table reads with the cached
+    schema and starts none."""
+    cold, _ = spark_jobs(lambda: readers.load_table(spark, sf_dir, "orders"))
+    warm, jobs = spark_jobs(lambda: readers.load_table(spark, sf_dir, "orders"))
+    assert jobs == 0
+    assert warm.dtypes == cold.dtypes and warm.count() == cold.count()
+
+
+def test_read_parquet_reinfers_after_a_spark_rewrite(spark, tmp_path, spark_jobs):
+    """A directory rewritten by Spark with a new schema is a new
+    listing: the next read discovers the new schema."""
+    path = str(tmp_path / "t")
+    spark.createDataFrame([(1, "a")], "k long, v string").write.parquet(path)
+    assert readers.read_parquet(spark, path).dtypes == [("k", "bigint"), ("v", "string")]
+    assert spark_jobs(lambda: readers.read_parquet(spark, path))[1] == 0
+    spark.createDataFrame([(1, 2.5, 7)], "k long, w double, x int").write.mode("overwrite").parquet(path)
+    df, jobs = spark_jobs(lambda: readers.read_parquet(spark, path))
+    assert jobs == 1
+    assert df.dtypes == [("k", "bigint"), ("w", "double"), ("x", "int")]
+    assert [tuple(r) for r in df.collect()] == [(1, 2.5, 7)]
+
+
+def test_read_parquet_reinfers_after_a_single_file_rewrite(spark, tmp_path, spark_jobs):
+    """A single parquet file rewritten in place (pyarrow, same name) with
+    a new schema changes its size and mtime: the next read re-infers."""
+    import pyarrow as pa
+
+    path = str(tmp_path / "one.parquet")
+    _write_pa(path, pa.table({"a": pa.array([1, 2], pa.int64())}))
+    assert readers.read_parquet(spark, path).dtypes == [("a", "bigint")]
+    assert spark_jobs(lambda: readers.read_parquet(spark, path))[1] == 0
+    _write_pa(path, pa.table({"a": pa.array(["x", "y"]), "b": pa.array([1.5, 2.5])}))
+    df, jobs = spark_jobs(lambda: readers.read_parquet(spark, path))
+    assert jobs == 1
+    assert df.dtypes == [("a", "string"), ("b", "double")]
+    assert sorted(tuple(r) for r in df.collect()) == [("x", 1.5), ("y", 2.5)]
+
+
+def test_read_parquet_reinfers_when_nanos_as_long_flips(spark, tmp_path, spark_jobs):
+    """The confs that steer inference are part of the cache key: a
+    TIMESTAMP(NANOS) column infers as bigint only under nanosAsLong, and
+    with the conf off Spark 4 refuses the type. So flipping the conf off
+    infers again (and raises) instead of reading with the cached bigint
+    schema; flipping it back reuses the entry the failed read left."""
+    from pyspark.errors import AnalysisException
+
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "nanos.parquet")
+    ts = pa.array([datetime.datetime(2026, 1, 1)], pa.timestamp("ns"))
+    pq.write_table(pa.table({"ts": ts, "n": pa.array([1], pa.int64())}), path, version="2.6")
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    prev = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "true")
+        assert dict(readers.read_parquet(spark, path).dtypes)["ts"] == "bigint"
+        assert spark_jobs(lambda: readers.read_parquet(spark, path))[1] == 0
+        spark.conf.set(key, "false")
+        with pytest.raises(AnalysisException, match="PARQUET_TYPE_ILLEGAL"):
+            readers.read_parquet(spark, path)
+        spark.conf.set(key, "true")
+        df, jobs = spark_jobs(lambda: readers.read_parquet(spark, path))
+        assert jobs == 0
+        assert df.collect()[0]["ts"] == 1_767_225_600 * 10**9
+    finally:
+        spark.conf.set(key, prev)
+
+
+def test_read_parquet_from_many_threads_agrees(spark, tmp_path):
+    """8 threads reading the same cold paths at once (a short switch
+    interval to interleave them) all get the schema an inferring read
+    gets, and the cache keeps one entry per path."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    paths = []
+    for i in range(4):
+        path = str(tmp_path / f"t{i}")
+        cols = ", ".join(f"c{j} {'long' if j % 2 else 'string'}" for j in range(i + 1))
+        spark.createDataFrame([tuple(str(j) if j % 2 == 0 else j for j in range(i + 1))], cols).write.parquet(path)
+        paths.append(path)
+    want = {p: spark.read.parquet(p).dtypes for p in paths}
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(8) as pool:
+            futures = [pool.submit(lambda p: (p, readers.read_parquet(spark, p).dtypes), p) for p in paths * 8]
+            got = [f.result(timeout=120) for f in futures]
+    finally:
+        sys.setswitchinterval(interval)
+    assert len(got) == 32
+    assert all(dtypes == want[p] for p, dtypes in got)
+    assert {p: readers._schemas[p][2] for p in paths} == {p: spark.read.parquet(p).schema for p in paths}
+
+
+@pytest.mark.parametrize("partition_by", [["p"], ["k"], ["p", "k"]])
+def test_cached_read_of_a_partitioned_target_matches_inference(spark, tmp_path, spark_jobs, partition_by):
+    """A cached read of a ``partitionBy`` target (partitioned on a key
+    column too) has the columns, order, dtypes and rows of an inferring
+    read: partition columns last, typed as partition discovery types them."""
+    path = str(tmp_path / "parts")
+    rows = [(k, k % 3, f"v{k}", k * 0.5) for k in range(12)]
+    df = spark.createDataFrame(rows, "k long, p long, v string, x double")
+    df.write.partitionBy(*partition_by).parquet(path)
+    inferred = spark.read.parquet(path)
+    readers.read_parquet(spark, path)
+    cached, jobs = spark_jobs(lambda: readers.read_parquet(spark, path))
+    assert jobs == 0
+    assert cached.dtypes == inferred.dtypes
+    assert [c for c, _ in cached.dtypes][-len(partition_by):] == partition_by
+    assert sorted(cached.collect()) == sorted(inferred.collect())
+
+
+def test_read_parquet_of_a_missing_path_raises_as_spark_does(spark, tmp_path):
+    from pyspark.errors import AnalysisException
+
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        readers.read_parquet(spark, str(tmp_path / "missing"))
+
+
+def test_file_listing_through_hadoop_matches_the_local_listing(spark, tmp_path):
+    """The Hadoop FileSystem listing (used off the local filesystem)
+    names the same files with the same sizes as the local one (less the
+    checksum files Hadoop's local filesystem hides), and both change
+    when a file is rewritten."""
+    import pyarrow as pa
+
+    from lime_etl_spark.sources.fs import _Fs, _local_files
+
+    path = str(tmp_path / "parts")
+    spark.range(20).selectExpr("id", "id % 2 AS p").write.partitionBy("p").parquet(path)
+    fs = _Fs(spark, path)
+
+    def sizes(listing):
+        return [(n, size) for n, size, _ in listing if not os.path.basename(n).endswith(".crc")]
+
+    hadoop, local = fs._hadoop_files(path), _local_files(path)
+    assert sizes(hadoop) == sizes(local) and any(n.startswith("p=1/") for n, _ in sizes(local))
+    victim = next(n for n, _, _ in local if n.endswith(".parquet"))
+    _write_pa(os.path.join(path, victim), pa.table({"id": pa.array(range(100), pa.int64())}))
+    assert fs._hadoop_files(path) != hadoop and _local_files(path) != local
+    single = os.path.join(path, victim)
+    assert sizes(fs._hadoop_files(single)) == sizes(_local_files(single)) == [("", os.path.getsize(single))]

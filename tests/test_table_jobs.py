@@ -260,3 +260,111 @@ def test_rewrite_leaves_sibling_swaps_in_flight_alone(tmp_path):
         (tmp_path / name).mkdir()
     overwrite_dir(None, str(tmp_path / "lineitem"), os.makedirs)
     assert sorted(os.listdir(tmp_path)) == sorted(in_flight + ["lineitem"])
+
+
+# --- tests fused into the write -------------------------------------------------
+
+
+def _job(tmp_path, rows, name="fused_mart", **kw):
+    return TableRefreshJob(
+        name=name, target_path=str(tmp_path / "mart"),
+        source=lambda s: s.createDataFrame(rows, "k long, p long, v string"), **kw,
+    )
+
+
+def test_test_after_run_starts_no_job_on_an_unkeyed_target(spark, tmp_path, spark_jobs):
+    """The row floor after the job's own run is the write's Observation:
+    the unkeyed test reads nothing."""
+    from lime_etl_spark.domain.specs import JobContext
+
+    job = _job(tmp_path, [(k, k % 3, "v") for k in range(10)], partition_by=["p"])
+    ctx = JobContext(spark=spark, logger=_Log())
+    job.run(ctx)
+    results, jobs = spark_jobs(lambda: job.test(ctx))
+    assert jobs == 0
+    assert [(t.test_name, t.test_passed) for t in results] == [("fused_mart: at least 1 rows", True)]
+
+
+@pytest.mark.parametrize("partition_by", [None, ["p"], ["k"]])
+def test_test_after_run_starts_at_most_two_jobs_on_a_keyed_target(spark, tmp_path, spark_jobs, partition_by):
+    """The keyed test after the job's own run reads the key columns with
+    the written key types (no schema discovery) and asks whether any key
+    repeats: at most 2 Spark jobs, with the target partitioned on a key
+    column too."""
+    from lime_etl_spark.domain.specs import JobContext
+
+    job = _job(tmp_path, [(k, k % 3, "v") for k in range(10)], keys=["k"], partition_by=partition_by)
+    ctx = JobContext(spark=spark, logger=_Log())
+    job.run(ctx)
+    results, jobs = spark_jobs(lambda: job.test(ctx))
+    assert jobs <= 2
+    assert all(t.test_passed for t in results) and len(results) == 2
+
+
+def test_fused_test_counts_duplicated_keys_of_a_target_partitioned_on_its_key(spark, tmp_path):
+    """The key-only read takes the key from the partition directories."""
+    from lime_etl_spark.domain.specs import JobContext
+
+    rows = [(1, 0, "a"), (1, 0, "b"), (2, 0, "c"), (2, 1, "d"), (2, 2, "e"), (3, 0, "f")]
+    job = _job(tmp_path, rows, keys=["k"], partition_by=["k"])
+    ctx = JobContext(spark=spark, logger=_Log())
+    job.run(ctx)
+    outcomes = {t.test_name: t.outcome for t in job.test(ctx)}
+    assert outcomes["fused_mart: at least 1 rows"].is_success
+    assert outcomes["fused_mart: unique on ['k']"].failure_message == "2 duplicated keys"
+
+
+def test_test_without_its_own_run_reads_the_target(spark, tmp_path):
+    """A test with no prior run, or after another writer replaced the
+    target's files, reads the target: the numbers are the target's, not
+    the last write's."""
+    from lime_etl_spark.domain.specs import JobContext
+
+    ctx = JobContext(spark=spark, logger=_Log())
+    ran = _job(tmp_path, [(1, 0, "a"), (2, 0, "b")], keys=["k"], expect_min_rows=3)
+    ran.run(ctx)
+    outcomes = {t.test_name: t.outcome for t in ran.test(ctx)}
+    assert outcomes["fused_mart: at least 3 rows"].failure_message == "only 2 rows"
+    assert outcomes["fused_mart: unique on ['k']"].is_success
+    _job(tmp_path, [(1, 0, "a"), (1, 0, "b"), (1, 0, "c")], name="other_mart", keys=["v"]).run(ctx)
+    for job in (ran, _job(tmp_path, [], keys=["k"], expect_min_rows=3)):  # target changed; never ran
+        outcomes = {t.test_name: t.outcome for t in job.test(ctx)}
+        assert outcomes["fused_mart: at least 3 rows"].is_success
+        assert outcomes["fused_mart: unique on ['k']"].failure_message == "1 duplicated keys"
+
+
+@pytest.mark.parametrize("mode", ["full", "incremental"])
+def test_run_with_a_key_missing_from_the_source_writes_nothing(spark, tmp_path, mode):
+    """Keys that are not columns of the source fail the run before the
+    target is touched: a missing target stays missing, an existing one
+    keeps its files."""
+    import os
+
+    from lime_etl_spark.domain.specs import JobContext
+
+    ctx = JobContext(spark=spark, logger=_Log())
+    target = tmp_path / "mart"
+    bad = _job(tmp_path, [(1, 0, "a")], keys=["k", "nope"], mode=mode)
+    with pytest.raises(ValueError, match=r"keys \['nope'\] are not columns of the source"):
+        bad.run(ctx)
+    assert not target.exists() and os.listdir(tmp_path) == []
+    _job(tmp_path, [(1, 0, "a")], keys=["k"]).run(ctx)
+    before = sorted(os.listdir(target))
+    with pytest.raises(ValueError, match="nope"):
+        bad.run(ctx)
+    assert sorted(os.listdir(target)) == before and os.listdir(tmp_path) == ["mart"]
+
+
+def test_referential_check_counts_orphans(spark, tmp_path, spark_jobs):
+    """The orphan count is exact when the anti-join is not empty; when it
+    is empty the warm check runs no schema discovery."""
+    child, parent = str(tmp_path / "child"), str(tmp_path / "parent")
+    spark.createDataFrame([(1,), (2,), (5,), (6,), (6,)], "fk long").write.parquet(child)
+    spark.createDataFrame([(1,), (2,), (3,)], "pk long").write.parquet(parent)
+    check = referential_check(child, parent, "fk", "pk", "child->parent")
+    assert check(spark).outcome.failure_message == "3 orphan rows"
+    spark.createDataFrame([(1,), (2,)], "fk long").write.mode("overwrite").parquet(child)
+    check(spark)
+    result, jobs = spark_jobs(lambda: check(spark))
+    assert result.test_passed and result.test_name == "child->parent"
+    assert jobs <= 2
