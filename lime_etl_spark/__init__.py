@@ -78,7 +78,6 @@ from lime_etl_spark.service.table_jobs import (
 )
 from lime_etl_spark.service.runner import (
     run_batch,
-    run_batch_with_delta,
     run_batches_in_parallel,
 )
 from lime_etl_spark.session import get_spark
@@ -130,7 +129,6 @@ __all__ = [
     "get_spark",
     "referential_check",
     "run_batch",
-    "run_batch_with_delta",
     "run_batches_in_parallel",
 ]
 

@@ -13,7 +13,7 @@ import abc
 import datetime
 import time
 
-from lime_etl_spark.domain.value_objects import ExecutionMillis
+from lime_etl_spark.domain.value_objects import ExecutionMillis, Timestamp
 
 __all__ = ("ClockAdapter", "LocalClockAdapter", "FakeClockAdapter")
 
@@ -37,7 +37,7 @@ class ClockAdapter(abc.ABC):
 class LocalClockAdapter(ClockAdapter):
     def now(self) -> datetime.datetime:
         """Naive UTC, so a DST change never steps it (the ledger's ts is UTC)."""
-        return datetime.datetime.now(datetime.timezone.utc).replace(tzinfo=None)
+        return Timestamp.now().value
 
     def sleep(self, seconds: float) -> None:
         if seconds > 0:

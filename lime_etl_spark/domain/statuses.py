@@ -19,6 +19,7 @@ from lime_etl_spark.domain.exceptions import InvalidBatch
 from lime_etl_spark.domain.value_objects import (
     ExecutionMillis,
     Result,
+    Timestamp,
 )
 
 
@@ -112,7 +113,7 @@ class JobResult:
     status: JobStatus
     execution_millis: ExecutionMillis
     test_results: FrozenSet[TestResult] = field(default_factory=frozenset)
-    ts: datetime.datetime = field(default_factory=datetime.datetime.now)
+    ts: datetime.datetime = field(default_factory=lambda: Timestamp.now().value)
 
     @property
     def tests_failed(self) -> bool:

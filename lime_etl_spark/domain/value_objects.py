@@ -169,7 +169,8 @@ class Timestamp(ValueObject):
 
     @classmethod
     def now(cls) -> "Timestamp":
-        return cls(datetime.datetime.now())
+        """Naive UTC, like every ledger ``ts``."""
+        return cls(datetime.datetime.now(datetime.timezone.utc).replace(tzinfo=None))
 
 
 class LogMessage(ValueObject):

@@ -19,7 +19,10 @@ directions:
   table is retried after its inputs land, exactly the resolution SDP
   performs on unresolved plans server-side), each materialized view
   written to ``storage/<name>`` as parquet and registered as a temp
-  view for downstream flows.
+  view for downstream flows. A view is swapped in whole by
+  ``sources/fs.py``'s ``overwrite_dir``, so a failed rerun leaves the
+  previous one readable, and its row count is an ``Observation`` on
+  the write.
 - On a cluster with Spark Connect, the SAME definition module runs
   under ``spark-pipelines run`` untouched; this local runner is the
   test/dev path (this container has no grpc, the Connect client's
@@ -38,7 +41,8 @@ from collections.abc import Callable
 from dataclasses import dataclass, field
 from pathlib import Path
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Observation, SparkSession
+from pyspark.sql import functions as F
 
 from pyspark.pipelines.flow import Flow
 from pyspark.pipelines.graph_element_registry import (
@@ -46,6 +50,9 @@ from pyspark.pipelines.graph_element_registry import (
     graph_element_registration_context,
 )
 from pyspark.pipelines.output import Output, TemporaryView
+
+from lime_etl_spark.sources.fs import overwrite_dir
+from lime_etl_spark.sources.readers import read_parquet
 
 
 @dataclass
@@ -127,10 +134,11 @@ def run_pipeline_local(
                 results[flow.target] = -1  # views are not materialized
             else:
                 path = f"{storage.rstrip('/')}/{flow.target}"
-                df.write.mode("overwrite").parquet(path)
-                back = spark.read.parquet(path)
-                back.createOrReplaceTempView(flow.target)
-                results[flow.target] = back.count()
+                obs = Observation(f"{flow.target}_materialize")
+                counted = df.observe(obs, F.count(F.lit(1)).alias("rows"))
+                overwrite_dir(spark, path, counted.write.parquet)
+                read_parquet(spark, path).createOrReplaceTempView(flow.target)
+                results[flow.target] = obs.get["rows"]
             progressed.append(flow)
         if not progressed:
             raise PipelineCycleError(

@@ -21,8 +21,9 @@ Behavior preserved:
 One scheduler runs every batch, a dependency ready queue: a job starts
 once its dependencies have final results, on a pool of ``max_workers``
 threads sharing the one SparkSession, and the coordinating thread
-writes every ledger row. With one worker (``run_batch``) jobs run in
-the reference's sequential order.
+writes every ledger row. ``run_batch(..., max_workers=1)`` is the one
+entry; with its default single worker, jobs run in the reference's
+sequential order.
 
 Spark-specific: every attempt of a job body runs on its ready-queue
 worker thread, in a Spark job group named ``batch_id:job_id:job_name``.
@@ -62,7 +63,12 @@ from lime_etl_spark.domain.statuses import (
     SimpleTestResult,
     TestResult,
 )
-from lime_etl_spark.domain.value_objects import ExecutionMillis, Result, UniqueId
+from lime_etl_spark.domain.value_objects import (
+    ExecutionMillis,
+    MaxProcesses,
+    Result,
+    UniqueId,
+)
 
 
 def check_for_duplicate_job_names(jobs: Sequence[SparkJobSpec]) -> None:
@@ -101,78 +107,30 @@ def run_batch(
     log_to_console: bool = False,
     resources: Optional[dict] = None,
     clock: Optional[ClockAdapter] = None,
+    max_workers: int = 1,
 ) -> BatchStatus:
-    status, _ = run_batch_with_delta(
-        batch, spark, store, log_to_console, resources, clock
-    )
-    return status
+    """Run ``batch`` on up to ``max_workers`` ready-queue threads and
+    return its final status. Gates read only a job's own dependency
+    results and ledger history, and the calling thread writes every
+    ledger row, so any worker count makes the same skip, fail and retry
+    decisions.
 
-
-def run_batch_with_delta(
-    batch: SparkBatchSpec,
-    spark: SparkSession,
-    store: SparkAdminStore,
-    log_to_console: bool = False,
-    resources: Optional[dict] = None,
-    clock: Optional[ClockAdapter] = None,
-) -> Tuple[BatchStatus, BatchDelta]:
-    """run_batch plus the batch-over-batch health delta.
-
-    The previous COMPLETED run of the same batch name is looked up
-    before this run starts; afterwards the delta (newly broken /
-    newly fixed jobs — reference batch_delta.py) is logged to the
-    batch log and returned alongside the status, so callers can alert
-    on regressions without re-reading the admin store.
+    The batch bracket: a running row, the ready queue, then the final
+    row. On any error, ``KeyboardInterrupt`` too, it saves the failed
+    row, flushes the logs and re-raises. On success the batch-over-batch
+    delta (newly broken / newly fixed jobs, reference batch_delta.py)
+    against the previous COMPLETED run of the same name is written to
+    the batch log; a caller builds the same delta with
+    ``BatchDelta(current=status, previous=store.get_previous_batch(
+    status.name, exclude_id=status.id))``.
 
     ``clock`` is the reference's TimestampAdapter seam: every
     time-based decision (refresh skip, test skip, batch deadline,
     execution_millis) reads it, so tests drive intervals without
     sleeping. Default is the wall clock.
     """
-    return _run_batch(
-        batch, spark, store, log_to_console, resources, clock, max_workers=1
-    )
-
-
-def run_batch_parallel_jobs(
-    batch: SparkBatchSpec,
-    spark: SparkSession,
-    store: SparkAdminStore,
-    log_to_console: bool = False,
-    resources: Optional[dict] = None,
-    clock: Optional[ClockAdapter] = None,
-    max_workers: int = 4,
-) -> BatchStatus:
-    """run_batch with independent jobs executing CONCURRENTLY.
-
-    The reference runner is strictly sequential (batch_runner.py:160 —
-    one `for job in jobs` loop); on Spark that leaves the cluster idle
-    whenever a driver-heavy or small job runs. Here up to
-    ``max_workers`` ready jobs run at once in threads sharing the one
-    SparkSession, and a job starts as soon as its own dependencies have
-    finished. Gates read only a job's own dependency results and ledger
-    history, and every admin-store write stays on the calling thread,
-    so skip, fail and retry decisions match run_batch. The
-    batch-over-batch delta is logged as in run_batch_with_delta.
-    """
-    status, _ = _run_batch(
-        batch, spark, store, log_to_console, resources, clock, max_workers
-    )
-    return status
-
-
-def _run_batch(
-    batch: SparkBatchSpec,
-    spark: SparkSession,
-    store: SparkAdminStore,
-    log_to_console: bool,
-    resources: Optional[dict],
-    clock: Optional[ClockAdapter],
-    max_workers: int,
-) -> Tuple[BatchStatus, BatchDelta]:
-    """The batch bracket: a running row, the ready queue, then the final
-    row and the delta. On any error, ``KeyboardInterrupt`` too, it saves
-    the failed row, flushes the logs and re-raises."""
+    if MaxProcesses(max_workers).value is None:  # checked before any ledger row
+        raise TypeError("run_batch expects max_workers >= 1, but got None.")
     clock = clock or LocalClockAdapter()
     start = clock.now()
     logger = BatchLogger(store, batch.batch_id, log_to_console, clock=clock)
@@ -220,7 +178,14 @@ def _run_batch(
     delta = BatchDelta(current=result, previous=previous)
     logger.info(f"Batch [{batch.batch_name}] finished. Delta — {delta}")
     store.flush_logs()
-    return result, delta
+    return result
+
+
+def run_batch_parallel_jobs(*args, max_workers: int = 4, **kwargs) -> BatchStatus:
+    """``run_batch`` with four workers by default. Kept only because
+    ``perfbench/lake_refresh.py`` wraps and calls it by name; it goes
+    with the benchmark's v2 change (ROADMAP item 4)."""
+    return run_batch(*args, max_workers=max_workers, **kwargs)
 
 
 def _run_ready_queue(

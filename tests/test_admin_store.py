@@ -18,7 +18,7 @@ from lime_etl_spark.domain import (
     UniqueId,
 )
 from lime_etl_spark.domain.statuses import TestResult
-from lime_etl_spark.domain.value_objects import LogLevel
+from lime_etl_spark.domain.value_objects import LogLevel, Timestamp
 
 NOW = datetime.datetime.now()
 
@@ -720,6 +720,21 @@ def test_ledger_frames_collect_naive_utc_under_a_dst_zone(spark, tmp_path, dst_l
     assert [r.ts for r in snapshot.collect()] == [looked_up] == [eight]
     assert list(snapshot.toPandas()["ts"]) == [eight]
     assert [r.ts for r in store.read_log("batch_log").collect()] == [eight]
+
+
+def test_default_ts_is_naive_utc_under_a_dst_zone(spark, tmp_path, dst_local_tz):
+    """A ``JobResult`` built without ``ts`` is stamped naive UTC, like
+    every other ledger ``ts``, and reads back so; ``Timestamp.now()``
+    is naive UTC too."""
+    store = SparkAdminStore(spark, str(tmp_path / "admin"))
+    store.save_job_result(JobResult(
+        id="dflt-j1", batch_id="dflt-b1", job_name="dflt-job1", status=JobStatus.success(),
+        execution_millis=ExecutionMillis(5)))
+    utc = datetime.datetime.now(datetime.timezone.utc).replace(tzinfo=None)
+    [ts] = [r.ts for r in SparkAdminStore(spark, store.root).get_job_results("dflt-b1")]
+    assert ts.tzinfo is None and abs((ts - utc).total_seconds()) < 5
+    now = Timestamp.now().value
+    assert now.tzinfo is None and abs((now - utc).total_seconds()) < 5
 
 
 def test_lookups_read_only_unseen_part_files(tmp_path, monkeypatch):

@@ -77,6 +77,28 @@ def test_local_runner_resolves_dependencies_in_any_order(spark, sf_dir, tmp_path
     assert spark.read.parquet(str(tmp_path / "pipe" / "priority_rollup")).count() == want
 
 
+def test_failed_rerun_keeps_the_previous_materialization(spark, tmp_path):
+    """A view is swapped in whole: a rerun whose flow fails while it
+    writes leaves the first materialization readable with all its rows."""
+    from pyspark.pipelines import materialized_view
+
+    def graph(value):
+        def defs():
+            @materialized_view(name="numbers")
+            def numbers():
+                return spark.range(100).withColumn("v", value)
+
+        return declare_pipeline(defs)
+
+    storage = str(tmp_path / "pipe")
+    assert run_pipeline_local(spark, graph(F.col("id") * 2), storage) == {"numbers": 100}
+    with pytest.raises(Exception, match="boom"):
+        run_pipeline_local(spark, graph(F.raise_error(F.lit("boom")).cast("long")), storage)
+    again = spark.read.parquet(str(tmp_path / "pipe" / "numbers"))
+    assert again.count() == 100
+    assert again.agg(F.sum("v")).first()[0] == 2 * sum(range(100))
+
+
 def test_cycle_raises(spark):
     from pyspark.pipelines import materialized_view
 

@@ -404,10 +404,11 @@ def test_parallel_batches_raise_at_their_deadline(spark, tmp_path):
     assert time.monotonic() - t0 < 2.5
 
 
-def test_run_batch_with_delta_reports_newly_fixed_and_broken(spark, store):
+def test_batch_delta_reports_newly_fixed_and_broken(spark, store):
     """Two runs of the same batch name: a job that fails then succeeds
-    is newly fixed; one that succeeds then fails is newly broken."""
-    from lime_etl_spark.service.runner import run_batch_with_delta
+    is newly fixed; one that succeeds then fails is newly broken. The
+    delta is built from the status and the store's previous run."""
+    from lime_etl_spark.domain.batch_delta import BatchDelta
 
     flaky_fails, stable_fails = {"on": True}, {"on": False}
 
@@ -421,6 +422,11 @@ def test_run_batch_with_delta_reports_newly_fixed_and_broken(spark, store):
             raise RuntimeError("stable kaboom")
         return JobStatus.success()
 
+    def run_with_delta():
+        status = run_batch(mk_batch(), spark, store)
+        previous = store.get_previous_batch(status.name, exclude_id=status.id)
+        return status, BatchDelta(current=status, previous=previous)
+
     def mk_batch():
         return SparkBatchSpec(
             name="delta_batch",
@@ -430,7 +436,7 @@ def test_run_batch_with_delta_reports_newly_fixed_and_broken(spark, store):
             ],
         )
 
-    first_status, first_delta = run_batch_with_delta(mk_batch(), spark, store)
+    first_status, first_delta = run_with_delta()
     # no previous run: everything broken is "newly broken"
     assert first_status.broken_jobs == {"flaky"}
     assert first_delta.previous is None
@@ -438,7 +444,7 @@ def test_run_batch_with_delta_reports_newly_fixed_and_broken(spark, store):
     assert first_delta.newly_fixed_jobs == set()
 
     flaky_fails["on"], stable_fails["on"] = False, True
-    second_status, delta = run_batch_with_delta(mk_batch(), spark, store)
+    second_status, delta = run_with_delta()
     assert second_status.broken_jobs == {"stable"}
     assert delta.previous is not None and delta.previous.id == first_status.id
     assert delta.newly_fixed_jobs == {"flaky"}

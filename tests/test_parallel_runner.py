@@ -1,6 +1,6 @@
-"""run_batch_parallel_jobs: same semantics as the sequential runner,
-with a dependency ready queue: a job starts as soon as its own
-dependencies have finished, concurrently with unrelated jobs."""
+"""run_batch with several workers: same semantics as one worker, with a
+dependency ready queue: a job starts as soon as its own dependencies
+have finished, concurrently with unrelated jobs."""
 
 from __future__ import annotations
 
@@ -69,7 +69,7 @@ def test_ready_job_does_not_wait_for_unrelated_jobs(spark, store):
             SimpleJobSpec(name="job_e", run=timed("e"), dependencies=["job_c", "job_d"]),
         ],
     )
-    result = run_batch_parallel_jobs(batch, spark, store)
+    result = run_batch(batch, spark, store, max_workers=4)
     assert result.broken_jobs == set()
     assert marks["a_end"] <= marks["c_start"] < marks["b_end"]
     assert marks["d_start"] >= marks["b_end"]
@@ -99,7 +99,7 @@ def test_independent_jobs_overlap_in_time(spark, store):
             SimpleJobSpec(name="sleep2", run=sleepy("s2")),
         ],
     )
-    result = run_batch_parallel_jobs(batch, spark, store)
+    result = run_batch(batch, spark, store, max_workers=4)
     assert result.broken_jobs == set()
     # overlap: each starts before the other finishes
     assert marks["s1_start"] < marks["s2_end"]
@@ -121,7 +121,7 @@ def test_parallel_preserves_skip_semantics(spark, store):
             ),
         ],
     )
-    result = run_batch_parallel_jobs(batch, spark, store)
+    result = run_batch(batch, spark, store, max_workers=4)
     states = {r.job_name: r.status.state for r in result.job_results}
     assert states["breaks"] == JobState.FAILED
     assert states["fine"] == JobState.SUCCEEDED
@@ -147,8 +147,8 @@ def _ledger(spark, root: str, batch_id: str) -> dict:
 
 
 def test_parallel_matches_sequential_ledger(spark, store, tmp_path):
-    """Same batch through the sequential runner, the parallel runner and
-    the parallel runner with one worker → same job states and the same
+    """Same batch with one worker, with four, and through the
+    ``run_batch_parallel_jobs`` forwarder → same job states and the same
     persisted admin rows."""
     def tests(ctx):
         return [
@@ -169,8 +169,8 @@ def test_parallel_matches_sequential_ledger(spark, store, tmp_path):
 
     runners = {
         "seq": run_batch,
-        "par": run_batch_parallel_jobs,
-        "par1": functools.partial(run_batch_parallel_jobs, max_workers=1),
+        "par": functools.partial(run_batch, max_workers=4),
+        "fwd": run_batch_parallel_jobs,
     }
     statuses, ledgers = {}, {}
     for name, runner in runners.items():
@@ -179,7 +179,7 @@ def test_parallel_matches_sequential_ledger(spark, store, tmp_path):
         ledgers[name] = _ledger(spark, root, statuses[name].id)
     seq = statuses["seq"]
     seq_states = {r.job_name: r.status.state for r in seq.job_results}
-    for name in ("par", "par1"):
+    for name in ("par", "fwd"):
         par = statuses[name]
         assert {r.job_name: r.status.state for r in par.job_results} == seq_states
         assert par.broken_jobs == seq.broken_jobs
@@ -200,7 +200,20 @@ def test_parallel_refresh_skip(spark, store):
             jobs=[SimpleJobSpec(name="jjj", run=_ok, min_seconds_between_refreshes=3600)],
         )
 
-    first = run_batch_parallel_jobs(mk("jjj"), spark, store)
+    first = run_batch(mk("jjj"), spark, store, max_workers=4)
     assert {r.status.state for r in first.job_results} == {JobState.SUCCEEDED}
-    second = run_batch_parallel_jobs(mk("jjj"), spark, store)
+    second = run_batch(mk("jjj"), spark, store, max_workers=4)
     assert {r.status.state for r in second.job_results} == {JobState.SKIPPED}
+
+
+@pytest.mark.parametrize(
+    "workers, error", [(0, ValueError), (-1, ValueError), (True, TypeError), (None, TypeError)]
+)
+def test_bad_max_workers_raises_before_any_ledger_row(spark, store, workers, error):
+    """A worker count that cannot size the pool raises before the running
+    row, so no failed batch row becomes the next run's previous batch."""
+    batch = SparkBatchSpec(name="bad_workers", jobs=[SimpleJobSpec(name="job_a", run=_ok)])
+    with pytest.raises(error):
+        run_batch_parallel_jobs(batch, spark, store, max_workers=workers)
+    assert store.row_counts()["batches"] == 0
+    assert store.get_previous_batch("bad_workers") is None
